@@ -99,7 +99,7 @@ object Bench {
     val prFp = ConnectedComponents.fingerprint64(
       pr.value.ranks.toDF().select(col("id"), round(col("rank"), 6).as("r")))
     pr.value.release()
-    // IterStats.computeMs is already the per-superstep share of batched jobs
+    // IterStats.computeMs is one superstep's job wall time
     def medIter(stats: List[Superstep.IterStats]): Double =
       median(stats.map(_.computeMs)) / 1e3
     GraphRun(

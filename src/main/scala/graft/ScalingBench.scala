@@ -113,7 +113,7 @@ object ScalingBench {
     * are separate driver JVMs, and reusing one JVM for both levels tripped
     * a Spark 4.1.2 session-transition race exactly once (a superstep plan
     * constructed in the second SparkContext captured a null session and
-    * NPE'd at execute — see GraftSqlShim.materializeObserved's guard).
+    * NPE'd at execute — see GraftSqlShim.materializeLocalCheckpointed's guard).
     * Fresh JVMs per level remove that whole state class; determinism is
     * still asserted via bit-identical cross-JVM result fingerprints.
     */

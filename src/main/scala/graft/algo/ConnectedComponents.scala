@@ -143,11 +143,9 @@ object ConnectedComponents {
       // long pk=(u<<32)|v — 16 vs 24 B of UnsafeRow per edge on the two
       // biggest per-round exchanges (same recipe as LP's packExchange;
       // bijective for ids < 2^32, so the distinct sets are identical).
-      // `graft.cc.packexchange=0` restores the pair rows (A/B hatch).
       val idB = vertices.agg(
         coalesce(min($"id"), lit(0L)), coalesce(max($"id"), lit(0L))).head()
-      val packStar = idB.getLong(0) >= 0L && idB.getLong(1) < (1L << 32) &&
-        !sys.props.get("graft.cc.packexchange").contains("0")
+      val packStar = idB.getLong(0) >= 0L && idB.getLong(1) < (1L << 32)
       def distinctEdges(df: DataFrame): DataFrame =
         if (!packStar) df.distinct()
         else df.select((shiftleft($"u", 32) + $"v").as("pk")).distinct()
@@ -206,9 +204,7 @@ object ConnectedComponents {
         // round plan references the previous state ~12× (bidir twice, both
         // star joins, the union), so IMR-over-raw-plan nests 12^depth
         // previous-round references into every plan STRING the driver
-        // renders (SparkPlanInfo/UI) — OOM after a handful of rounds. The
-        // superstep loop can't use this trick (observations must ride the
-        // persisted plan); star rounds use fingerprints, so they can.
+        // renders (SparkPlanInfo/UI) — OOM after a handful of rounds.
         val ssB = GraftSqlShim.truncatedView(GraftSqlShim.bind(loopSession, ss))
           .persist(StorageLevel.MEMORY_AND_DISK)
         val newFp = fingerprintAndCount(ssB) // materializes the persisted set
@@ -218,7 +214,7 @@ object ConnectedComponents {
         // input twice → untruncated plans double per round); a real
         // localCheckpoint every K rounds bounds the RDD DAG
         val (view, newBacking) =
-          if ((rounds + 1 - rounds0) % cfg.localCheckpointEvery == 0) {
+          if ((rounds + 1 - rounds0) % StarLocalCheckpointEvery == 0) {
             val lc = ssB.localCheckpoint(eager = true)
             ssB.unpersist(blocking = false)
             lc.persist(StorageLevel.MEMORY_AND_DISK)
@@ -265,6 +261,9 @@ object ConnectedComponents {
       spark.sparkContext.removeSparkListener(listener)
     }
   }
+
+  /** Star rounds between real `localCheckpoint`s of the round state. */
+  private val StarLocalCheckpointEvery = 8
 
   private def fingerprintAndCount(df: DataFrame): (Long, Long) = {
     val r = df.agg(bit_xor(xxhash64(df.columns.map(col): _*)), count(lit(1))).head()

@@ -126,12 +126,10 @@ object LabelPropagation {
     // loop's hot path, plus a narrower cached adjacency. Skipped under
     // salting (the salted table is built/persisted inside SkewJoin with w;
     // hub-skewed graphs keep the weighted vote). The max(w) guard bounds
-    // the per-row array_repeat. `graft.lp.keepw=1` forces the weighted
-    // shape (A/B probe hatch).
+    // the per-row array_repeat.
     val unitW = saltPlan.isEmpty &&
       eAgg.getLong(0) <= eAgg.getLong(1) + eAgg.getLong(1) / 100 &&
-      eAgg.getLong(2) <= 4096L &&
-      !sys.props.get("graft.lp.keepw").contains("1")
+      eAgg.getLong(2) <= 4096L
 
     // tiny vertex states run the whole loop at a narrower shuffle width
     // (Superstep.autoWidth — 8-way measured 2.3× faster at 2K vertices);
@@ -227,8 +225,7 @@ object LabelPropagation {
     // HashAggregate cannot hold, so Spark silently planned a SortAggregate
     // that re-SORTED the per-partition vote stream every superstep (caught
     // in the r5 plan audit together with the SMJ degradation — see
-    // Superstep.shj). Identical integer argmax → bit-identical labels;
-    // `graft.lp.structvote=1` forces the struct shape (A/B probe hatch).
+    // Superstep.shj). Identical integer argmax → bit-identical labels.
     val labelBounds: (Long, Long) =
       if (unsupervised) numNodes match {
         case Some(n) => (0L, n - 1)
@@ -242,8 +239,7 @@ object LabelPropagation {
         (r.getLong(0), r.getLong(1))
       }
     val packedVote = labelBounds._1 >= 0L && labelBounds._2 < (1L << 32) &&
-      edgeCount < (1L << 31) &&
-      !sys.props.get("graft.lp.structvote").contains("1")
+      edgeCount < (1L << 31)
     // Packed EXCHANGE row (r5): when both the voting src ids and the label
     // domain fit unsigned 32-bit lanes, the gather output ships ONE long
     // pk = (src<<32)|label instead of the (src,label) pair — a 16-byte
@@ -255,18 +251,15 @@ object LabelPropagation {
     // `src` lets alias-aware output partitioning rewrite the exchange's
     // HashPartitioning(shiftrightunsigned(pk,32)) to HashPartitioning(src), so
     // both vote aggregation levels AND the apply join stay exchange-free
-    // (plan-verified: graft.tools.PackPlanProbe — identical exchange count,
-    // all four HashAggregates + the apply SHJ in one post-shuffle codegen
-    // stage). Murmur3 of shiftrightunsigned(pk,32) equals Murmur3 of src value-wise,
+    // (plan-verified, BENCH.md §16 — identical exchange count, all four
+    // HashAggregates + the apply SHJ in one post-shuffle codegen stage).
+    // Murmur3 of shiftrightunsigned(pk,32) equals Murmur3 of src value-wise,
     // so co-partitioning with the cached state holds numerically too.
     // Applies to BOTH vote shapes: the unit-multiplicity row packs to just
     // (pk) — 16 vs 24 B — and the weighted row (salted hub-skew graphs,
     // the 100 TB web shape, or multiplicity-heavy tables) to (pk, w) —
-    // 24 vs 32 B. `graft.lp.packexchange=0` restores the pair rows
-    // (A/B probe hatch).
-    val packExchange = packedVote &&
-      srcMin >= 0L && srcMax < (1L << 32) &&
-      !sys.props.get("graft.lp.packexchange").contains("0")
+    // 24 vs 32 B.
+    val packExchange = packedVote && srcMin >= 0L && srcMax < (1L << 32)
     // enter the loop at the loop width (see PageRank.init — a session-width
     // init otherwise forces a contrib re-exchange every superstep)
     val init = loopWidth.fold(init0)(w => init0.repartition(w, $"id"))
@@ -357,20 +350,8 @@ object LabelPropagation {
       ConnectedComponents.fingerprint64(edgeRows) ^
         ConnectedComponents.fingerprint64(dedupedSeeds.toDF())
     }
-    // superstep batching is forced OFF for LP: its step references the
-    // state in two structurally DIFFERENT subtrees (gather's filtered
-    // projection vs the apply join), and the vote's repartition + chained
-    // aggregates defeat ReuseExchange when steps compose — a batched LP
-    // job re-executes each prior step's gather/vote up to 3× (measured:
-    // 4-step batch 29.7 s vs 4 × 2.4 s unbatched at 100k nodes), while LP
-    // converges in ≤ ~10 supersteps at every size measured, so there is
-    // almost no fixed cost to amortize. PageRank batching was ALSO measured
-    // a regression (2.3×: 101.8 s vs 44.7 s at 100k nodes × 75 steps —
-    // ReuseExchange never collapses the duplicated state subtrees because
-    // self-join dedup remints exprIds), so Superstep.DefaultBatchK = 1
-    // everywhere; see BENCH.md §2.
     val res = Superstep.loopResumable(
-      init, step, cfg.copy(batchK = 1), algo = "lp", inputFingerprint = inputFp,
+      init, step, cfg, algo = "lp", inputFingerprint = inputFp,
       shuffleWidth = loopWidth)
 
     val labelsOut = res.state.filter($"label".isNotNull)

@@ -3,7 +3,6 @@ package graft.algo
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.fs.Path
 import java.nio.charset.StandardCharsets
 
@@ -21,27 +20,18 @@ import java.nio.charset.StandardCharsets
   * avoidable fixed cost here divides directly into scaling efficiency):
   *  - exactly ONE job per superstep, and the cheapest possible one
   *    ([[org.apache.spark.sql.GraftSqlShim.materializeLocalCheckpointed]],
-  *    the r5 default "ckpt" leaf): the step plan executes once, rows are
+  *    the "ckpt" state leaf): the step plan executes once, rows are
   *    defensively copied once and stored as deserialized MEMORY_AND_DISK
   *    blocks, `localCheckpoint` is marked BEFORE the job so the job's own
   *    blocks become the checkpoint — plan-lineage AND RDD-lineage are
   *    truncated every superstep at zero extra cost, the state is re-rooted
   *    on a flat `LogicalRDD` over stable rows (no columnar encode at
   *    materialization, no decode on the two per-superstep scans), and
-  *    every per-step CollectMetrics accumulator fires in the same job and
-  *    is read SYNCHRONOUSLY. Measured vs the r4 IMR flow (BENCH.md §13):
-  *    per-superstep medians 114-145 vs 166-186 ms at the 2K-vertex /
-  *    600K-edge derived graph, PR 411-469 vs 499-525 ms at 100K
-  *    vertices, LP pairwise faster in both drift windows at 1M-4M;
-  *  - the r4 flow remains as `graft.state.leaf=imr` (columnar
-  *    `InMemoryRelation` leaf via
-  *    [[org.apache.spark.sql.GraftSqlShim.cachedView]], a separate
-  *    `Dataset.localCheckpoint` job every `localCheckpointEvery` steps —
-  *    it pays a columnar encode + two decodes per superstep, and its
-  *    driver/task costs GROW between truncations: build 42→372 ms and
-  *    exec 318→1038 ms across one 8-step window at 100K vertices) and
-  *    `=rdd` (flat view with per-scan defensive copy) — both probe
-  *    hatches, each the measured best of its round;
+  *    the step's CollectMetrics accumulator fires in the same job and is
+  *    read SYNCHRONOUSLY. Measured vs the r4 columnar-IMR flow (BENCH.md
+  *    §13): per-superstep medians 114-145 vs 166-186 ms at the
+  *    2K-vertex / 600K-edge derived graph, PR 411-469 vs 499-525 ms at
+  *    100K vertices, LP pairwise faster in both drift windows at 1M-4M;
   *  - loop-specific SQL confs (AQE off — its runtime coalescing breaks the
   *    hash-partitioning match between the persisted edge side and the
   *    evolving state side; shuffled-hash over sort-merge — per-superstep
@@ -51,7 +41,7 @@ import java.nio.charset.StandardCharsets
   *
   * Per-iteration phase windows (reference evidence style,
   * `runtime_metrics.py:48-118`): a SparkListener attributes the superstep
-  * job's stages to gather / apply / collect windows with wall time, summed
+  * job's stages to gather / apply windows with wall time, summed
   * task time and shuffle bytes; they land in [[IterStats.phases]] and the
   * checkpoint manifest.
   *
@@ -73,11 +63,9 @@ object Superstep {
       shuffleReadBytes: Long,
       shuffleWriteBytes: Long)
 
-  /** Per-iteration phase metrics (reference style: `runtime_metrics.py:81-183`).
-    * One entry per superstep even under batching: `changed`/`rows` come from
-    * the step's own observation, `computeMs` is the superstep's equal share
-    * of its job, and `steps` records how many supersteps shared that job
-    * (phases + checkpointMs ride the batch's last entry).
+  /** Per-iteration phase metrics (reference style: `runtime_metrics.py:81-183`):
+    * `changed`/`rows` come from the superstep's own observation, `computeMs`
+    * is its job's wall time, `checkpointMs` its durable-checkpoint write.
     */
   final case class IterStats(
       iteration: Int,
@@ -85,8 +73,7 @@ object Superstep {
       rows: Long,
       computeMs: Long,
       checkpointMs: Long,
-      phases: List[PhaseWindow] = Nil,
-      steps: Int = 1)
+      phases: List[PhaseWindow] = Nil)
 
   final case class LoopResult(
       state: DataFrame,
@@ -122,12 +109,9 @@ object Superstep {
     * always the per-partition vertex state / message slice — bounded by
     * |V|/shuffle-partitions, the same per-worker-memory assumption the
     * reference's dense label arrays make globally; size partitions
-    * accordingly at scale. `graft.loop.legacyplan=1` restores the unhinted
-    * planner choice (A/B probe hatch).
+    * accordingly at scale.
     */
-  def shj(df: DataFrame): DataFrame =
-    if (sys.props.get("graft.loop.legacyplan").contains("1")) df
-    else df.hint("shuffle_hash")
+  def shj(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
   /** The thread-local SparkContext property that tags every job a loop
     * submits with its owning loop's id (local properties are inherited by
@@ -170,24 +154,17 @@ object Superstep {
       buf.synchronized { buf += ((si.stageId, w)) }
     }
     /** Stages completed since the last drain, in stage order, phase-named.
-      * `steps` = supersteps materialized by the drained job; the canonical
-      * unbatched job shape is gather (map-side scatter + partial agg) then
-      * apply (final agg + apply join + state materialization — the toRdd
-      * consume rides this stage; there is no separate count/collect stage
-      * since r4). The legacy 2·steps+1 template (trailing single-task
-      * count stage) is kept for any caller still materializing via an
-      * aggregate action. Batched jobs rarely match either template (their
-      * duplicated subtrees re-execute, see [[DefaultBatchK]]) and fall
-      * back to positional stage names.
+      * The canonical superstep job is gather (map-side scatter + partial
+      * agg) then apply (final agg + apply join + state materialization —
+      * the toRdd consume rides this stage; there is no separate
+      * count/collect stage). Any other shape falls back to positional
+      * stage names.
       */
-    def drain(steps: Int = 1): List[PhaseWindow] = {
+    def drain(): List[PhaseWindow] = {
       val raw = buf.synchronized { val r = buf.sortBy(_._1).toList; buf.clear(); r }
       val names =
-        if (raw.size == 2 * steps)
-          (0 until 2 * steps).map(i => if (i % 2 == 0) "gather" else "apply").toList
-        else if (raw.size == 2 * steps + 1)
-          (0 until 2 * steps).map(i => if (i % 2 == 0) "gather" else "apply").toList :+ "collect"
-        else (0 until raw.size).map(i => s"stage$i").toList
+        if (raw.size == 2) List("gather", "apply")
+        else raw.indices.map(i => s"stage$i").toList
       raw.zip(names).map { case ((_, w), n) => w.copy(phase = n) }
     }
     /** Drain with positional `prefix0..prefixN` names (loops whose job
@@ -215,47 +192,12 @@ object Superstep {
     if (numKeys <= 16384 && sessionWidth > 8) Some(8) else None
   }
 
-  /** Supersteps composed into one materializing job once the frontier is
-    * at most this many changed rows (fixed driver cost per job — plan
-    * build, scheduling, observation round-trip — dominates real work
-    * there). Bounded so large-frontier iterations, whose per-reference
-    * post-shuffle re-execution cost is O(|state|), never batch.
-    */
-  val DefaultBatchFrontierMax: Long = 262144L
-
-  /** Supersteps per batched job. OFF (1) by default: measured on both the
-    * LP and PageRank step shapes, the composed job re-executes duplicated
-    * state references instead of reusing them (LP 4-step batch = 3× the
-    * unbatched cost; PR = 2.3× min-of-reps, 44.7 s vs 101.8 s at 100k
-    * nodes × 75 supersteps) — ReuseExchange does not collapse the
-    * duplicated subtrees in practice even with an InMemoryRelation state
-    * leaf. The machinery stays (correctness is proven equal by
-    * PageRankSpec's bit-identical batched-vs-serial test) for callers
-    * whose step shape does compose.
-    */
-  val DefaultBatchK: Int = 1
-
-
   /** Run `step` from `init` until the number of changed rows is ≤ `threshold`
     * or `maxIter` supersteps have completed. `startIter` > 0 resumes
     * counting from a checkpoint.
     *
     * Convergence mirrors `should_continue` (`ow-lp/src/lib.rs:424-426`):
     * iterate while iterations < maxIter and changed > threshold.
-    *
-    * Superstep batching: under the exact-fixpoint rule (threshold 0, no
-    * ratio rule) any superstep past convergence is a no-op — the frontier
-    * is empty, messages vanish and every `_chg` is false — so once the
-    * frontier drops to ≤ `batchFrontierMax` changed rows, `batchK`
-    * supersteps share ONE job (one plan build, one action) and
-    * per-superstep driver fixed cost divides by `batchK`. Each composed
-    * step carries its own observation, so the loop still detects the
-    * EARLIEST converged superstep: the batch tail past it is executed
-    * no-ops, and both the reported iteration count and the final state
-    * match the unbatched run exactly. Batching never engages for
-    * threshold/ratio rules (a no-op tail is only guaranteed under the
-    * exact fixpoint rule) and never crosses a checkpoint boundary or
-    * `maxIter`.
     *
     * `inputFingerprint`: recorded in every checkpoint manifest; resume
     * refuses a manifest whose fingerprint differs (see [[resumeOrInit]]).
@@ -267,18 +209,12 @@ object Superstep {
       threshold: Long = 0L,
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5,
-      localCheckpointEvery: Int = 8,
       startIter: Int = 0,
       algo: String = "superstep",
       ratioThreshold: Option[Double] = None,
-      batchK: Int = DefaultBatchK,
-      batchFrontierMax: Long = DefaultBatchFrontierMax,
       inputFingerprint: Option[Long] = None,
       shuffleWidth: Option[Int] = None): LoopResult = {
     require(checkpointEvery > 0, s"checkpointEvery must be positive, got $checkpointEvery")
-    require(localCheckpointEvery > 0,
-      s"localCheckpointEvery must be positive, got $localCheckpointEvery")
-    require(batchK > 0, s"batchK must be positive, got $batchK")
 
     val session = SparkSession.active
     val loopSession = GraftSqlShim.sessionWithConfs(session,
@@ -306,23 +242,11 @@ object Superstep {
     session.sparkContext.addSparkListener(listener)
     session.sparkContext.setLocalProperty(LoopIdProperty, loopId)
 
-    // state-leaf mode (BENCH.md §9/§13, measured): "ckpt" (default) fuses
-    // materialize + defensive copy + localCheckpoint into the ONE superstep
-    // job and re-roots the state on a flat LogicalRDD over the checkpointed
-    // rows ([[GraftSqlShim.materializeLocalCheckpointed]]); "imr" persists
-    // the state as a columnar InMemoryRelation with a separate
-    // Dataset.localCheckpoint job every `localCheckpointEvery` steps; "rdd"
-    // is imr's flat-view variant (per-scan defensive copy). The probe
-    // hatches exist because each was the measured best of its round.
-    val leafMode = sys.props.get("graft.state.leaf")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_LEAF")).getOrElse("ckpt")
-    val ckptLeaf = leafMode == "ckpt"
     // initial state: materialized once, lineage truncated
     var state = GraftSqlShim.bind(loopSession, init).localCheckpoint(eager = true)
     GraftSqlShim.waitListenerBus(session)
     listener.drain() // init stages are not superstep phases
-    // frees the blocks backing `state` (a truncated view is only a window
-    // onto its backing iteration's cached/checkpointed blocks)
+    // frees the blocks backing `state`
     var releaseBacking: () => Unit = {
       val b = state; () => b.unpersist(blocking = false)
     }
@@ -331,154 +255,70 @@ object Superstep {
     var stats = List.empty[IterStats]
 
     val loopTimers = sys.env.contains("SPARK_GRAFT_LOOP_TIMERS")
-    // exact-fixpoint rule ⇒ oversteps are no-ops ⇒ batching is sound
-    val mayBatch = threshold == 0L && ratioThreshold.isEmpty
-    var lastChanged = Long.MaxValue // frontier size unknown before step 1
     try while (iter < maxIter && !converged) {
       val t0 = System.nanoTime()
-      val k0 = if (mayBatch && lastChanged <= batchFrontierMax) batchK else 1
-      val k1 = math.min(k0, maxIter - iter)
-      // never batch across a durable-checkpoint boundary
-      val k = checkpointDir match {
-        case Some(_) => math.min(k1, (iter / checkpointEvery + 1) * checkpointEvery - iter)
-        case None => k1
-      }
-      val doneIter = iter + k
       // changed/row counts ride the materializing job via observe()
-      // (accumulator-backed) — no separate aggregation job per superstep,
-      // which at converged-frontier sizes costs as much as the superstep.
-      // A batched job carries ONE CollectMetrics node per composed step
-      // (pass-through: partitioning/ordering preserved, no stage break),
-      // so per-superstep changed counts — and the exact convergence
-      // iteration — survive batching.
-      val obsNames = (iter until doneIter).map(i => s"superstep_${i + 1}")
-      var composed = state
-      for (i <- iter until doneIter) {
-        composed = GraftSqlShim.bind(loopSession, step(composed, i))
-          .observe(obsNames(i - iter), count(lit(1)).as("rows"),
-            sum(when(col("_chg"), 1L).otherwise(0L)).as("changed"))
-      }
-      // ckpt mode materializes into checkpointed row blocks instead — no
-      // cache-manager registration, no columnar encode/decode
-      val next = if (ckptLeaf) composed
-        else composed.persist(StorageLevel.MEMORY_AND_DISK)
+      // (accumulator-backed, pass-through: partitioning/ordering preserved,
+      // no stage break) — no separate aggregation job per superstep, which
+      // at converged-frontier sizes costs as much as the superstep
+      val obsName = s"superstep_${iter + 1}"
+      val next = GraftSqlShim.bind(loopSession, step(state, iter))
+        .observe(obsName, count(lit(1)).as("rows"),
+          sum(when(col("_chg"), 1L).otherwise(0L)).as("changed"))
       val tBuilt = System.nanoTime()
       // force optimization + physical planning + codegen eagerly so the
       // timer split can attribute plan time separately from job execution
-      // (count() reuses the lazily-cached executedPlan, so this moves cost,
+      // (the job reuses the lazily-cached executedPlan, so this moves cost,
       // never duplicates it)
       if (loopTimers) next.queryExecution.executedPlan
       val tPlanned = System.nanoTime()
-      if (doneIter >= 3 && iter < 3 && sys.env.contains("SPARK_GRAFT_EXPLAIN_STEP"))
+      if (iter == 2 && sys.env.contains("SPARK_GRAFT_EXPLAIN_STEP"))
         next.explain("formatted") // debug: dump one steady-state superstep plan
       // tag the materializing job so driver logs / the UI attribute every
       // stage to its superstep (and stray jobs stand out)
-      session.sparkContext.setJobDescription(
-        s"$algo superstep ${iter + 1}${if (k > 1) s"-$doneIter" else ""}")
-      // THE one job: consume toRdd (caches state, fires every CollectMetrics
-      // accumulator) and read the per-step metrics synchronously — no
-      // count() Aggregate plan, no extra single-task final stage, no
-      // Observation listener-bus round-trip (measured ~0.1 s/superstep of
-      // job scaffolding at converged-frontier sizes, BENCH.md §9)
-      val ckptOut = if (ckptLeaf)
-        Some(GraftSqlShim.materializeLocalCheckpointed(next)) else None
-      val observed = ckptOut.map(_._3)
-        .getOrElse(GraftSqlShim.materializeObserved(next))
+      session.sparkContext.setJobDescription(s"$algo superstep ${iter + 1}")
+      // THE one job: materializes + localCheckpoints the state, fires the
+      // CollectMetrics accumulator and reads it synchronously — no count()
+      // Aggregate plan, no extra single-task final stage, no Observation
+      // listener-bus round-trip (measured ~0.1 s/superstep of job
+      // scaffolding at converged-frontier sizes, BENCH.md §9)
+      val (view, newRelease, observed) = GraftSqlShim.materializeLocalCheckpointed(next)
       session.sparkContext.setJobDescription(null)
       val tCounted = System.nanoTime()
-      // per-step (changed, rows), all fired by the single job above
-      val perStep: Seq[(Long, Long)] = obsNames.map { n =>
-        val m = observed.getOrElse(n, throw new IllegalStateException(
-          s"observed metrics for $n missing from the materializing job"))
-        val chg = m.getAs[Any]("changed") match {
-          case null => 0L
-          case v => v.asInstanceOf[Long]
-        }
-        (chg, m.getAs[Any]("rows").asInstanceOf[Long])
+      val m = observed.getOrElse(obsName, throw new IllegalStateException(
+        s"observed metrics for $obsName missing from the materializing job"))
+      val changed = m.getAs[Any]("changed") match {
+        case null => 0L
+        case v => v.asInstanceOf[Long]
       }
+      val rows = m.getAs[Any]("rows").asInstanceOf[Long]
       if (loopTimers) {
         val tObs = System.nanoTime()
-        System.err.println(f"[loop] iter=$doneIter k=$k build=${(tBuilt - t0) / 1e6}%.0fms " +
+        System.err.println(f"[loop] iter=${iter + 1} build=${(tBuilt - t0) / 1e6}%.0fms " +
           f"plan=${(tPlanned - tBuilt) / 1e6}%.0fms " +
           f"exec=${(tCounted - tPlanned) / 1e6}%.0fms obsGet=${(tObs - tCounted) / 1e6}%.0fms " +
-          s"changed=${perStep.map(_._1).mkString(",")}")
+          s"changed=$changed")
       }
       GraftSqlShim.waitListenerBus(session)
-      val phases = listener.drain(k)
-
-      // logical lineage truncation every step is free; the LEAF choice is
-      // measured, not aesthetic (BENCH.md §9):
-      //  - the InMemoryRelation leaf (default) scans the cache without the
-      //    per-row defensive copy that a LogicalRDD view must pay
-      //    (truncatedView maps _.copy() — load-bearing, the state feeds
-      //    hash-join builds that buffer rows), and keeps ReuseExchange
-      //    working inside batched plans. Interleaved same-JVM A/B at 4M
-      //    nodes: LP median 2.4-2.8 s/iter (imr) vs 2.9-4.5 s (rdd leaf) —
-      //    the copy is real money once the state is millions of rows;
-      //  - the flat LogicalRDD leaf avoids the IMR plan-STRING growth
-      //    (an IMR leaf prints its cachedPlan via innerChildren, which
-      //    embeds the previous IMR — 2× per superstep, exponential between
-      //    localCheckpoints) and at 2K-vertex graphs measured faster in
-      //    one probe and slower in another (±10%, host-noise bound).
-      // A real localCheckpoint every K steps stays mandatory either way:
-      // the RDD DAG rides along in every task closure and a 75-deep chain
-      // overflows the task-deserialization stack (measured), and it also
-      // resets the IMR string growth.
-      // graft.state.leaf / SPARK_GRAFT_STATE_LEAF selects the mode; the
-      // default "ckpt" leaf never reaches this block's checkpoint branch —
-      // its materializing job already stored + truncated the state.
-      val (view, newRelease): (DataFrame, () => Unit) = ckptOut match {
-        case Some((v, rel, _)) => (v, rel)
-        case None =>
-          val rddLeaf = leafMode == "rdd"
-          val tookLocalCheckpoint =
-            (doneIter - startIter) % localCheckpointEvery < k
-          val (v, nb) =
-            if (tookLocalCheckpoint) {
-              val lc = next.localCheckpoint(eager = true)
-              next.unpersist(blocking = false)
-              if (rddLeaf) (lc, lc)
-              else {
-                lc.persist(StorageLevel.MEMORY_AND_DISK)
-                (GraftSqlShim.cachedView(lc), lc)
-              }
-            } else if (rddLeaf) (GraftSqlShim.truncatedView(next), next)
-            else (GraftSqlShim.cachedView(next), next)
-          if (tookLocalCheckpoint) {
-            // only the localCheckpoint path runs a job whose stages must be
-            // discarded; cachedView/truncatedView spawn none, so the common
-            // iteration skips this second listener-bus barrier entirely
-            GraftSqlShim.waitListenerBus(session)
-            listener.drain()
-          }
-          (v, () => nb.unpersist(blocking = false))
-      }
+      val phases = listener.drain()
       if (loopTimers)
-        System.err.println(f"[loop] iter=$doneIter total=${(System.nanoTime() - t0) / 1e6}%.0fms")
+        System.err.println(f"[loop] iter=${iter + 1} total=${(System.nanoTime() - t0) / 1e6}%.0fms")
       val computeMs = (System.nanoTime() - t0) / 1000000L
+      iter += 1
 
       // the FULL convergence decision (absolute count, `ow-lp/src/lib.rs:
       // 424-426`, OR the lpst class-API change-ratio rule, `lpst/src/lib
-      // .rs:484-496`) is computed once per SUPERSTEP and drives loop exit,
-      // the checkpoint-write gate and the manifest's converged field alike.
-      // In a batched job the loop stops at the EARLIEST converged step —
-      // the batch tail past it consists of executed-but-uncounted no-ops,
-      // so the reported iteration count and final state both match the
-      // unbatched run exactly.
-      def decide(chg: Long, rws: Long): Boolean = chg <= threshold ||
-        ratioThreshold.exists(r => rws > 0 && chg.toDouble / rws <= r)
-      val firstConv = perStep.indexWhere { case (c, r) => decide(c, r) }
-      converged = firstConv >= 0
-      val effK = if (converged) firstConv + 1 else k
-      val effIter = iter + effK
-      val (chgEff, rowsEff) = perStep(effK - 1)
+      // .rs:484-496`) drives loop exit, the checkpoint-write gate and the
+      // manifest's converged field alike
+      converged = changed <= threshold ||
+        ratioThreshold.exists(r => rows > 0 && changed.toDouble / rows <= r)
 
       val t1 = System.nanoTime()
       checkpointDir.foreach { dir =>
         // state is checkpointed WITH its _chg column: frontier algorithms
         // need it to resume with the correct active set
-        if (converged || effIter % checkpointEvery == 0 || effIter >= maxIter) {
-          writeCheckpoint(dir, algo, effIter, chgEff, rowsEff, view, converged,
+        if (converged || iter % checkpointEvery == 0 || iter >= maxIter) {
+          writeCheckpoint(dir, algo, iter, changed, rows, view, converged,
             threshold, phases, inputFingerprint)
           // the parquet write + per-partition count are their own jobs:
           // drain their stages so the NEXT iteration's phase windows stay
@@ -492,20 +332,7 @@ object Superstep {
       releaseBacking()
       state = view
       releaseBacking = newRelease
-      iter = effIter
-      lastChanged = chgEff
-      // one IterStats per counted superstep: exact per-step changed/rows
-      // from its observation; computeMs is the per-step share of the
-      // (possibly batched) job; `steps` records the job's batch width;
-      // job-level phases + checkpoint time ride the batch's last entry
-      // divide by effK (not k) so per-step computeMs sums to the job's wall
-      // time even when convergence truncates the batch mid-job
-      for (j <- 0 until effK) {
-        val (c, r) = perStep(j)
-        val last = j == effK - 1
-        stats ::= IterStats(iter - effK + j + 1, c, r, computeMs / effK,
-          if (last) checkpointMs else 0L, if (last) phases else Nil, k)
-      }
+      stats ::= IterStats(iter, changed, rows, computeMs, checkpointMs, phases)
     } finally {
       session.sparkContext.setLocalProperty(LoopIdProperty, null)
       session.sparkContext.removeSparkListener(listener)
@@ -534,10 +361,8 @@ object Superstep {
     cfg.checkpointDir match {
       case None =>
         loop(init, step, cfg.maxIter, cfg.convergenceThreshold,
-          None, cfg.checkpointEvery, cfg.localCheckpointEvery, algo = algo,
-          ratioThreshold = cfg.convergenceRatio,
-          batchK = cfg.batchK, batchFrontierMax = cfg.batchFrontierMax,
-          shuffleWidth = shuffleWidth)
+          None, cfg.checkpointEvery, algo = algo,
+          ratioThreshold = cfg.convergenceRatio, shuffleWidth = shuffleWidth)
       case Some(dir) =>
         val (state, doneIter, converged) = {
           val spark = SparkSession.active
@@ -545,9 +370,8 @@ object Superstep {
         }
         if (converged) LoopResult(state.drop("_chg"), 0, converged = true, Nil)
         else loop(state, step, cfg.maxIter, cfg.convergenceThreshold,
-          Some(dir), cfg.checkpointEvery, cfg.localCheckpointEvery,
+          Some(dir), cfg.checkpointEvery,
           startIter = doneIter, algo = algo, ratioThreshold = cfg.convergenceRatio,
-          batchK = cfg.batchK, batchFrontierMax = cfg.batchFrontierMax,
           inputFingerprint = inputFingerprint, shuffleWidth = shuffleWidth)
     }
   }

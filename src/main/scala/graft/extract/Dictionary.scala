@@ -43,10 +43,13 @@ object Dictionary {
       acc + counts.getOrElse(p, 0L)
     }.toArray
     val bOffsets = spark.sparkContext.broadcast(offsets)
+    // materialized BEFORE `sorted` is released: recomputing `sorted` would
+    // re-sample the range bounds, so its partitions would no longer match
+    // `offsets` and ids would come out duplicated and not dense
     val dict = sorted.mapPartitions { it =>
       val base = bOffsets.value(TaskContext.getPartitionId())
       it.zipWithIndex.map { case (url, i) => UrlId(url, base + i) }
-    }
+    }.localCheckpoint(eager = true)
     sorted.unpersist(blocking = false)
     dict
   }

@@ -94,7 +94,6 @@ object model {
       tolerance: Double = 1e-6,
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5,
-      localCheckpointEvery: Int = 8,
       // hub-skew salting for the superstep gather join (graph/SkewJoin):
       // keys with more than hubDegreeThreshold edge rows are split into
       // salted partitions. -1 (default) = AUTO: one cheap degree scan at
@@ -103,14 +102,5 @@ object model {
       // and zero overhead on uniform ones. 0/1 disables; k > 1 forces that
       // salt factor.
       hubSaltK: Int = -1,
-      hubDegreeThreshold: Long = 2000000L,
-      // small-frontier superstep batching (see Superstep.loop): compose up
-      // to batchK supersteps into one job once the frontier is at most
-      // batchFrontierMax changed rows. Engages only under the exact
-      // fixpoint rule (threshold 0, no ratio), where oversteps are no-ops.
-      // OFF by default (1): measured, composition re-executes duplicated
-      // state references on both the LP and PR step shapes (2-3× the
-      // unbatched cost) — see Superstep.DefaultBatchK.
-      batchK: Int = graft.algo.Superstep.DefaultBatchK,
-      batchFrontierMax: Long = 262144L)
+      hubDegreeThreshold: Long = 2000000L)
 }

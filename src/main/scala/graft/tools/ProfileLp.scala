@@ -48,8 +48,6 @@ object ProfileLp {
       spark.stop()
       return
     }
-    val cfg = graft.model.RunConfig(
-      batchK = sys.env.getOrElse("SPARK_GRAFT_BATCHK", "4").toInt)
     val prOnly = sys.env.contains("SPARK_GRAFT_PR_ONLY")
     val t0 = System.nanoTime()
     val lp = if (prOnly) null else LabelPropagation.run(edges, seeds)
@@ -57,16 +55,16 @@ object ProfileLp {
     if (!prOnly) {
     println(s"LP total ${f"$lpSec%.2f"}s iters=${lp.iterations}")
     lp.stats.foreach(s => println(
-      s"  iter=${s.iteration} steps=${s.steps} changed=${s.changed} rows=${s.rows} " +
+      s"  iter=${s.iteration} changed=${s.changed} rows=${s.rows} " +
       s"computeMs=${s.computeMs} checkpointMs=${s.checkpointMs} " +
       s"phases=${s.phases.map(p => s"${p.phase}:${p.wallMs}ms/task${p.taskTimeMs}ms/r${p.shuffleReadBytes}/w${p.shuffleWriteBytes}").mkString(",")}"))
     }
     val t1 = System.nanoTime()
-    val pr = PageRank.run(edges, cfg = cfg)
+    val pr = PageRank.run(edges)
     val prSec = (System.nanoTime() - t1) / 1e9
     println(s"PR total ${f"$prSec%.2f"}s iters=${pr.iterations}")
     pr.stats.take(8).foreach(s => println(
-      s"  iter=${s.iteration} steps=${s.steps} changed=${s.changed} rows=${s.rows} " +
+      s"  iter=${s.iteration} changed=${s.changed} rows=${s.rows} " +
       s"computeMs=${s.computeMs} " +
       s"phases=${s.phases.map(p => s"${p.phase}:${p.wallMs}ms/task${p.taskTimeMs}ms/r${p.shuffleReadBytes}/w${p.shuffleWriteBytes}").mkString(",")}"))
     spark.stop()

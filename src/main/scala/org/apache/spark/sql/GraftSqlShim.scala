@@ -12,7 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *    the user's shared session conf
   *  - truncating a materialized DataFrame's logical plan to a flat
   *    `LogicalRDD` without the extra materialization job that
-  *    `localCheckpoint(eager = true)` costs.
+  *    `localCheckpoint(eager = true)` costs
+  *  - materializing superstep state, its local checkpoint and its
+  *    observed metrics in one job.
   */
 object GraftSqlShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -60,16 +62,15 @@ object GraftSqlShim {
     * a persisted `df` — the same node `CacheManager.useCachedData` would
     * substitute, so execution scans the cache directly.
     *
-    * Preferred over [[truncatedView]] for iterative loop state: a
-    * `LogicalRDD` leaf breaks `ReuseExchange` for any plan that references
-    * the state twice (self-join deduplication renames the leaf's exprIds,
-    * and `RDDScanExec`'s canonicalization does not normalize its
+    * The star-CC round state's leaf: every round references its state
+    * ~12 times, and a `LogicalRDD` leaf breaks `ReuseExchange` for such
+    * plans (self-join deduplication renames the leaf's exprIds, and
+    * `RDDScanExec`'s canonicalization does not normalize its
     * partitioning/ordering fields, so the renamed twins never compare
-    * equal) — which makes batched multi-superstep plans re-execute every
-    * duplicated subtree. An `InMemoryRelation` leaf canonicalizes
-    * correctly, keeps the cached plan's partitioning, and costs no
-    * materialization job. Falls back to [[truncatedView]] when `df` is not
-    * registered in the cache manager.
+    * equal). An `InMemoryRelation` leaf canonicalizes correctly, keeps the
+    * cached plan's partitioning, and costs no materialization job. Falls
+    * back to [[truncatedView]] when `df` is not registered in the cache
+    * manager.
     */
   def cachedView(df: DataFrame): DataFrame = {
     val cdf = df.asInstanceOf[classic.DataFrame]
@@ -85,64 +86,26 @@ object GraftSqlShim {
     }
   }
 
-  /** Materialize `df` (typically persisted loop state) with the CHEAPEST
-    * possible job — consume its `toRdd` iterators under a SQL execution id
-    * — and return every `observe()` metric in its plan, read SYNCHRONOUSLY
-    * from the CollectMetrics accumulators (merged driver-side before the
-    * job returns). Replaces `df.count()` + [[org.apache.spark.sql.Observation]]
-    * in the superstep loop: count() plans an extra Aggregate (one more
-    * single-task stage per superstep) and Observation completes on the
-    * listener BUS (an async round-trip per superstep); this does neither.
-    */
-  def materializeObserved(df: DataFrame): Map[String, Row] = {
-    val cdf = df.asInstanceOf[classic.DataFrame]
-    val qe = guardedQueryExecution(cdf)
-    // escape hatch for interleaved A/B probes: materialize via count()
-    // (the pre-r4 action — plans an extra Aggregate + one single-task
-    // stage) instead of the toRdd consume. Measured equivalent at 100K
-    // vertices and ~12% slower at 2K (PrActionProbe, BENCH.md §10) — the
-    // toRdd default wins or ties at every size. The sync accumulator read
-    // below works for either action: both trigger the same
-    // InMemoryRelation cachedPlan instance.
-    if (sys.props.get("graft.loop.action")
-        .orElse(sys.env.get("SPARK_GRAFT_LOOP_ACTION")).contains("count")) {
-      df.count()
-    } else {
-      execution.SQLExecution.withNewExecutionId(qe) {
-        qe.toRdd.foreachPartition { it: Iterator[_] =>
-          while (it.hasNext) it.next()
-        }
-      }
-    }
-    collectObserved(qe.executedPlan)
-  }
-
   /** Materialize UNPERSISTED loop state `df` as a locally-checkpointed
     * row RDD with ONE job, and return (flat-leaf view, release, observed
-    * metrics). Compared to the persist-as-InMemoryRelation flow
-    * ([[materializeObserved]] + [[cachedView]] + a periodic
-    * `Dataset.localCheckpoint`), this fuses everything the loop needs into
-    * the single materializing job:
+    * metrics). This fuses everything the superstep loop needs into the
+    * single materializing job:
     *
-    *  - the plan executes once; rows are defensively copied ONCE
-    *    (`map(_.copy())` — the same contract `Dataset.checkpoint` uses)
-    *    and stored as deserialized MEMORY_AND_DISK blocks — no columnar
-    *    encode at materialization and no per-scan decode afterwards (the
-    *    IMR flow pays encode + a decode per scan, and the state is
+    *  - the plan executes once (its `toRdd` iterators are consumed under a
+    *    SQL execution id — no `count()` Aggregate, no extra single-task
+    *    stage); rows are defensively copied ONCE (`map(_.copy())` — the
+    *    same contract `Dataset.checkpoint` uses) and stored as
+    *    deserialized MEMORY_AND_DISK blocks — no columnar encode at
+    *    materialization and no per-scan decode afterwards (the state is
     *    scanned twice per superstep);
     *  - `localCheckpoint()` is marked BEFORE the job, so the job's own
     *    cached blocks become the checkpoint — RDD lineage is truncated
-    *    every superstep at zero extra cost. The IMR flow runs a separate
-    *    `Dataset.localCheckpoint` job every k-th superstep (a full extra
-    *    pass: decode cache → copy → re-store, then an IMR re-encode on
-    *    the next scan) and pays growing driver/task costs between
-    *    checkpoints (the IMR leaf embeds its builder plan: analysis,
-    *    plan-string and task-closure size all grow per superstep until
-    *    the next truncation — measured build 42→372 ms and exec
-    *    318→1038 ms across one 8-step window at 100K vertices);
+    *    every superstep at zero extra cost, with no separate checkpoint
+    *    job and no plan/closure growth between truncations;
     *  - every `observe()` CollectMetrics accumulator fires in the same
-    *    job and is read synchronously, exactly as in
-    *    [[materializeObserved]].
+    *    job and is read SYNCHRONOUSLY (merged driver-side before the job
+    *    returns — no [[org.apache.spark.sql.Observation]] listener-bus
+    *    round-trip).
     *
     * The returned view is a flat `LogicalRDD` over the checkpointed rows
     * (stable objects — served without the per-scan copy
@@ -166,7 +129,7 @@ object GraftSqlShim {
     val logical = execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
     (classic.Dataset.ofRows(cdf.sparkSession, logical),
       () => { rdd.unpersist(blocking = false); () },
-      collectObserved(qe.executedPlan))
+      execution.CollectMetricsExec.collect(qe.executedPlan))
   }
 
   private def guardedQueryExecution(
@@ -181,9 +144,7 @@ object GraftSqlShim {
     // SECOND SparkContext of one ScalingBench JVM, Spark 4.1.2). Detect it
     // BEFORE executing: replan once on the dataset's own session if that
     // session is alive (construction is deterministic from the logical
-    // plan, and the persisted-cache lookup keys on the logical plan, so a
-    // replan lands on the same InMemoryRelation), else fail with the real
-    // story instead of the NPE.
+    // plan), else fail with the real story instead of the NPE.
     if (qe.executedPlan.exists(p => p.session eq null)) {
       val s = cdf.sparkSession
       if (!s.isUsable) throw new IllegalStateException(
@@ -203,18 +164,6 @@ object GraftSqlShim {
         "twice; the owning SparkContext is likely being stopped concurrently")
     }
     qe
-  }
-
-  /** All CollectMetrics accumulators in `plan`, descending into cached
-    * relations (a persisted plan's collectors live inside the
-    * InMemoryRelation's cachedPlan, which plain plan traversal skips).
-    */
-  private def collectObserved(plan: execution.SparkPlan): Map[String, Row] = {
-    val nested = plan.collect {
-      case s: execution.columnar.InMemoryTableScanExec =>
-        collectObserved(s.relation.cachedPlan)
-    }.foldLeft(Map.empty[String, Row])(_ ++ _)
-    nested ++ execution.CollectMetricsExec.collect(plan)
   }
 
   /** Block until the listener bus has delivered all posted events. Loop
@@ -237,10 +186,10 @@ object GraftSqlShim {
     * outputOrdering through UNCHANGED, and `doCanonicalize`/`withOutput`
     * then remap ordering attributes through an AttributeMap keyed by the
     * (new) output only — the stale attribute throws NoSuchElementException.
-    * Loop state is referenced at least twice per superstep (gather +
-    * apply), so its leaf must carry no ordering. The cost is one in-stage
-    * Sort of the state per apply join — exactly what the pre-cache
-    * LogicalRDD view paid too (its canonicalization never exposed ordering).
+    * Star-CC round state is self-joined every round, so its leaf must carry
+    * no ordering. The cost is at most an in-stage Sort where an ordering is
+    * required — exactly what the LogicalRDD view paid too (its
+    * canonicalization never exposed ordering).
     */
   private def stripOrdering(
       imr: execution.columnar.InMemoryRelation): execution.columnar.InMemoryRelation = {

@@ -128,11 +128,11 @@ class CheckpointSpec extends SparkSpec {
       first.labels.collect().map(v => v.id -> v.label).toMap
   }
 
-  test("zero localCheckpointEvery is rejected up front") {
+  test("zero checkpointEvery is rejected up front") {
     val edges = spark.createDataset(Seq(Edge(0, 1)))
     val seeds = spark.createDataset(Seq(Seed(0, 1)))
     intercept[IllegalArgumentException] {
-      LabelPropagation.run(edges, seeds, RunConfig(localCheckpointEvery = 0))
+      LabelPropagation.run(edges, seeds, RunConfig(checkpointEvery = 0))
     }
   }
 

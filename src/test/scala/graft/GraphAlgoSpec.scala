@@ -88,8 +88,7 @@ class GraphAlgoSpec extends SparkSpec {
     }
   }
 
-  test("triangle r5 plan variants agree: packed broadcast == packed shuffled " +
-    "== pair rows, with ids at the top of the u32 domain") {
+  test("triangle close build: broadcast == shuffled-hash, ids at the top of u32") {
     // ids in [2^32-80, 2^32): the packed pk = id(v1)·2^32 + id(v2) goes
     // negative as a signed Long and the (degree,id) key's low lane has the
     // sign bit set — any signed shift or widening in the pack/unpack chain
@@ -97,22 +96,18 @@ class GraphAlgoSpec extends SparkSpec {
     val offset = 0xFFFFFFFFL - 80
     val edges = SyntheticGraph.randomEdgesLocal(60, 4, 33L)
       .map { case (s, d) => (s + offset, d + offset) }
-    def run() = {
-      val r = TriangleCount.run(edgeDs(edges))
+    def run(closeBuildMaxRows: Long) = {
+      val r = TriangleCount.run(edgeDs(edges), closeBuildMaxRows)
       val out = (r.counts.collect().map(t => t.id -> t.triangles).toMap,
         r.totalTriangles)
       r.release()
       out
     }
-    val packedBroadcast = run()
-    sys.props("graft.tc.closebuild.maxrows") = "1" // force the web-scale SHJ build
-    val packedShuffled = try run() finally sys.props.remove("graft.tc.closebuild.maxrows")
-    sys.props("graft.tc.packexchange") = "0"
-    val pairRows = try run() finally sys.props.remove("graft.tc.packexchange")
+    val packedBroadcast = run(TriangleCount.DefaultCloseBuildMaxRows)
+    val packedShuffled = run(1L) // force the web-scale SHJ build
     val vertices = edges.flatMap { case (s, d) => Seq(s, d) }.distinct
     packedBroadcast._1 shouldBe SerialOracles.triangleCounts(vertices, edges)
     packedShuffled shouldBe packedBroadcast
-    pairRows shouldBe packedBroadcast
   }
 
   test("triangle count fails fast on ids outside the u32 domain") {
@@ -121,6 +116,12 @@ class GraphAlgoSpec extends SparkSpec {
       TriangleCount.run(edgeDs(tooBig))
     }
     ex.getMessage should include("2^32")
+    // a negative id would set the packed keys' high bits: also rejected
+    val negative = Seq[(Long, Long)]((-1L, 1L), (1L, 2L), (2L, -1L))
+    val neg = intercept[IllegalArgumentException] {
+      TriangleCount.run(edgeDs(negative))
+    }
+    neg.getMessage should include("[-1, 2]")
   }
 
   test("BFS levels match the oracle; unreachable vertices absent") {

@@ -22,16 +22,48 @@ class LabelPropagationSpec extends SparkSpec {
     val sd = spark.createDataset(seeds.toSeq.map { case (k, v) => Seed(k, v) })
     val res = LabelPropagation.run(ds, sd, RunConfig(maxIter = maxIter))
     val dist = res.labels.collect().map(v => v.id -> v.label).toMap
-    val oracle = SerialOracles
-      .labelPropagation(n, edges, seeds, maxIter)
-      .zipWithIndex
-      .collect { case (Some(l), i) => i.toLong -> l }
-      .toMap
-    // oracle emits rows for isolated ids in [0,n) too; the Dataset engine
-    // only sees vertices present in the edge table — restrict to those
-    val present = edges.flatMap { case (s, d) => Seq(s, d) }.toSet ++ seeds.keySet
-    (dist, oracle.filter { case (k, _) => present(k) })
+    (dist, lpOracle(n, edges, seeds, maxIter))
   }
+
+  /** Serial-oracle labels over ids [0, n). The oracle emits rows for
+    * isolated ids too; the Dataset engine only sees vertices present in the
+    * edge table or the seeds — restricted to those.
+    */
+  private def lpOracle(
+      n: Int,
+      edges: Seq[(Long, Long)],
+      seeds: Map[Long, Long],
+      maxIter: Int = DefaultMaxIter): Map[Long, Long] = {
+    val present = edges.flatMap { case (s, d) => Seq(s, d) }.toSet ++ seeds.keySet
+    SerialOracles.labelPropagation(n, edges, seeds, maxIter)
+      .zipWithIndex
+      .collect { case (Some(l), i) if present(i.toLong) => i.toLong -> l }
+      .toMap
+  }
+
+  /** LP over `edges`/`seeds` with every id shifted by `idOff` and every seed
+    * label by `labelOff`; returns the labels shifted back, the iteration
+    * count and the converged flag.
+    */
+  private def lpShifted(
+      edges: Seq[(Long, Long)],
+      seeds: Map[Long, Long],
+      idOff: Long = 0L,
+      labelOff: Long = 0L,
+      cfg: RunConfig = RunConfig()): (Map[Long, Long], Int, Boolean) = {
+    val res = LabelPropagation.run(
+      spark.createDataset(edges.map { case (s, d) => Edge(s + idOff, d + idOff) }),
+      spark.createDataset(seeds.toSeq.map { case (k, v) => Seed(k + idOff, v + labelOff) }),
+      cfg)
+    val m = res.labels.collect().map(v => (v.id - idOff) -> (v.label - labelOff)).toMap
+    res.release()
+    (m, res.iterations, res.converged)
+  }
+
+  // Salting keeps the weighted (src, label, w) vote on any input: forcing it
+  // with threshold 1 reaches the weighted representation on graphs whose
+  // multiplicities would otherwise take the narrow one.
+  private val saltCfg = RunConfig(hubSaltK = 4, hubDegreeThreshold = 1L)
 
   private val triangle = Seq[(Long, Long)]((0, 1), (0, 2), (2, 0), (2, 1), (1, 0), (1, 2))
 
@@ -91,6 +123,15 @@ class LabelPropagationSpec extends SparkSpec {
     val (d, o) = runBoth(3, edges, Map(0L -> 200L, 1L -> 100L))
     d shouldBe o
     d(2L) shouldBe 200L
+    // every 4th ring edge tripled: Σw = 1.5 × rows, far outside the 1%
+    // near-unit gate, so the vote carries w; the extra copies reorder
+    // majorities that the plain ring would tie (converged or capped at
+    // maxIter, the oracle runs the same supersteps)
+    val ring = (0L until 400L).flatMap(i =>
+      Seq(1L, 2L, 5L).map(o => (i, (i + o) % 400)))
+    val heavy = ring ++ ring.zipWithIndex.collect { case (e, i) if i % 4 == 0 => Seq(e, e) }.flatten
+    val (dh, oh) = runBoth(400, heavy, Map(0L -> 100L, 133L -> 200L, 266L -> 300L))
+    dh shouldBe oh
   }
 
   test("differential: random graphs across sizes, densities, seed rates") {
@@ -211,21 +252,6 @@ class LabelPropagationSpec extends SparkSpec {
       .labels.count() shouldBe 1L
   }
 
-  test("LP never batches supersteps (two-reference step shape re-executes)") {
-    // LabelPropagation forces batchK = 1: its step's two state references
-    // (gather projection, apply join) do not unify under ReuseExchange, so
-    // a composed job re-executes prior steps. PageRankSpec carries the
-    // positive batching-equivalence test for the step shape that composes.
-    val edges = spark.createDataset(
-      SyntheticGraph.randomEdgesLocal(150, 3, seed = 21L)
-        .map { case (s, d) => Edge(s, d) })
-    val sd = spark.createDataset(Seq(Seed(0L, 100L), Seed(75L, 200L)))
-    val res = LabelPropagation.run(edges, sd,
-      RunConfig(batchK = 4)) // LP overrides even an explicit batch request
-    res.converged shouldBe true
-    all(res.stats.map(_.steps)) shouldBe 1
-  }
-
   test("MajorityVoteAgg (UDAF surface) == the codegen max-struct vote plan") {
     import org.apache.spark.sql.functions._
     val rows = for { s <- 0L until 60L; j <- 0 until 7 } yield
@@ -246,52 +272,39 @@ class LabelPropagationSpec extends SparkSpec {
     // ring edges are distinct by construction → the narrow (w-less) vote
     // path engages; appending one duplicated edge (multiplicity 2, 0.07%
     // of rows — inside the 1% near-unit gate) must still weight that vote
-    // twice via the setup-time row expansion
+    // twice via the setup-time row expansion. The salted run keeps the
+    // weighted vote on the same multigraph.
     val ring = (0L until 500L).flatMap(i =>
       Seq(1L, 2L, 3L).map(o => (i, (i + o) % 500)))
     val withDup = ring ++ Seq((7L, 9L))
     val seeds = Map(0L -> 100L, 250L -> 300L)
-    def runWith(keepw: Boolean) = {
-      if (keepw) sys.props("graft.lp.keepw") = "1"
-      try {
-        val res = LabelPropagation.run(
-          spark.createDataset(withDup.map { case (s, d) => Edge(s, d) }),
-          spark.createDataset(seeds.toSeq.map { case (k, v) => Seed(k, v) }))
-        val m = res.labels.collect().map(v => v.id -> v.label).toMap
-        res.release()
-        (m, res.iterations, res.converged)
-      } finally sys.props.remove("graft.lp.keepw")
-    }
-    val narrow = runWith(keepw = false)
-    val weighted = runWith(keepw = true)
+    val narrow = lpShifted(withDup, seeds)
+    val weighted = lpShifted(withDup, seeds, cfg = saltCfg)
     narrow shouldBe weighted
-    val oracle = SerialOracles
-      .labelPropagation(500, withDup, seeds, DefaultMaxIter)
-      .zipWithIndex.collect { case (Some(l), i) => i.toLong -> l }.toMap
-    narrow._1 shouldBe oracle
+    narrow._1 shouldBe lpOracle(500, withDup, seeds)
   }
 
   test("checkpoint fingerprints interchange between vote representations") {
     val dir = java.nio.file.Files.createTempDirectory("lp-vw-chk").toString
-    val edges = spark.createDataset(
-      (0L until 120L).flatMap(i => Seq((i, (i + 1) % 120), (i, (i + 7) % 120)))
-        .map { case (s, d) => Edge(s, d) })
-    val seeds = spark.createDataset(Seq(Seed(0L, 100L), Seed(60L, 200L)))
+    val pairs = (0L until 120L).flatMap(i => Seq((i, (i + 1) % 120), (i, (i + 7) % 120)))
+    val edges = spark.createDataset(pairs.map { case (s, d) => Edge(s, d) })
+    val seedMap = Map(0L -> 100L, 60L -> 200L)
+    val seeds = spark.createDataset(seedMap.toSeq.map { case (k, v) => Seed(k, v) })
     val cfg = model.RunConfig(
       checkpointDir = Some(dir), checkpointEvery = 1, maxIter = 2)
     // write checkpoints under the narrow representation, stop unconverged
     val first = LabelPropagation.run(edges, seeds, cfg)
     first.converged shouldBe false
     first.release()
-    // resume under the WEIGHTED representation: the manifest fingerprint is
-    // computed over the re-grouped logical (src,dst,w) multigraph, so the
-    // two physical representations must accept each other's checkpoints
-    sys.props("graft.lp.keepw") = "1"
-    try {
-      val resumed = LabelPropagation.run(edges, seeds, cfg.copy(maxIter = 50))
-      resumed.converged shouldBe true
-      resumed.release()
-    } finally sys.props.remove("graft.lp.keepw")
+    // resume under the WEIGHTED (salted) representation: the manifest
+    // fingerprint is computed over the re-grouped logical (src,dst,w)
+    // multigraph, so the two physical representations must accept each
+    // other's checkpoints
+    val resumed = LabelPropagation.run(edges, seeds,
+      saltCfg.copy(checkpointDir = Some(dir), checkpointEvery = 1))
+    resumed.converged shouldBe true
+    resumed.labels.collect().map(v => v.id -> v.label).toMap shouldBe lpOracle(120, pairs, seedMap)
+    resumed.release()
   }
 
   test("label histogram reports 20 smallest labels with counts") {
@@ -303,8 +316,8 @@ class LabelPropagationSpec extends SparkSpec {
 
   // Tie-heavy topology: a bipartite-ish graph where most vertices see an
   // exact vote tie every superstep, so the argmax's min-label tie-break is
-  // on the critical path of every assignment. Exercised under both vote
-  // representations and both loop-join plan families.
+  // on the critical path of every assignment. Exercised at id and label
+  // offsets that select each vote representation.
   private def tieHeavy: (Seq[(Long, Long)], Map[Long, Long]) = {
     // each right-side vertex r in [100,160) gets edges from exactly two
     // left-side seeds chosen so their labels differ → every vote is 1-vs-1
@@ -318,137 +331,43 @@ class LabelPropagationSpec extends SparkSpec {
   }
 
   test("packed-long argmax == struct argmax on a tie-heavy graph") {
-    // the default vote packs (cnt<<32)|(2^32-1-label) into one long so the
-    // aggregation hash-aggregates; graft.lp.structvote=1 restores the
-    // max(struct(cnt,-label)) SortAggregate shape. Same ties, same labels.
+    // labels < 2^32 pack the vote's argmax into (cnt<<32)|(2^32-1-label),
+    // which hash-aggregates; labels ≥ 2^32 cannot, and take the
+    // max(struct(cnt,-label)) shape. Same ties, same labels as the oracle.
     val (edges, seeds) = tieHeavy
-    def runWith(struct: Boolean) = {
-      if (struct) sys.props("graft.lp.structvote") = "1"
-      try {
-        val res = LabelPropagation.run(
-          spark.createDataset(edges.map { case (s, d) => Edge(s, d) }),
-          spark.createDataset(seeds.toSeq.map { case (k, v) => Seed(k, v) }))
-        val m = res.labels.collect().map(v => v.id -> v.label).toMap
-        val out = (m, res.iterations, res.converged)
-        res.release()
-        out
-      } finally sys.props.remove("graft.lp.structvote")
-    }
-    val packed = runWith(struct = false)
-    val structv = runWith(struct = true)
-    packed shouldBe structv
+    val oracle = lpOracle(160, edges, seeds)
+    val packed = lpShifted(edges, seeds)
+    val structv = lpShifted(edges, seeds, labelOff = 1L << 32)
+    packed._1 shouldBe oracle
+    structv shouldBe packed
   }
 
   test("packed vote exchange == pair exchange, incl. src ids above 2^31") {
-    // the default unitW+u32 shape ships one long pk=(src<<32)|label on the
-    // per-superstep exchange; graft.lp.packexchange=0 restores the
-    // (src,label) pair row. Same ties, same labels — and ids in
-    // [2^31, 2^32) make the packed long NEGATIVE, pinning the
-    // shiftrightunsigned unpack (a signed shiftright sign-extends there).
-    val (tieEdges, tieSeeds) = tieHeavy
-    val hi = 0x80000000L // 2^31
-    val hiEdges = tieEdges.map { case (s, d) => (s + hi, d + hi) }
-    val hiSeeds = tieSeeds.map { case (k, v) => (k + hi) -> v }
-    def runWith(edges: Seq[(Long, Long)], seeds: Map[Long, Long],
-        pack: Boolean) = {
-      if (!pack) sys.props("graft.lp.packexchange") = "0"
-      try {
-        val res = LabelPropagation.run(
-          spark.createDataset(edges.map { case (s, d) => Edge(s, d) }),
-          spark.createDataset(seeds.toSeq.map { case (k, v) => Seed(k, v) }))
-        val m = res.labels.collect().map(v => v.id -> v.label).toMap
-        val out = (m, res.iterations, res.converged)
-        res.release()
-        out
-      } finally sys.props.remove("graft.lp.packexchange")
+    // src ids and labels < 2^32 ship one long pk=(src<<32)|label on the
+    // per-superstep exchange; ids in [2^31, 2^32) make that long NEGATIVE,
+    // pinning the shiftrightunsigned unpack (a signed shiftright
+    // sign-extends there); ids ≥ 2^32 take the (src,label) pair row. Every
+    // offset must reproduce the oracle, ties included.
+    val (edges, seeds) = tieHeavy
+    val oracle = lpOracle(160, edges, seeds)
+    val runs = Seq(0L, 1L << 31, 1L << 32).map { off =>
+      val r = lpShifted(edges, seeds, idOff = off)
+      withClue(s"id offset $off: ") { r._1 shouldBe oracle }
+      r
     }
-    for ((e, s) <- Seq((tieEdges, tieSeeds), (hiEdges, hiSeeds))) {
-      val on = runWith(e, s, pack = true)
-      val off = runWith(e, s, pack = false)
-      on shouldBe off
-    }
-    // ids at 2^32 or above must NOT take the packed path (and still agree)
-    val bigEdges = tieEdges.map { case (s, d) => (s + (1L << 32), d + (1L << 32)) }
-    val bigSeeds = tieSeeds.map { case (k, v) => (k + (1L << 32)) -> v }
-    runWith(bigEdges, bigSeeds, pack = true) shouldBe
-      runWith(bigEdges, bigSeeds, pack = false)
+    runs.map(_._2).distinct should have size 1
   }
 
   test("packed exchange under forced salting (weighted vote row)") {
     // hub-skew graphs keep the weighted vote (salted adjacency carries w);
-    // the packed exchange must ship (pk, w) there and agree with the
-    // (src, label, w) pair row bit-for-bit
-    val (tieEdges, tieSeeds) = tieHeavy
-    val saltCfg = RunConfig(hubSaltK = 4, hubDegreeThreshold = 1L)
-    def runWith(pack: Boolean) = {
-      if (!pack) sys.props("graft.lp.packexchange") = "0"
-      try {
-        val res = LabelPropagation.run(
-          spark.createDataset(tieEdges.map { case (s, d) => Edge(s, d) }),
-          spark.createDataset(tieSeeds.toSeq.map { case (k, v) => Seed(k, v) }),
-          saltCfg)
-        val m = res.labels.collect().map(v => v.id -> v.label).toMap
-        val out = (m, res.iterations, res.converged)
-        res.release()
-        out
-      } finally sys.props.remove("graft.lp.packexchange")
-    }
-    val on = runWith(pack = true)
-    val off = runWith(pack = false)
-    on shouldBe off
-    // and both agree with the unsalted default run
-    val plain = LabelPropagation.run(
-      spark.createDataset(tieEdges.map { case (s, d) => Edge(s, d) }),
-      spark.createDataset(tieSeeds.toSeq.map { case (k, v) => Seed(k, v) }))
-    val plainMap = plain.labels.collect().map(v => v.id -> v.label).toMap
-    plain.release()
-    on._1 shouldBe plainMap
-  }
-
-  test("legacy (unhinted) loop-join plans produce identical labels") {
-    // graft.loop.legacyplan=1 drops the shuffle_hash hints, letting Spark
-    // fall back to SortMergeJoin in every superstep — plan-only toggle,
-    // results must be bit-identical
+    // the packed exchange ships (pk, w) there for ids < 2^32 and the
+    // (src, label, w) pair row above; both agree with the unsalted run
     val (edges, seeds) = tieHeavy
-    def runWith(legacy: Boolean) = {
-      if (legacy) sys.props("graft.loop.legacyplan") = "1"
-      try {
-        val res = LabelPropagation.run(
-          spark.createDataset(edges.map { case (s, d) => Edge(s, d) }),
-          spark.createDataset(seeds.toSeq.map { case (k, v) => Seed(k, v) }))
-        val m = res.labels.collect().map(v => v.id -> v.label).toMap
-        val out = (m, res.iterations, res.converged)
-        res.release()
-        out
-      } finally sys.props.remove("graft.loop.legacyplan")
-    }
-    runWith(legacy = false) shouldBe runWith(legacy = true)
-  }
-
-  test("all three state-leaf modes produce identical labels") {
-    // graft.state.leaf selects how the loop materializes + re-roots its
-    // per-superstep state: "ckpt" (default, r5 — copy + localCheckpoint
-    // fused into the one materializing job, flat LogicalRDD leaf), "imr"
-    // (r4 — columnar InMemoryRelation leaf + periodic Dataset
-    // .localCheckpoint job), "rdd" (flat view with per-scan defensive
-    // copy). A materialization detail only: labels, iteration count and
-    // convergence must be identical. The tie-heavy fixture keeps the
-    // argmax tie-break on the critical path in every mode.
-    val (edges, seeds) = tieHeavy
-    def runWith(mode: String) = {
-      sys.props("graft.state.leaf") = mode
-      try {
-        val res = LabelPropagation.run(
-          spark.createDataset(edges.map { case (s, d) => Edge(s, d) }),
-          spark.createDataset(seeds.toSeq.map { case (k, v) => Seed(k, v) }))
-        val m = res.labels.collect().map(v => v.id -> v.label).toMap
-        val out = (m, res.iterations, res.converged)
-        res.release()
-        out
-      } finally sys.props.remove("graft.state.leaf")
-    }
-    val ckpt = runWith("ckpt")
-    runWith("imr") shouldBe ckpt
-    runWith("rdd") shouldBe ckpt
+    val plain = lpShifted(edges, seeds)
+    plain._1 shouldBe lpOracle(160, edges, seeds)
+    for (off <- Seq(0L, 1L << 31, 1L << 32))
+      withClue(s"id offset $off: ") {
+        lpShifted(edges, seeds, idOff = off, cfg = saltCfg) shouldBe plain
+      }
   }
 }

@@ -6,11 +6,9 @@ import graft.gen.SyntheticGraph
 import graft.oracle.SerialOracles
 import org.apache.spark.sql.functions.round
 
-/** The round-4 loop fixed-cost paths: the tiny-state narrow shuffle width
-  * (Superstep.autoWidth + the per-algo loopWidth wiring) and the count()
-  * materializing-action escape hatch (graft.loop.action) must both produce
-  * results identical to the default path — they are performance choices,
-  * never semantic ones.
+/** The tiny-state narrow shuffle width (Superstep.autoWidth + the per-algo
+  * loopWidth wiring) must produce results identical to the session-width
+  * loop — it is a performance choice, never a semantic one.
   */
 class LoopWidthSpec extends SparkSpec {
   import spark.implicits._
@@ -64,25 +62,5 @@ class LoopWidthSpec extends SparkSpec {
     got.components.collect().map(c => c.id -> c.component).toMap shouldBe
       SerialOracles.connectedComponents(vertices, edges)
     got.release()
-  }
-
-  test("count-action escape hatch: identical result and per-step stats") {
-    val edges = SyntheticGraph.randomEdgesLocal(300, 3, seed = 11L)
-    val e = edgeDs(edges)
-    def runOnce(): (Long, Seq[(Int, Long, Long)]) = {
-      val r = PageRank.run(e)
-      val fp = ConnectedComponents.fingerprint64(
-        r.ranks.toDF().select($"id", round($"rank", 9).as("r")))
-      val st = r.stats.map(s => (s.iteration, s.changed, s.rows))
-      r.release()
-      (fp, st)
-    }
-    val (fpDefault, stDefault) = runOnce()
-    sys.props("graft.loop.action") = "count"
-    val (fpCount, stCount) =
-      try runOnce()
-      finally sys.props.remove("graft.loop.action")
-    fpCount shouldBe fpDefault
-    stCount shouldBe stDefault
   }
 }

@@ -61,6 +61,25 @@ class PipelineSpec extends SparkSpec {
     d2.toSeq shouldBe d1.toSeq
   }
 
+  test("dictionary: dense ranks where range sampling engages, encode agrees") {
+    // 20K urls over 8 shuffle partitions: the range partitioner samples its
+    // bounds, and a recomputed sample differs from the first one — the ids
+    // must still be exactly the url ranks 0..n-1, and every later use of
+    // the dictionary (collect, both encode joins) must see those same ids
+    val n = 20000
+    def url(i: Int) = f"https://x.example/$i%05d"
+    val pairs = (0 until n).map(i => (url(i), url((i * 7919 + 13) % n)))
+    val urlEdges = pairs.toDF("src_url", "dst_url").as[UrlEdge].repartition(8)
+    val dict = Dictionary.buildFromEdges(urlEdges)
+    val got = dict.collect().sortBy(_.id)
+    got.map(_.id).toSeq shouldBe (0L until n.toLong)
+    got.map(_.url).toSeq shouldBe (0 until n).map(url)
+    // zero-padded urls sort numerically, so the local rank of url(i) is i
+    val encoded = Dictionary.encodeEdges(urlEdges, dict)
+      .collect().map(e => (e.src, e.dst)).sorted.toSeq
+    encoded shouldBe pairs.indices.map(i => (i.toLong, ((i * 7919L + 13) % n))).sorted
+  }
+
   test("pages → extract → encode reproduces the generated topology exactly") {
     val n = 120L
     val density = 5

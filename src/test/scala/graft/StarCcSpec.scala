@@ -90,30 +90,24 @@ class StarCcSpec extends SparkSpec {
   }
 
   test("packed distinct exchange == pair distinct, incl. ids above 2^31") {
-    // the default u32 shape ships each round's two distinct() exchanges as
-    // one long pk=(u<<32)|v; graft.cc.packexchange=0 restores the (u,v)
-    // pair rows. Ids in [2^31, 2^32) make the packed long NEGATIVE,
-    // pinning the shiftrightunsigned unpack; ids ≥ 2^32 must take the
-    // unpacked path. Components and round counts must match exactly.
+    // u32 ids ship each round's two distinct() exchanges as one long
+    // pk=(u<<32)|v; ids in [2^31, 2^32) make that long NEGATIVE, pinning
+    // the shiftrightunsigned unpack; ids ≥ 2^32 take the (u,v) pair rows.
+    // Every offset must reproduce the oracle, in the same round count.
     val base = SyntheticGraph.randomEdgesLocal(120, 2, seed = 77L)
-    val hi = 0x80000000L
-    def runWith(edges: Seq[(Long, Long)], pack: Boolean) = {
-      if (!pack) sys.props("graft.cc.packexchange") = "0"
-      try {
-        val res = ConnectedComponents.runStar(
-          spark.createDataset(edges.map { case (s, d) => Edge(s, d) }))
-        (res.components.collect().map(c => c.id -> c.component).toMap,
-          res.iterations, res.componentCount)
-      } finally sys.props.remove("graft.cc.packexchange")
+    val vertices = base.flatMap { case (s, d) => Seq(s, d) }.distinct
+    val oracle = SerialOracles.connectedComponents(vertices, base)
+    val runs = Seq(0L, 1L << 31, 1L << 32).map { off =>
+      val res = ConnectedComponents.runStar(spark.createDataset(
+        base.map { case (s, d) => Edge(s + off, d + off) }))
+      val got = res.components.collect()
+        .map(c => (c.id - off) -> (c.component - off)).toMap
+      withClue(s"id offset $off: ") { got shouldBe oracle }
+      val out = (res.iterations, res.componentCount)
+      res.release()
+      out
     }
-    for (shift <- Seq(0L, hi)) {
-      val edges = base.map { case (s, d) => (s + shift, d + shift) }
-      withClue(s"shift=$shift: ") {
-        runWith(edges, pack = true) shouldBe runWith(edges, pack = false)
-      }
-    }
-    val big = base.map { case (s, d) => (s + (1L << 32), d + (1L << 32)) }
-    runWith(big, pack = true) shouldBe runWith(big, pack = false)
+    runs.distinct should have size 1
   }
 
   test("star CC resume refuses a checkpoint from a different input graph") {
