@@ -30,49 +30,25 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     import spark.implicits._
 
+    // every vertex starts as its own component; aggregated rather than
+    // projected as `id AS comp` (see Superstep.loopResumable on aliases)
+    val init = edges.select($"src".as("id"))
+      .union(edges.select($"dst".as("id")))
+      .groupBy($"id").agg(min($"id").as("comp"))
     // undirected doubling, deduped (duplicates are irrelevant for min),
-    // partitioned by src once — every superstep's join reuses this exchange
-    val undSession = edges.select($"src", $"dst")
-      .union(edges.select($"dst".as("src"), $"src".as("dst")))
-      .filter($"src" =!= $"dst")
-      .distinct()
-      .repartition($"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val undCount = undSession.count()
-
-    // tiny vertex states run the whole loop at a narrower shuffle width
-    // (Superstep.autoWidth — measured 2.3× at 2K vertices, BENCH.md §9.3);
-    // the doubled edge table is re-partitioned at the SAME width so the
-    // gather join stays co-partitioned. The vertex count is only derived
-    // when the (already-materialized) edge count is itself small, so no
-    // extra driver job appears at scale. `und` is doubled, so distinct
-    // src covers every non-isolated vertex.
-    val loopWidth =
-      if (undCount <= (1L << 20))
-        Superstep.autoWidth(spark, undSession.select($"src").distinct().count())
-      else None
-    val und = loopWidth match {
-      case Some(w) =>
-        val p = undSession.repartition(w, $"src")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        undSession.unpersist(blocking = false)
-        p
-      case None => undSession
-    }
-
-    val vertices = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct()
-    // enter the loop at the loop width (see PageRank.init — a session-width
-    // init otherwise forces a message re-exchange every superstep)
-    val init0 = vertices.select($"id", $"id".as("comp"))
-    val init = loopWidth.fold(init0)(w => init0.repartition(w, $"id"))
+    // keyed by src — every superstep's gather reuses its partitioning
+    val side = Superstep.edgeSide(
+      edges.select($"src", $"dst")
+        .union(edges.select($"dst".as("src"), $"src".as("dst")))
+        .filter($"src" =!= $"dst")
+        .distinct(),
+      "src", cfg)(init.count())
 
     def step(state: DataFrame, iter: Int): DataFrame = {
       val frontier =
         (if (iter == 0) state else state.filter($"_chg")).select($"id", $"comp")
-      val msgs = und.join(Superstep.shj(frontier), und("src") === frontier("id"))
-        .groupBy(und("dst").as("id")).agg(min($"comp").as("m"))
+      val msgs = side.gather(frontier)
+        .groupBy($"dst".as("id")).agg(min($"comp").as("m"))
       state.select($"id", $"comp")
         .join(Superstep.shj(msgs), Seq("id"), "left_outer")
         .select(
@@ -81,14 +57,13 @@ object ConnectedComponents {
           coalesce($"m" < $"comp", lit(false)).as("_chg"))
     }
 
-    val inputFp = cfg.checkpointDir.map(_ => fingerprint64(und.toDF()))
-    val res = Superstep.loopResumable(init, step,
-      cfg.copy(convergenceThreshold = 0L), algo = "cc", inputFingerprint = inputFp,
-      shuffleWidth = loopWidth)
+    val inputFp = cfg.checkpointDir.map(_ => fingerprint64(side.edges))
+    val res = Superstep.loopResumable(init, side, step,
+      cfg.copy(convergenceThreshold = 0L), algo = "cc", inputFingerprint = inputFp)
     val comps = res.state.select($"id", $"comp".as("component"))
       .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
     val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
-    und.unpersist(blocking = false)
+    side.release()
     // comps is persisted + materialized — free the loop state behind it
     res.release()
     CcResult(comps, res.iterations, nComp, res.stats,
@@ -119,23 +94,12 @@ object ConnectedComponents {
     import spark.implicits._
     import org.apache.spark.sql.GraftSqlShim
 
-    // rounds run under the pinned loop session (broadcast ban, shuffled-hash
-    // preference, AQE off) exactly like Superstep.loop: with caller-default
-    // confs the sub-threshold minsL/minsS aggregates are collected to the
-    // driver and re-broadcast EVERY round — the documented per-superstep
-    // trap, measured as ~4.8 s/round of driver fixed cost on a 1M-edge
-    // path graph
-    val loopSession = GraftSqlShim.sessionWithConfs(spark,
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.join.preferSortMergeJoin" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    // job-group scoping, same as Superstep.loop: concurrent loops in one
-    // session keep disjoint phase windows
-    val loopId = java.util.UUID.randomUUID().toString
-    val listener = new Superstep.PhaseListener(Some(loopId))
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setLocalProperty(Superstep.LoopIdProperty, loopId)
-    try {
+    // rounds run in the loop scope (broadcast ban, shuffled-hash
+    // preference, AQE off, phase listener): with caller-default confs the
+    // sub-threshold minsL/minsS aggregates are collected to the driver and
+    // re-broadcast EVERY round — the documented per-superstep trap,
+    // measured as ~4.8 s/round of driver fixed cost on a 1M-edge path graph
+    Superstep.inLoopScope(spark, None) { (loopSession, listener) =>
       val vertices = edges.select($"src".as("id"))
         .union(edges.select($"dst".as("id"))).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -256,9 +220,6 @@ object ConnectedComponents {
       vertices.unpersist(blocking = false)
       CcResult(comps, rounds - rounds0, nComp, stats.reverse,
         release = () => comps.unpersist(blocking = false))
-    } finally {
-      spark.sparkContext.setLocalProperty(Superstep.LoopIdProperty, null)
-      spark.sparkContext.removeSparkListener(listener)
     }
   }
 

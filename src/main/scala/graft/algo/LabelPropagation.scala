@@ -28,12 +28,10 @@ import graft.model._
   *
   * Physical plan per superstep (2 exchanges on the state, none on the
   * pre-partitioned edges, zero sorts):
-  *   gather  = packedEdges ⋈ labels on dst          (labels shuffled to the
-  *             persisted edge partitioning and hash-joined — shuffled-hash
-  *             forced by Superstep.shj, the broadcast ban otherwise
-  *             degrades the join to a per-superstep sort-merge; explicit
-  *             hub salting via SkewJoin, vote levels are salt-compatible
-  *             since label counts are associative)
+  *   gather  = packedEdges ⋈ labels on dst          (Superstep.EdgeSide:
+  *             labels shuffled to the persisted edge partitioning and
+  *             hash-joined, or salted across hub partitions; vote levels
+  *             are salt-compatible since label counts are associative)
   *   vote    = repartition(src) → groupBy(src, label).sum(w)
   *             → groupBy(src).max((cnt<<32)|(2^32-1-label)) — both agg
   *             levels chained codegen HashAggregates in one post-shuffle
@@ -51,13 +49,6 @@ import graft.model._
   *             projection (no extra action).
   */
 object LabelPropagation {
-
-  /** Effective salt factor: None = disabled, Some(k) = detect-and-salt. */
-  private[algo] def saltK(cfg: RunConfig): Option[Int] = cfg.hubSaltK match {
-    case 0 | 1 => None
-    case k if k > 1 => Some(k)
-    case _ => Some(graft.graph.SkewJoin.AutoK) // -1 = auto
-  }
 
   final case class LpResult(
       labels: Dataset[VertexLabel],
@@ -95,16 +86,9 @@ object LabelPropagation {
       case None => edges
     }
 
-    // adjacency at rest: duplicate edges collapsed to a weight, partitioned
-    // by dst once so every gather join reuses the same exchange; with
-    // salting enabled, hub dst keys are split across hubSaltK partitions
+    // adjacency at rest: duplicate edges collapsed to a weight
     val packedRaw = boundedEdges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
-    val saltPlan: Option[graft.graph.SkewJoin.SaltPlan] =
-      saltK(cfg).flatMap(k => graft.graph.SkewJoin.plan(
-        packedRaw, "dst", "src", k, cfg.hubDegreeThreshold))
-    val packedSession = saltPlan.map(_.salted).getOrElse(
-      packedRaw.repartition($"dst").persist(StorageLevel.MEMORY_AND_DISK))
-    val eAgg = packedSession.agg(
+    val eAgg = packedRaw.agg(
       coalesce(sum($"w"), lit(0L)),
       count(lit(1)),
       coalesce(max($"w"), lit(1L)),
@@ -123,53 +107,19 @@ object LabelPropagation {
     // shuffle partitions a given (src,label) pair appears ~d/p ≤ 1 times
     // per map task) from (src,label,w) to (src,label) — 24 vs 32 bytes of
     // unsafe-row payload, ~25% less shuffle write+read DRAM traffic on the
-    // loop's hot path, plus a narrower cached adjacency. Skipped under
-    // salting (the salted table is built/persisted inside SkewJoin with w;
-    // hub-skewed graphs keep the weighted vote). The max(w) guard bounds
-    // the per-row array_repeat.
-    val unitW = saltPlan.isEmpty &&
-      eAgg.getLong(0) <= eAgg.getLong(1) + eAgg.getLong(1) / 100 &&
+    // loop's hot path, plus a narrower cached adjacency. The max(w) guard
+    // bounds the per-row array_repeat.
+    val unitW = edgeCount <= eAgg.getLong(1) + eAgg.getLong(1) / 100 &&
       eAgg.getLong(2) <= 4096L
-
-    // tiny vertex states run the whole loop at a narrower shuffle width
-    // (Superstep.autoWidth — 8-way measured 2.3× faster at 2K vertices);
-    // the adjacency is then re-partitioned at the SAME width so the gather
-    // join stays co-partitioned and exchange-free. The decision is free at
-    // scale: a declared universe sizes directly, and the vertex count is
-    // only computed when the (already-known) edge count is itself small.
-    // The salted path keeps the session width (hub skew ⇒ a big graph).
-    lazy val derivedVertexCount = packedSession
-      .select($"src".as("id")).union(packedSession.select($"dst".as("id")))
-      .union(graft.io.EdgeTsv.dedupSeeds(seeds).select($"node".as("id")))
-      .distinct().count()
-    val loopWidth =
-      if (saltPlan.isDefined) None
-      else numNodes match {
-        case Some(n) => Superstep.autoWidth(spark, n)
-        case None if edgeCount <= (1L << 20) =>
-          Superstep.autoWidth(spark, derivedVertexCount)
-        case None => None
-      }
-    // one setup-time rebuild of the persisted adjacency when either the
-    // loop width narrows or the near-unit expansion drops the w column; the
-    // explicit repartition($"dst") keeps the cached plan exchange-rooted so
-    // the gather join stays provably co-partitioned with the state
-    val packed =
-      if (loopWidth.isEmpty && !unitW) packedSession
-      else {
-        val base =
-          if (unitW) packedSession.select($"src", $"dst",
-              explode(array_repeat(lit(0), $"w".cast("int"))).as("_d"))
-            .select($"src", $"dst")
-          else packedSession
-        val q = (loopWidth match {
-          case Some(w) => base.repartition(w, $"dst")
-          case None => base.repartition($"dst")
-        }).persist(StorageLevel.MEMORY_AND_DISK)
-        q.count()
-        packedSession.unpersist(blocking = false)
-        q
-      }
+    val adjacency =
+      if (unitW) packedRaw.select($"src", $"dst",
+          explode(array_repeat(lit(0), $"w".cast("int"))).as("_d"))
+        .select($"src", $"dst")
+      else packedRaw
+    // partitioned by dst once so every gather join reuses the same exchange
+    val side = Superstep.edgeSide(adjacency, "dst", cfg)(numNodes.getOrElse(
+      boundedEdges.select($"src".as("id")).union(boundedEdges.select($"dst".as("id")))
+        .union(seeds.select($"node".as("id"))).distinct().count()))
 
     val dedupedSeedsAll = graft.io.EdgeTsv.dedupSeeds(seeds)
     // unsupervised ⇔ the RAW seed map is empty (lib.rs:160 checks
@@ -196,20 +146,23 @@ object LabelPropagation {
         // dst >= n panics there (lib.rs:200-204); here the dense range(n)
         // state + left-outer apply would swallow those votes silently, so
         // the panic becomes one cheap agg over the persisted adjacency.
-        val mxDst = packed.agg(coalesce(max($"dst"), lit(-1L))).head().getLong(0)
+        val mxDst = side.edges.agg(coalesce(max($"dst"), lit(-1L))).head().getLong(0)
         require(mxDst < n,
           s"numNodes=$n but an edge destination references out-of-range id " +
           s"$mxDst — the reference panics on gather for dst >= num_nodes")
         spark.range(n).toDF("id")
-      case None => packed.select($"src".as("id"))
-        .union(packed.select($"dst".as("id")))
+      case None => side.edges.select($"src".as("id"))
+        .union(side.edges.select($"dst".as("id")))
         .union(dedupedSeeds.select($"node".as("id"))) // seeded isolated ids
         .distinct()
     }
-    val init0: DataFrame =
+    val init: DataFrame =
       if (unsupervised) {
-        // label(i) = i for every vertex (ow-lp/src/lib.rs:538-546)
-        vertices.select($"id", $"id".as("label"), lit(false).as("seeded"))
+        // label(i) = i for every vertex (ow-lp/src/lib.rs:538-546);
+        // aggregated, not projected as `id AS label` (see
+        // Superstep.loopResumable on aliases)
+        vertices.groupBy($"id").agg(min($"id").as("label"))
+          .select($"id", $"label", lit(false).as("seeded"))
       } else {
         vertices.join(dedupedSeeds, $"id" === $"node", "left_outer")
           .select($"id", $"label", $"label".isNotNull.as("seeded"))
@@ -256,22 +209,14 @@ object LabelPropagation {
     // Murmur3 of shiftrightunsigned(pk,32) equals Murmur3 of src value-wise,
     // so co-partitioning with the cached state holds numerically too.
     // Applies to BOTH vote shapes: the unit-multiplicity row packs to just
-    // (pk) — 16 vs 24 B — and the weighted row (salted hub-skew graphs,
-    // the 100 TB web shape, or multiplicity-heavy tables) to (pk, w) —
-    // 24 vs 32 B.
+    // (pk) — 16 vs 24 B — and the weighted row (multiplicity-heavy
+    // tables) to (pk, w) — 24 vs 32 B.
     val packExchange = packedVote && srcMin >= 0L && srcMax < (1L << 32)
-    // enter the loop at the loop width (see PageRank.init — a session-width
-    // init otherwise forces a contrib re-exchange every superstep)
-    val init = loopWidth.fold(init0)(w => init0.repartition(w, $"id"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
       // P6 UNKNOWN filter: unlabeled vertices contribute nothing
       val labels = state.filter($"label".isNotNull).select($"id", $"label")
-      val joined = saltPlan match {
-        case Some(p) => graft.graph.SkewJoin.joinState(p, labels, "id")
-        case None =>
-          packed.join(Superstep.shj(labels), packed("dst") === labels("id"))
-      }
+      val joined = side.gather(labels)
       // unit multiplicities ⇒ w is constant 1: keep it out of the exchange
       val gather =
         if (unitW) joined.select($"src", $"label")
@@ -323,17 +268,19 @@ object LabelPropagation {
           counted.groupBy($"src")
             .agg(max(struct($"cnt", (-$"label").as("neg"))).as("m"))
             .select($"src".as("id"), (-$"m.neg").as("vote"))
-      state.as("s").join(Superstep.shj(votes.as("v")), Seq("id"), "left_outer")
+      // plain column names, no `state.as(...)` alias: the aliased state's
+      // self-join copy kept a stale hashpartitioning(id), which re-exchanged
+      // the state every superstep (three stages instead of gather + apply)
+      val label = when($"seeded" === true, $"label")
+        .otherwise(coalesce($"vote", $"label"))
+      state.join(Superstep.shj(votes), Seq("id"), "left_outer")
         .select(
           $"id",
-          when($"s.seeded" === true, $"s.label")
-            .otherwise(coalesce($"v.vote", $"s.label")).as("label"),
-          $"s.seeded".as("seeded"),
+          label.as("label"),
+          $"seeded",
           // changed ⇔ new label differs from previous (UNKNOWN = null never
           // equals a real label; labels are ≥ 0 so -1 is a safe sentinel)
-          (coalesce(when($"s.seeded" === true, $"s.label")
-              .otherwise(coalesce($"v.vote", $"s.label")), lit(-1L)) =!=
-            coalesce($"s.label", lit(-1L))).as("_chg"))
+          (coalesce(label, lit(-1L)) =!= coalesce($"label", lit(-1L))).as("_chg"))
     }
 
     // input identity for checkpoint manifests: adjacency ⊕ seeds (computed
@@ -345,19 +292,17 @@ object LabelPropagation {
     // to the weighted representation's, so manifests stay interchangeable
     val inputFp = cfg.checkpointDir.map { _ =>
       val edgeRows =
-        if (unitW) packed.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
-        else packed.select($"src", $"dst", $"w")
+        if (unitW) side.edges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
+        else side.edges
       ConnectedComponents.fingerprint64(edgeRows) ^
         ConnectedComponents.fingerprint64(dedupedSeeds.toDF())
     }
     val res = Superstep.loopResumable(
-      init, step, cfg, algo = "lp", inputFingerprint = inputFp,
-      shuffleWidth = loopWidth)
+      init, side, step, cfg, algo = "lp", inputFingerprint = inputFp)
 
     val labelsOut = res.state.filter($"label".isNotNull)
       .select($"id", $"label").as[VertexLabel]
-    packed.unpersist(blocking = false)
-    saltPlan.foreach(_.hotKeys.unpersist(blocking = false))
+    side.release()
     dedupedSeeds.unpersist(blocking = false)
     LpResult(labelsOut, res.iterations, res.converged, res.stats, edgeCount,
       release = res.release)

@@ -59,51 +59,24 @@ object PageRank {
     // contribution weight per distinct (src,dst): multiplicity / outDegree
     val contribRaw = packed.join(outDeg, "src")
       .select($"src", $"dst", ($"w".cast("double") * (lit(1.0) / $"deg")).as("cw"))
-    // scatter-side hub salting: a src with 10^7 out-edges would pin one
-    // reducer; split it across hubSaltK salted partitions (SkewJoin)
-    val saltPlan: Option[graft.graph.SkewJoin.SaltPlan] =
-      LabelPropagation.saltK(cfg).flatMap(k => graft.graph.SkewJoin.plan(
-        contribRaw, "src", "dst", k, cfg.hubDegreeThreshold))
 
     val vertices = edges.select($"src".as("id"))
       .union(edges.select($"dst".as("id"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val numVertices = vertices.count()
-    // tiny vertex states run the whole loop at a narrower shuffle width
-    // (Superstep.autoWidth — measured 2.3× at 2K vertices); the contrib
-    // table is pre-partitioned at the SAME width so the gather join stays
-    // co-partitioned and exchange-free. The salted path keeps the session
-    // width (hub skew implies a graph far above the tiny-state branch).
-    val loopWidth = if (saltPlan.isDefined) None
-      else Superstep.autoWidth(spark, numVertices)
-    val contrib = saltPlan.map(_.salted).getOrElse {
-      val byCfg = loopWidth match {
-        case Some(w) => contribRaw.repartition(w, $"src")
-        case None => contribRaw.repartition($"src")
-      }
-      byCfg.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    contrib.count()
+    // contributions scatter out of src: the edge side is keyed by src (a
+    // src with 10^7 out-edges is salted across partitions)
+    val side = Superstep.edgeSide(contribRaw, "src", cfg)(numVertices)
     packed.unpersist(blocking = false)
 
-    // after Pregel superstep 0 (initial message to every vertex). The init
-    // state must ENTER the loop at the loop width: a session-width state
-    // otherwise propagates its partitioning through every apply join (the
-    // join side that already satisfies the distribution wins), forcing a
-    // re-exchange of the loop-width contrib table every superstep.
-    val init0: DataFrame = vertices.select(
+    // after Pregel superstep 0 (initial message to every vertex)
+    val init: DataFrame = vertices.select(
       $"id", lit(resetProb).as("rank"), lit(resetProb).as("delta"))
-    val init = loopWidth.fold(init0)(w => init0.repartition(w, $"id"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
       val frontier = (if (iter == 0) state else state.filter($"_chg"))
         .filter($"delta" > tol).select($"id", $"delta")
-      val scattered = saltPlan match {
-        case Some(p) => graft.graph.SkewJoin.joinState(p, frontier, "id")
-        case None =>
-          contrib.join(Superstep.shj(frontier), contrib("src") === frontier("id"))
-      }
-      val msgs = scattered
+      val msgs = side.gather(frontier)
         .groupBy(col("dst").as("id"))
         .agg(sum($"delta" * $"cw").as("msg"))
       state.select($"id", $"rank", $"delta")
@@ -118,10 +91,9 @@ object PageRank {
     }
 
     val inputFp = cfg.checkpointDir.map(_ =>
-      ConnectedComponents.fingerprint64(contrib.select($"src", $"dst", $"cw")))
-    val res = Superstep.loopResumable(init, step,
-      cfg.copy(maxIter = maxIter), algo = "pagerank", inputFingerprint = inputFp,
-      shuffleWidth = loopWidth)
+      ConnectedComponents.fingerprint64(side.edges))
+    val res = Superstep.loopResumable(init, side, step,
+      cfg.copy(maxIter = maxIter), algo = "pagerank", inputFingerprint = inputFp)
 
     // SPARK-18847: scale ranks so they sum to the vertex count
     val rawSum = res.state.agg(sum($"rank")).head().getDouble(0)
@@ -130,8 +102,7 @@ object PageRank {
       .select($"id", ($"rank" * factor).as("rank")).as[VertexRank]
       .persist(StorageLevel.MEMORY_AND_DISK)
     val agg = ranks.agg(max($"rank"), sum($"rank")).head()
-    contrib.unpersist(blocking = false)
-    saltPlan.foreach(_.hotKeys.unpersist(blocking = false))
+    side.release()
     vertices.unpersist(blocking = false)
     // ranks is persisted + materialized above — the loop state behind it
     // can be freed now rather than leaking one retired state per run

@@ -64,58 +64,31 @@ object Paths {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val packedSession = edges.groupBy($"src", $"dst").agg(min($"weight").as("weight"))
-      .repartition($"src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val packedCount = packedSession.count()
-
-    // tiny vertex states run the whole loop at a narrower shuffle width
-    // (Superstep.autoWidth — measured 2.3× at 2K vertices, BENCH.md §9.3);
-    // the adjacency is re-partitioned at the SAME width so the gather join
-    // stays co-partitioned. The vertex count is only derived when the
-    // (already-materialized) edge count is itself small — no extra driver
-    // job at scale. min over doubles is exact (no re-association), so the
-    // result is bit-identical at any width.
-    val loopWidth =
-      if (packedCount <= (1L << 20))
-        Superstep.autoWidth(spark, packedSession.select($"src".as("id"))
-          .union(packedSession.select($"dst".as("id"))).distinct().count())
-      else None
-    val packed = loopWidth match {
-      case Some(w) =>
-        val p = packedSession.repartition(w, $"src")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        packedSession.unpersist(blocking = false)
-        p
-      case None => packedSession
-    }
+    // min over doubles is exact (no re-association), so the result is
+    // bit-identical at any loop width or salting
+    val side = Superstep.edgeSide(
+      edges.groupBy($"src", $"dst").agg(min($"weight").as("weight")), "src", cfg)(
+      edges.select($"src").union(edges.select($"dst")).distinct().count())
 
     // DENSE state (one row per vertex, +∞ = unreached — the reference's
     // sentinel, `sssp_graphx_shell.scala:27`): keeps the apply join
     // left-outer so the state's partitioning survives each superstep (a
     // full-outer join on a grow-as-reached state would force two state
     // re-exchanges per superstep — see LabelPropagation).
-    def init: DataFrame = {
-      val vertices = packed.select($"src".as("id"))
-        .union(packed.select($"dst".as("id")))
+    def init: DataFrame =
+      side.edges.select($"src".as("id"))
+        .union(side.edges.select($"dst".as("id")))
         .union(spark.range(1).select(lit(source).as("id"))) // isolated source
         .distinct()
-      val st = vertices.select(
-        $"id",
-        when($"id" === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"))
-      // enter the loop at the loop width (see PageRank.init — a
-      // session-width init otherwise forces a re-exchange every superstep)
-      loopWidth.fold(st)(w => st.repartition(w, $"id"))
-    }
+        .select($"id",
+          when($"id" === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"))
 
     def step(state: DataFrame, iter: Int): DataFrame = {
       val frontier =
         (if (iter == 0) state.filter($"dist" < Double.PositiveInfinity)
          else state.filter($"_chg")).select($"id", $"dist")
-      val msgs = packed
-        .join(Superstep.shj(frontier), packed("src") === frontier("id"))
-        .groupBy(packed("dst").as("id"))
+      val msgs = side.gather(frontier)
+        .groupBy($"dst".as("id"))
         .agg(min($"dist" + $"weight").as("m"))
       state.select($"id", $"dist")
         .join(Superstep.shj(msgs), Seq("id"), "left_outer")
@@ -129,16 +102,16 @@ object Paths {
     // (a different source is a different run over the same table — the
     // plain id would cancel against nothing, so it goes through splitmix64)
     val inputFp = cfg.checkpointDir.map(_ =>
-      ConnectedComponents.fingerprint64(packed.toDF()) ^
+      ConnectedComponents.fingerprint64(side.edges) ^
         graft.functions.SplitMix64Expr.mix(source))
-    val res = Superstep.loopResumable(init, step, cfg, algo = algo,
-      inputFingerprint = inputFp, shuffleWidth = loopWidth)
+    val res = Superstep.loopResumable(init, side, step, cfg, algo = algo,
+      inputFingerprint = inputFp)
     // absent-row output contract: unreachable vertices are not emitted
     val dists = res.state.filter($"dist" < Double.PositiveInfinity)
       .select($"id", $"dist").as[VertexDist]
       .persist(StorageLevel.MEMORY_AND_DISK)
     val agg = dists.agg(count(lit(1)), max($"dist")).head()
-    packed.unpersist(blocking = false)
+    side.release()
     PathResult(dists, res.iterations, agg.getLong(0),
       if (agg.isNullAt(1)) 0.0 else agg.getDouble(1), res.stats, res.converged,
       release = res.release)

@@ -3,7 +3,9 @@ package graft.algo
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.fs.Path
+import graft.graph.SkewJoin
 import java.nio.charset.StandardCharsets
 
 /** Generic bulk-synchronous superstep driver shared by every iterative
@@ -37,7 +39,11 @@ import java.nio.charset.StandardCharsets
   *    evolving state side; shuffled-hash over sort-merge — per-superstep
   *    re-sorts are pure waste against a hash-partitioned cached state) are
   *    scoped to a cloned child session, NOT mutated on the caller's session,
-  *    so concurrent loops / relational queries never race on global conf.
+  *    so concurrent loops / relational queries never race on global conf
+  *    ([[inLoopScope]], shared with star CC's rounds);
+  *  - the edge side is partitioned, sized, salted and persisted ONCE per
+  *    run ([[edgeSide]]), and every algorithm's gather is its one join
+  *    ([[EdgeSide.gather]]).
   *
   * Per-iteration phase windows (reference evidence style,
   * `runtime_metrics.py:48-118`): a SparkListener attributes the superstep
@@ -177,46 +183,90 @@ object Superstep {
     }
   }
 
-  /** Loop shuffle width for a vertex state of `numKeys` rows. Measured
-    * (interleaved same-JVM, BENCH.md §9): at 2K vertices an 8-way loop runs
-    * the whole 75-superstep PageRank 2.3× faster than the 32-way session
-    * width (median superstep 180 ms vs 510 ms — task scheduling dominates
-    * tiny states), while at 100K vertices 32-way is ~1.17× faster than
-    * 8-way and at ≥4M the session width wins outright. Session width
-    * therefore stands unless the state is tiny. A 100 TB deployment never
-    * triggers the small branch (its states are billions of rows); this is
-    * purely the small-graph fixed-cost guard.
+  /** A loop's edge side, placed once by [[edgeSide]]: the persisted
+    * adjacency partitioned by its join `key` (and by a salt column when hub
+    * keys are hot), the loop's shuffle `width`, and the one gather join
+    * every superstep runs against it.
     */
-  def autoWidth(session: SparkSession, numKeys: Long): Option[Int] = {
-    val sessionWidth = session.conf.get("spark.sql.shuffle.partitions").toInt
-    if (numKeys <= 16384 && sessionWidth > 8) Some(8) else None
+  final class EdgeSide private[Superstep] (
+      persisted: DataFrame,
+      key: String,
+      salt: Option[SkewJoin.SaltPlan],
+      val width: Int) {
+
+    /** The persisted adjacency without its salt column. */
+    val edges: DataFrame = if (salt.isDefined) persisted.drop("_salt") else persisted
+
+    /** Join the edge side with the vertex `state` on `key == state.id`;
+      * output = edge columns ++ state columns minus `id`. Unsalted, the
+      * state is shuffled to the edge partitioning and hash-joined (the edge
+      * side never moves); salted, hot state rows are replicated across the
+      * salted hub partitions ([[SkewJoin.joinState]]). Every downstream
+      * vote/min/sum aggregation is associative, hence salt-oblivious.
+      */
+    def gather(state: DataFrame): DataFrame = salt match {
+      case Some(p) => SkewJoin.joinState(p, state, "id")
+      case None =>
+        persisted.join(shj(state), persisted(key) === state("id")).drop(state("id"))
+    }
+
+    def release(): Unit = {
+      persisted.unpersist(blocking = false)
+      salt.foreach(_.hotKeys.unpersist(blocking = false))
+    }
   }
 
-  /** Run `step` from `init` until the number of changed rows is ≤ `threshold`
-    * or `maxIter` supersteps have completed. `startIter` > 0 resumes
-    * counting from a checkpoint.
+  /** Place a loop's edge side: partition `raw` by `key` (the endpoint the
+    * gather joins the vertex state on), persist and materialize it once.
+    * Keys with more than `cfg.hubDegreeThreshold` rows are salted across
+    * [[SkewJoin.AutoK]] partitions, keyed by a hash of the opposite
+    * endpoint; uniform graphs pay only the one degree scan over the
+    * persisted table, which needs no exchange.
     *
-    * Convergence mirrors `should_continue` (`ow-lp/src/lib.rs:424-426`):
-    * iterate while iterations < maxIter and changed > threshold.
-    *
-    * `inputFingerprint`: recorded in every checkpoint manifest; resume
-    * refuses a manifest whose fingerprint differs (see [[resumeOrInit]]).
+    * Loop shuffle width: measured (interleaved same-JVM, BENCH.md §9) at 2K
+    * vertices an 8-way loop runs the whole 75-superstep PageRank 2.3×
+    * faster than the 32-way session width (median superstep 180 ms vs
+    * 510 ms — task scheduling dominates tiny states), while at 100K
+    * vertices 32-way is ~1.17× faster than 8-way and at ≥4M the session
+    * width wins outright. So states of ≤ 16,384 vertices under a wider
+    * session narrow to 8-way, and the edge side is re-partitioned at that
+    * width so the gather stays co-partitioned and exchange-free. The
+    * `vertexCount` thunk is only forced when the session is wider than 8
+    * and the edge side itself is small (≤ 2^20 rows), so no extra job
+    * appears at scale. Otherwise, and for a salted (hub-skewed, hence big)
+    * graph, the loop runs at the session width.
     */
-  def loop(
-      init: DataFrame,
-      step: Step,
-      maxIter: Int,
-      threshold: Long = 0L,
-      checkpointDir: Option[String] = None,
-      checkpointEvery: Int = 5,
-      startIter: Int = 0,
-      algo: String = "superstep",
-      ratioThreshold: Option[Double] = None,
-      inputFingerprint: Option[Long] = None,
-      shuffleWidth: Option[Int] = None): LoopResult = {
-    require(checkpointEvery > 0, s"checkpointEvery must be positive, got $checkpointEvery")
+  def edgeSide(raw: DataFrame, key: String, cfg: graft.model.RunConfig)(
+      vertexCount: => Long): EdgeSide = {
+    val byKey = raw.repartition(col(key)).persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = byKey.count()
+    val spread = if (key == "src") "dst" else "src"
+    val sessionWidth = raw.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    SkewJoin.plan(byKey, key, spread, SkewJoin.AutoK, cfg.hubDegreeThreshold) match {
+      case Some(p) =>
+        byKey.unpersist(blocking = false)
+        new EdgeSide(p.salted, key, Some(p), sessionWidth)
+      case None
+          if sessionWidth > NarrowWidth && rows <= (1L << 20) && vertexCount <= 16384L =>
+        val narrow = byKey.repartition(NarrowWidth, col(key))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        narrow.count()
+        byKey.unpersist(blocking = false)
+        new EdgeSide(narrow, key, None, NarrowWidth)
+      case None => new EdgeSide(byKey, key, None, sessionWidth)
+    }
+  }
 
-    val session = SparkSession.active
+  private val NarrowWidth = 8
+
+  /** Run `body` in a loop's scope: the loop SQL confs (see the object doc)
+    * on a cloned child session, and a [[PhaseListener]] that collects only
+    * the stages of jobs this thread tags with a fresh loop id — concurrent
+    * loops in one session keep disjoint phase windows.
+    * `width` sets the shuffle width (see [[edgeSide]]).
+    */
+  private[algo] def inLoopScope[T](session: SparkSession, width: Option[Int])(
+      body: (SparkSession, PhaseListener) => T): T = {
     val loopSession = GraftSqlShim.sessionWithConfs(session,
       Seq(
       "spark.sql.adaptive.enabled" -> "false",
@@ -227,152 +277,162 @@ object Superstep {
       // the dominant per-superstep fixed cost at 100K vertices, and fatal
       // to scaling at 4M). The co-partitioned shuffled-hash gather join
       // needs zero exchanges and builds only |partition|-sized hash maps.
-      // Loop shuffle width: the session conf unless the caller passes
-      // `shuffleWidth` (see [[autoWidth]] — tiny states run ~2.3× faster
-      // 8-way; at ≥100K-row states the session width was measured better:
-      // PR 1M edges × 75 steps, 48 s at 8-way vs 41 s at 32-way).
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++
-      shuffleWidth.map(w => "spark.sql.shuffle.partitions" -> w.toString): _*)
-    // every job this loop submits (supersteps, localCheckpoints, durable
-    // checkpoint writes) is tagged with a unique loop id via a thread-local
-    // SparkContext property, and the listener collects ONLY those stages —
-    // concurrent loops in one session keep disjoint phase windows
+      width.map(w => "spark.sql.shuffle.partitions" -> w.toString): _*)
+    // every job the loop submits (supersteps, localCheckpoints, durable
+    // checkpoint writes) is tagged via a thread-local SparkContext property
     val loopId = java.util.UUID.randomUUID().toString
     val listener = new PhaseListener(Some(loopId))
     session.sparkContext.addSparkListener(listener)
     session.sparkContext.setLocalProperty(LoopIdProperty, loopId)
-
-    // initial state: materialized once, lineage truncated
-    var state = GraftSqlShim.bind(loopSession, init).localCheckpoint(eager = true)
-    GraftSqlShim.waitListenerBus(session)
-    listener.drain() // init stages are not superstep phases
-    // frees the blocks backing `state`
-    var releaseBacking: () => Unit = {
-      val b = state; () => b.unpersist(blocking = false)
-    }
-    var iter = startIter
-    var converged = false
-    var stats = List.empty[IterStats]
-
-    val loopTimers = sys.env.contains("SPARK_GRAFT_LOOP_TIMERS")
-    try while (iter < maxIter && !converged) {
-      val t0 = System.nanoTime()
-      // changed/row counts ride the materializing job via observe()
-      // (accumulator-backed, pass-through: partitioning/ordering preserved,
-      // no stage break) — no separate aggregation job per superstep, which
-      // at converged-frontier sizes costs as much as the superstep
-      val obsName = s"superstep_${iter + 1}"
-      val next = GraftSqlShim.bind(loopSession, step(state, iter))
-        .observe(obsName, count(lit(1)).as("rows"),
-          sum(when(col("_chg"), 1L).otherwise(0L)).as("changed"))
-      val tBuilt = System.nanoTime()
-      // force optimization + physical planning + codegen eagerly so the
-      // timer split can attribute plan time separately from job execution
-      // (the job reuses the lazily-cached executedPlan, so this moves cost,
-      // never duplicates it)
-      if (loopTimers) next.queryExecution.executedPlan
-      val tPlanned = System.nanoTime()
-      if (iter == 2 && sys.env.contains("SPARK_GRAFT_EXPLAIN_STEP"))
-        next.explain("formatted") // debug: dump one steady-state superstep plan
-      // tag the materializing job so driver logs / the UI attribute every
-      // stage to its superstep (and stray jobs stand out)
-      session.sparkContext.setJobDescription(s"$algo superstep ${iter + 1}")
-      // THE one job: materializes + localCheckpoints the state, fires the
-      // CollectMetrics accumulator and reads it synchronously — no count()
-      // Aggregate plan, no extra single-task final stage, no Observation
-      // listener-bus round-trip (measured ~0.1 s/superstep of job
-      // scaffolding at converged-frontier sizes, BENCH.md §9)
-      val (view, newRelease, observed) = GraftSqlShim.materializeLocalCheckpointed(next)
-      session.sparkContext.setJobDescription(null)
-      val tCounted = System.nanoTime()
-      val m = observed.getOrElse(obsName, throw new IllegalStateException(
-        s"observed metrics for $obsName missing from the materializing job"))
-      val changed = m.getAs[Any]("changed") match {
-        case null => 0L
-        case v => v.asInstanceOf[Long]
-      }
-      val rows = m.getAs[Any]("rows").asInstanceOf[Long]
-      if (loopTimers) {
-        val tObs = System.nanoTime()
-        System.err.println(f"[loop] iter=${iter + 1} build=${(tBuilt - t0) / 1e6}%.0fms " +
-          f"plan=${(tPlanned - tBuilt) / 1e6}%.0fms " +
-          f"exec=${(tCounted - tPlanned) / 1e6}%.0fms obsGet=${(tObs - tCounted) / 1e6}%.0fms " +
-          s"changed=$changed")
-      }
-      GraftSqlShim.waitListenerBus(session)
-      val phases = listener.drain()
-      if (loopTimers)
-        System.err.println(f"[loop] iter=${iter + 1} total=${(System.nanoTime() - t0) / 1e6}%.0fms")
-      val computeMs = (System.nanoTime() - t0) / 1000000L
-      iter += 1
-
-      // the FULL convergence decision (absolute count, `ow-lp/src/lib.rs:
-      // 424-426`, OR the lpst class-API change-ratio rule, `lpst/src/lib
-      // .rs:484-496`) drives loop exit, the checkpoint-write gate and the
-      // manifest's converged field alike
-      converged = changed <= threshold ||
-        ratioThreshold.exists(r => rows > 0 && changed.toDouble / rows <= r)
-
-      val t1 = System.nanoTime()
-      checkpointDir.foreach { dir =>
-        // state is checkpointed WITH its _chg column: frontier algorithms
-        // need it to resume with the correct active set
-        if (converged || iter % checkpointEvery == 0 || iter >= maxIter) {
-          writeCheckpoint(dir, algo, iter, changed, rows, view, converged,
-            threshold, phases, inputFingerprint)
-          // the parquet write + per-partition count are their own jobs:
-          // drain their stages so the NEXT iteration's phase windows stay
-          // attributed to its own superstep job only
-          GraftSqlShim.waitListenerBus(session)
-          listener.drain()
-        }
-      }
-      val checkpointMs = (System.nanoTime() - t1) / 1000000L
-
-      releaseBacking()
-      state = view
-      releaseBacking = newRelease
-      stats ::= IterStats(iter, changed, rows, computeMs, checkpointMs, phases)
-    } finally {
+    try body(loopSession, listener)
+    finally {
       session.sparkContext.setLocalProperty(LoopIdProperty, null)
       session.sparkContext.removeSparkListener(listener)
     }
-    // rebind the final state to the CALLER's session: downstream one-shot
-    // queries (result aggregations, orderBys, sinks) must plan under the
-    // caller's confs, not the loop-pinned ones (AQE off, broadcast ban)
-    LoopResult(GraftSqlShim.bind(session, state.drop("_chg")),
-      iter - startIter, converged, stats.reverse,
-      release = releaseBacking)
   }
 
-  /** [[loop]] with automatic resume: when `cfg.checkpointDir` holds a
-    * committed manifest, the loop restarts from that state and iteration
-    * (skipping the loop entirely if the manifest says converged); otherwise
-    * it starts from `init`. `cfg.maxIter` counts TOTAL supersteps including
-    * the pre-crash ones, matching the reference's iteration cap semantics.
+  /** Run `step` over the edge side `side` until the number of changed rows
+    * is ≤ `cfg.convergenceThreshold` (or the change ratio is ≤
+    * `cfg.convergenceRatio`) or `cfg.maxIter` supersteps have completed.
+    * The initial state enters the loop hash-partitioned by `id` at the
+    * edge side's width (Spark plans the placement away when `init` already
+    * has it). A state at another width would propagate its partitioning
+    * through every apply join and re-exchange the edge side every
+    * superstep. `init` must not project an alias of `id` (`id AS comp`):
+    * the checkpointed state records only the first of its equivalent
+    * partitionings, the alias's, so superstep 1 would re-exchange it.
+    *
+    * Convergence mirrors `should_continue` (`ow-lp/src/lib.rs:424-426`):
+    * iterate while iterations < maxIter and changed > threshold.
+    *
+    * Automatic resume: when `cfg.checkpointDir` holds a committed manifest,
+    * the loop restarts from that state and iteration (skipping the loop
+    * entirely if the manifest says converged); otherwise it starts from
+    * `init`. `cfg.maxIter` counts TOTAL supersteps including the pre-crash
+    * ones, matching the reference's iteration cap semantics.
+    * `inputFingerprint` is recorded in every checkpoint manifest; resume
+    * refuses a manifest whose fingerprint differs (see [[resumeOrInit]]).
     */
   def loopResumable(
       init: => DataFrame,
+      side: EdgeSide,
       step: Step,
       cfg: graft.model.RunConfig,
       algo: String,
-      inputFingerprint: Option[Long] = None,
-      shuffleWidth: Option[Int] = None): LoopResult = {
-    cfg.checkpointDir match {
-      case None =>
-        loop(init, step, cfg.maxIter, cfg.convergenceThreshold,
-          None, cfg.checkpointEvery, algo = algo,
-          ratioThreshold = cfg.convergenceRatio, shuffleWidth = shuffleWidth)
+      inputFingerprint: Option[Long] = None): LoopResult = {
+    require(cfg.checkpointEvery > 0,
+      s"checkpointEvery must be positive, got ${cfg.checkpointEvery}")
+    val session = SparkSession.active
+    val (start, startIter) = cfg.checkpointDir match {
       case Some(dir) =>
-        val (state, doneIter, converged) = {
-          val spark = SparkSession.active
-          resumeOrInit(spark, dir, init, algo, inputFingerprint)
+        val (state, doneIter, converged) =
+          resumeOrInit(session, dir, init, algo, inputFingerprint)
+        if (converged) return LoopResult(state.drop("_chg"), 0, converged = true, Nil)
+        (state, doneIter)
+      case None => (init, 0)
+    }
+    val placed = start.repartition(side.width, col("id"))
+
+    inLoopScope(session, Some(side.width)) { (loopSession, listener) =>
+      // initial state: materialized once, lineage truncated
+      var state = GraftSqlShim.bind(loopSession, placed).localCheckpoint(eager = true)
+      GraftSqlShim.waitListenerBus(session)
+      listener.drain() // init stages are not superstep phases
+      // frees the blocks backing `state`
+      var releaseBacking: () => Unit = {
+        val b = state; () => b.unpersist(blocking = false)
+      }
+      var iter = startIter
+      var converged = false
+      var stats = List.empty[IterStats]
+
+      val loopTimers = sys.env.contains("SPARK_GRAFT_LOOP_TIMERS")
+      while (iter < cfg.maxIter && !converged) {
+        val t0 = System.nanoTime()
+        // changed/row counts ride the materializing job via observe()
+        // (accumulator-backed, pass-through: partitioning/ordering preserved,
+        // no stage break) — no separate aggregation job per superstep, which
+        // at converged-frontier sizes costs as much as the superstep
+        val obsName = s"superstep_${iter + 1}"
+        val next = GraftSqlShim.bind(loopSession, step(state, iter))
+          .observe(obsName, count(lit(1)).as("rows"),
+            sum(when(col("_chg"), 1L).otherwise(0L)).as("changed"))
+        val tBuilt = System.nanoTime()
+        // force optimization + physical planning + codegen eagerly so the
+        // timer split can attribute plan time separately from job execution
+        // (the job reuses the lazily-cached executedPlan, so this moves cost,
+        // never duplicates it)
+        if (loopTimers) next.queryExecution.executedPlan
+        val tPlanned = System.nanoTime()
+        if (iter == 2 && sys.env.contains("SPARK_GRAFT_EXPLAIN_STEP"))
+          next.explain("formatted") // debug: dump one steady-state superstep plan
+        // tag the materializing job so driver logs / the UI attribute every
+        // stage to its superstep (and stray jobs stand out)
+        session.sparkContext.setJobDescription(s"$algo superstep ${iter + 1}")
+        // THE one job: materializes + localCheckpoints the state, fires the
+        // CollectMetrics accumulator and reads it synchronously — no count()
+        // Aggregate plan, no extra single-task final stage, no Observation
+        // listener-bus round-trip (measured ~0.1 s/superstep of job
+        // scaffolding at converged-frontier sizes, BENCH.md §9)
+        val (view, newRelease, observed) = GraftSqlShim.materializeLocalCheckpointed(next)
+        session.sparkContext.setJobDescription(null)
+        val tCounted = System.nanoTime()
+        val m = observed.getOrElse(obsName, throw new IllegalStateException(
+          s"observed metrics for $obsName missing from the materializing job"))
+        val changed = m.getAs[Any]("changed") match {
+          case null => 0L
+          case v => v.asInstanceOf[Long]
         }
-        if (converged) LoopResult(state.drop("_chg"), 0, converged = true, Nil)
-        else loop(state, step, cfg.maxIter, cfg.convergenceThreshold,
-          Some(dir), cfg.checkpointEvery,
-          startIter = doneIter, algo = algo, ratioThreshold = cfg.convergenceRatio,
-          inputFingerprint = inputFingerprint, shuffleWidth = shuffleWidth)
+        val rows = m.getAs[Any]("rows").asInstanceOf[Long]
+        if (loopTimers) {
+          val tObs = System.nanoTime()
+          System.err.println(f"[loop] iter=${iter + 1} build=${(tBuilt - t0) / 1e6}%.0fms " +
+            f"plan=${(tPlanned - tBuilt) / 1e6}%.0fms " +
+            f"exec=${(tCounted - tPlanned) / 1e6}%.0fms obsGet=${(tObs - tCounted) / 1e6}%.0fms " +
+            s"changed=$changed")
+        }
+        GraftSqlShim.waitListenerBus(session)
+        val phases = listener.drain()
+        if (loopTimers)
+          System.err.println(f"[loop] iter=${iter + 1} total=${(System.nanoTime() - t0) / 1e6}%.0fms")
+        val computeMs = (System.nanoTime() - t0) / 1000000L
+        iter += 1
+
+        // the FULL convergence decision (absolute count, `ow-lp/src/lib.rs:
+        // 424-426`, OR the lpst class-API change-ratio rule, `lpst/src/lib
+        // .rs:484-496`) drives loop exit, the checkpoint-write gate and the
+        // manifest's converged field alike
+        converged = changed <= cfg.convergenceThreshold ||
+          cfg.convergenceRatio.exists(r => rows > 0 && changed.toDouble / rows <= r)
+
+        val t1 = System.nanoTime()
+        cfg.checkpointDir.foreach { dir =>
+          // state is checkpointed WITH its _chg column: frontier algorithms
+          // need it to resume with the correct active set
+          if (converged || iter % cfg.checkpointEvery == 0 || iter >= cfg.maxIter) {
+            writeCheckpoint(dir, algo, iter, changed, rows, view, converged,
+              cfg.convergenceThreshold, phases, inputFingerprint)
+            // the parquet write + per-partition count are their own jobs:
+            // drain their stages so the NEXT iteration's phase windows stay
+            // attributed to its own superstep job only
+            GraftSqlShim.waitListenerBus(session)
+            listener.drain()
+          }
+        }
+        val checkpointMs = (System.nanoTime() - t1) / 1000000L
+
+        releaseBacking()
+        state = view
+        releaseBacking = newRelease
+        stats ::= IterStats(iter, changed, rows, computeMs, checkpointMs, phases)
+      }
+      // rebind the final state to the CALLER's session: downstream one-shot
+      // queries (result aggregations, orderBys, sinks) must plan under the
+      // caller's confs, not the loop-pinned ones (AQE off, broadcast ban)
+      LoopResult(GraftSqlShim.bind(session, state.drop("_chg")),
+        iter - startIter, converged, stats.reverse,
+        release = releaseBacking)
     }
   }
 

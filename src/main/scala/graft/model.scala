@@ -90,17 +90,10 @@ object model {
       // stop when changed / |state| ≤ ratio. None = absolute count only
       // (the reference benchmarks' rule).
       convergenceRatio: Option[Double] = None,
-      damping: Double = 0.85,
-      tolerance: Double = 1e-6,
       checkpointDir: Option[String] = None,
       checkpointEvery: Int = 5,
-      // hub-skew salting for the superstep gather join (graph/SkewJoin):
-      // keys with more than hubDegreeThreshold edge rows are split into
-      // salted partitions. -1 (default) = AUTO: one cheap degree scan at
-      // plan time engages salting (k = SkewJoin.AutoK) only when hot keys
-      // exist, so a naive caller gets skew safety on power-law web graphs
-      // and zero overhead on uniform ones. 0/1 disables; k > 1 forces that
-      // salt factor.
-      hubSaltK: Int = -1,
-      hubDegreeThreshold: Long = 2000000L)
+      // hub-skew salting of the superstep gather (Superstep.edgeSide) is
+      // always automatic: keys with more edge rows than this are salted.
+      // Package-private so specs can reach salting on small graphs.
+      private[graft] val hubDegreeThreshold: Long = 2000000L)
 }

@@ -25,29 +25,6 @@ object ProfileLp {
     val edges = SyntheticGraph.randomEdges(spark, n, 10)
     val seeds = SyntheticGraph.seeds(spark, n)
 
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-      // dump the physical plan of one representative superstep
-      import org.apache.spark.sql.functions._
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val packed = edges.groupBy(col("src"), col("dst"))
-        .agg(count(lit(1)).as("w")).repartition(col("dst")).cache()
-      packed.count()
-      val state = seeds.select(col("node").as("id"), col("label"),
-        lit(true).as("seeded")).localCheckpoint(true)
-      val labels = state.select(col("id"), col("label"))
-      val gather = packed.join(labels, packed("dst") === labels("id"))
-        .select(packed("src"), labels("label"), packed("w"))
-      val votes = gather.groupBy(col("src"))
-        .agg(graft.functions.MajorityVoteAgg.majorityVote(col("label"), col("w")).as("vote"))
-        .select(col("src").as("id"), col("vote"))
-      val applied = state.as("s").join(votes.as("v"), Seq("id"), "full_outer")
-        .select(col("id"),
-          when(col("s.seeded") === true, col("s.label"))
-            .otherwise(coalesce(col("v.vote"), col("s.label"))).as("label"))
-      applied.explain("formatted")
-      spark.stop()
-      return
-    }
     val prOnly = sys.env.contains("SPARK_GRAFT_PR_ONLY")
     val t0 = System.nanoTime()
     val lp = if (prOnly) null else LabelPropagation.run(edges, seeds)

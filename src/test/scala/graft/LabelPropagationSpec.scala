@@ -60,10 +60,9 @@ class LabelPropagationSpec extends SparkSpec {
     (m, res.iterations, res.converged)
   }
 
-  // Salting keeps the weighted (src, label, w) vote on any input: forcing it
-  // with threshold 1 reaches the weighted representation on graphs whose
-  // multiplicities would otherwise take the narrow one.
-  private val saltCfg = RunConfig(hubSaltK = 4, hubDegreeThreshold = 1L)
+  // Threshold 1 salts every gather key with more than one edge row, so the
+  // salted gather runs on graphs far below real hub sizes.
+  private val saltCfg = RunConfig(hubDegreeThreshold = 1L)
 
   private val triangle = Seq[(Long, Long)]((0, 1), (0, 2), (2, 0), (2, 1), (1, 0), (1, 2))
 
@@ -272,15 +271,18 @@ class LabelPropagationSpec extends SparkSpec {
     // ring edges are distinct by construction → the narrow (w-less) vote
     // path engages; appending one duplicated edge (multiplicity 2, 0.07%
     // of rows — inside the 1% near-unit gate) must still weight that vote
-    // twice via the setup-time row expansion. The salted run keeps the
-    // weighted vote on the same multigraph.
+    // twice via the setup-time row expansion. Tripling every edge (Σw =
+    // 3 × rows) takes the weighted vote and scales every vote uniformly, so
+    // each majority and tie is unchanged. The salted gather takes the
+    // narrow vote on the same multigraph.
     val ring = (0L until 500L).flatMap(i =>
       Seq(1L, 2L, 3L).map(o => (i, (i + o) % 500)))
     val withDup = ring ++ Seq((7L, 9L))
     val seeds = Map(0L -> 100L, 250L -> 300L)
     val narrow = lpShifted(withDup, seeds)
-    val weighted = lpShifted(withDup, seeds, cfg = saltCfg)
+    val weighted = lpShifted(Seq.fill(3)(withDup).flatten, seeds)
     narrow shouldBe weighted
+    lpShifted(withDup, seeds, cfg = saltCfg) shouldBe narrow
     narrow._1 shouldBe lpOracle(500, withDup, seeds)
   }
 
@@ -292,14 +294,15 @@ class LabelPropagationSpec extends SparkSpec {
     val seeds = spark.createDataset(seedMap.toSeq.map { case (k, v) => Seed(k, v) })
     val cfg = model.RunConfig(
       checkpointDir = Some(dir), checkpointEvery = 1, maxIter = 2)
-    // write checkpoints under the narrow representation, stop unconverged
+    // write checkpoints under the narrow (expanded-row) representation,
+    // stop unconverged
     val first = LabelPropagation.run(edges, seeds, cfg)
     first.converged shouldBe false
     first.release()
-    // resume under the WEIGHTED (salted) representation: the manifest
-    // fingerprint is computed over the re-grouped logical (src,dst,w)
-    // multigraph, so the two physical representations must accept each
-    // other's checkpoints
+    // resume under the salted edge side: the manifest fingerprint is
+    // computed over the re-grouped logical (src,dst,w) multigraph without
+    // the salt column, so both physical layouts must accept each other's
+    // checkpoints
     val resumed = LabelPropagation.run(edges, seeds,
       saltCfg.copy(checkpointDir = Some(dir), checkpointEvery = 1))
     resumed.converged shouldBe true
@@ -359,15 +362,16 @@ class LabelPropagationSpec extends SparkSpec {
   }
 
   test("packed exchange under forced salting (weighted vote row)") {
-    // hub-skew graphs keep the weighted vote (salted adjacency carries w);
-    // the packed exchange ships (pk, w) there for ids < 2^32 and the
-    // (src, label, w) pair row above; both agree with the unsalted run
+    // every edge doubled (Σw = 2 × rows) takes the weighted vote and
+    // scales every vote uniformly; salted, the packed exchange ships
+    // (pk, w) for ids < 2^32 and the (src, label, w) pair row above; both
+    // agree with the unsalted run of the single edges
     val (edges, seeds) = tieHeavy
     val plain = lpShifted(edges, seeds)
     plain._1 shouldBe lpOracle(160, edges, seeds)
     for (off <- Seq(0L, 1L << 31, 1L << 32))
       withClue(s"id offset $off: ") {
-        lpShifted(edges, seeds, idOff = off, cfg = saltCfg) shouldBe plain
+        lpShifted(edges ++ edges, seeds, idOff = off, cfg = saltCfg) shouldBe plain
       }
   }
 }

@@ -6,9 +6,9 @@ import graft.gen.SyntheticGraph
 import graft.oracle.SerialOracles
 import org.apache.spark.sql.functions.round
 
-/** The tiny-state narrow shuffle width (Superstep.autoWidth + the per-algo
-  * loopWidth wiring) must produce results identical to the session-width
-  * loop — it is a performance choice, never a semantic one.
+/** The tiny-state narrow shuffle width (chosen by Superstep.edgeSide) must
+  * produce results identical to the session-width loop — it is a
+  * performance choice, never a semantic one.
   */
 class LoopWidthSpec extends SparkSpec {
   import spark.implicits._
@@ -16,13 +16,22 @@ class LoopWidthSpec extends SparkSpec {
   private def edgeDs(edges: Seq[(Long, Long)]) =
     spark.createDataset(edges.map { case (s, d) => Edge(s, d) })
 
-  test("autoWidth: tiny states narrow to 8-way only under a wider session") {
-    Superstep.autoWidth(spark, 2000L) shouldBe None // test session is 8-way
+  test("edgeSide: tiny states narrow to 8-way only under a wider session") {
+    val path = edgeDs((0L until 40L).map(i => (i, i + 1))).toDF()
+    def width(cfg: RunConfig, vertices: => Long): (Int, Int) = {
+      val side = Superstep.edgeSide(path, "src", cfg)(vertices)
+      try (side.width, side.edges.rdd.getNumPartitions) finally side.release()
+    }
+    // the test session is 8-way: the vertex count is never asked for
+    width(RunConfig(), fail("vertex count forced under an 8-way session")) shouldBe
+      (8, 8)
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try {
-      Superstep.autoWidth(spark, 2000L) shouldBe Some(8)
-      Superstep.autoWidth(spark, 16384L) shouldBe Some(8)
-      Superstep.autoWidth(spark, 16385L) shouldBe None // big state: session width
+      width(RunConfig(), 2000L) shouldBe (8, 8)
+      width(RunConfig(), 16384L) shouldBe (8, 8)
+      width(RunConfig(), 16385L) shouldBe (32, 32) // big state: session width
+      // hot keys are salted at the session width
+      width(RunConfig(hubDegreeThreshold = 0L), 41L) shouldBe (32, 32)
     } finally spark.conf.set("spark.sql.shuffle.partitions", "8")
   }
 
@@ -51,10 +60,10 @@ class LoopWidthSpec extends SparkSpec {
       out
     }
 
-    val at8 = fps() // session width 8: autoWidth declines, loop runs 8-way anyway
+    val at8 = fps() // session width 8: edgeSide keeps it, loop runs 8-way anyway
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     val at32 =
-      try fps() // tiny state: autoWidth narrows the whole loop back to 8-way
+      try fps() // tiny state: edgeSide narrows the whole loop back to 8-way
       finally spark.conf.set("spark.sql.shuffle.partitions", "8")
     at32 shouldBe at8
     // and the narrowed CC still matches the serial oracle

@@ -1,12 +1,14 @@
 package graft
 
-import graft.algo.{LabelPropagation, PageRank}
+import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, Paths}
 import graft.gen.SyntheticGraph
 import graft.model._
+import graft.oracle.SerialOracles
 
 /** Hub-skew salting: salted plans must produce identical results to the
   * unsalted ones (labels exact; PageRank within FP-reassociation noise) on
-  * a graph with a hot hub key.
+  * a graph with a hot hub key. Salting is always automatic; the
+  * package-private `hubDegreeThreshold` reaches it on these small graphs.
   */
 class SkewSpec extends SparkSpec {
   import spark.implicits._
@@ -29,7 +31,7 @@ class SkewSpec extends SparkSpec {
     val plain = LabelPropagation.run(ds(hubEdges), seeds)
       .labels.collect().map(v => v.id -> v.label).toMap
     val salted = LabelPropagation.run(ds(hubEdges), seeds,
-      RunConfig(hubSaltK = 4, hubDegreeThreshold = 20))
+      RunConfig(hubDegreeThreshold = 20))
       .labels.collect().map(v => v.id -> v.label).toMap
     salted shouldBe plain
   }
@@ -38,7 +40,7 @@ class SkewSpec extends SparkSpec {
     val plain = PageRank.run(ds(hubEdges))
       .ranks.collect().map(r => r.id -> r.rank).toMap
     val salted = PageRank.run(ds(hubEdges),
-      cfg = RunConfig(hubSaltK = 4, hubDegreeThreshold = 20))
+      cfg = RunConfig(hubDegreeThreshold = 20))
       .ranks.collect().map(r => r.id -> r.rank).toMap
     salted.keySet shouldBe plain.keySet
     salted.foreach { case (k, v) => v shouldBe plain(k) +- 1e-9 }
@@ -59,13 +61,13 @@ class SkewSpec extends SparkSpec {
         .map { case (s, d) => Edge(s, d) })
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
     SkewJoin.plan(uniform, "dst", "src", SkewJoin.AutoK, 1000) shouldBe None
-    // end-to-end: auto (default cfg + low threshold) == explicitly disabled
+    // end-to-end: a low threshold (hub salted) == the default one (no
+    // key reaches 2M rows, nothing salted)
     val seeds = spark.createDataset(Seq(Seed(0L, 100L), Seed(7L, 300L)))
     val auto = LabelPropagation.run(ds(hubEdges), seeds,
-      RunConfig(hubDegreeThreshold = 20)) // hubSaltK stays -1 = auto
+      RunConfig(hubDegreeThreshold = 20))
       .labels.collect().map(v => v.id -> v.label).toMap
-    val off = LabelPropagation.run(ds(hubEdges), seeds,
-      RunConfig(hubSaltK = 1))
+    val off = LabelPropagation.run(ds(hubEdges), seeds)
       .labels.collect().map(v => v.id -> v.label).toMap
     auto shouldBe off
   }
@@ -77,8 +79,27 @@ class SkewSpec extends SparkSpec {
     val plain = LabelPropagation.run(ds(edges), seeds)
       .labels.collect().map(v => v.id -> v.label).toMap
     val salted = LabelPropagation.run(ds(edges), seeds,
-      RunConfig(hubSaltK = 8, hubDegreeThreshold = 1000))
+      RunConfig(hubDegreeThreshold = 1000))
       .labels.collect().map(v => v.id -> v.label).toMap
     salted shouldBe plain
+  }
+
+  test("CC and SSSP: salted == SerialOracles on a hub graph") {
+    val vertices = hubEdges.flatMap { case (s, d) => Seq(s, d) }.distinct
+    // CC's doubled edge side is keyed by src: the hub holds 310+ rows
+    val cc = ConnectedComponents.run(ds(hubEdges), RunConfig(
+      maxIter = Int.MaxValue, hubDegreeThreshold = 20))
+    cc.components.collect().map(c => c.id -> c.component).toMap shouldBe
+      SerialOracles.connectedComponents(vertices, hubEdges)
+    cc.release()
+    // SSSP's edge side is keyed by src too: the hub's 10 out-edges (plus
+    // background) exceed threshold 5
+    val weighted = hubEdges.map { case (s, d) => (s, d, ((s + d) % 5 + 1).toDouble) }
+    val sssp = Paths.sssp(
+      spark.createDataset(weighted.map { case (s, d, w) => WEdge(s, d, w) }), 0L,
+      RunConfig(maxIter = Int.MaxValue, hubDegreeThreshold = 5))
+    sssp.dists.collect().map(v => v.id -> v.dist).toMap shouldBe
+      SerialOracles.sssp(vertices, weighted, 0L).collect { case (v, Some(d)) => v -> d }
+    sssp.release()
   }
 }
