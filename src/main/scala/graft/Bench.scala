@@ -167,7 +167,7 @@ object Bench {
     results += "cc_star_path1m" -> ccStar.sec
     extras += "cc_star_path1m_rounds" -> ccStar.value.iterations.toString
     extras += "cc_star_path1m_components" -> ccStar.value.componentCount.toString
-    // star rounds now carry phase windows (star0..starN per round)
+    // star rounds carry phase windows (stage0..stageN per round)
     val starStats = ccStar.value.stats
     extras += "cc_star_med_round_ms" ->
       f"${median(starStats.map(_.computeMs))}%.0f"
@@ -210,9 +210,9 @@ object Bench {
     val lshListener = new Superstep.PhaseListener
     spark.sparkContext.addSparkListener(lshListener)
     val embLsh = try {
-      lshListener.drainAs("warm") // discard cache-build stages
+      lshListener.drain() // discard cache-build stages
       val t = timedBest(Dedup.embeddingNearDupsLsh(emb, embDim, 0.40).count())
-      val bytes = lshListener.drainAs("lsh").map(_.shuffleWriteBytes).sum
+      val bytes = lshListener.drain().map(_.shuffleWriteBytes).sum
       extras += "embedding_lsh_shuffle_write_mb" ->
         f"${bytes / 1e6 / math.max(1, reps)}%.1f"
       t

@@ -84,151 +84,82 @@ object ConnectedComponents {
     *    minimum of its neighbourhood (incl. itself)
     *  - small-star: every node and its smaller neighbours re-point at that
     *    minimum — after large-star all edges already point large→small.
-    * Convergence: the (distinct) edge multiset is a fixpoint — detected by
-    * an order-insensitive xxhash64 XOR fingerprint + count on the persisted
-    * set (one tiny agg job per round on cached data).
+    * Rounds run through [[Superstep.drive]], the vertex loops' driver: the
+    * round's edge set carries no `_chg` column, so the loop ends when the
+    * (distinct) edge set is a fixpoint — its order-insensitive xxhash64 XOR
+    * fingerprint and row count, observed on the round's one materializing
+    * job, repeat the previous round's.
     */
   def runStar(edges: Dataset[Edge], maxRounds: Int = 100,
       cfg: RunConfig = RunConfig()): CcResult = {
     val spark = edges.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.GraftSqlShim
 
-    // rounds run in the loop scope (broadcast ban, shuffled-hash
-    // preference, AQE off, phase listener): with caller-default confs the
-    // sub-threshold minsL/minsS aggregates are collected to the driver and
-    // re-broadcast EVERY round — the documented per-superstep trap,
-    // measured as ~4.8 s/round of driver fixed cost on a 1M-edge path graph
-    Superstep.inLoopScope(spark, None) { (loopSession, listener) =>
-      val vertices = edges.select($"src".as("id"))
-        .union(edges.select($"dst".as("id"))).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // u32-id graphs pack each round's two distinct() exchanges onto ONE
-      // long pk=(u<<32)|v — 16 vs 24 B of UnsafeRow per edge on the two
-      // biggest per-round exchanges (same recipe as LP's packExchange;
-      // bijective for ids < 2^32, so the distinct sets are identical).
-      val idB = vertices.agg(
-        coalesce(min($"id"), lit(0L)), coalesce(max($"id"), lit(0L))).head()
-      val packStar = idB.getLong(0) >= 0L && idB.getLong(1) < (1L << 32)
-      def distinctEdges(df: DataFrame): DataFrame =
-        if (!packStar) df.distinct()
-        else df.select((shiftleft($"u", 32) + $"v").as("pk")).distinct()
-          .select(shiftrightunsigned($"pk", 32).as("u"),
-            $"pk".bitwiseAND(lit((1L << 32) - 1)).as("v"))
+    val vertices = edges.select($"src".as("id"))
+      .union(edges.select($"dst".as("id"))).distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // u32-id graphs pack each round's two distinct() exchanges onto ONE
+    // long pk=(u<<32)|v — 16 vs 24 B of UnsafeRow per edge on the two
+    // biggest per-round exchanges (same recipe as LP's packExchange;
+    // bijective for ids < 2^32, so the distinct sets are identical).
+    val idB = vertices.agg(
+      coalesce(min($"id"), lit(0L)), coalesce(max($"id"), lit(0L))).head()
+    val packStar = idB.getLong(0) >= 0L && idB.getLong(1) < (1L << 32)
+    def distinctEdges(df: DataFrame): DataFrame =
+      if (!packStar) df.distinct()
+      else df.select((shiftleft($"u", 32) + $"v").as("pk")).distinct()
+        .select(shiftrightunsigned($"pk", 32).as("u"),
+          $"pk".bitwiseAND(lit((1L << 32) - 1)).as("v"))
 
-      val initial = edges.select(
-        least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-        .filter($"u" =!= $"v").distinct()
-        .select($"v".as("u"), $"u".as("v")) // point large→small like small-star input
+    val initial = edges.select(
+      least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
+      .filter($"u" =!= $"v").distinct()
+      .select($"v".as("u"), $"u".as("v")) // point large→small like small-star input
 
-      // input identity = the canonical undirected distinct edge set (raw
-      // `edges` would let duplicate rows cancel in the XOR fold)
-      val inputFp = cfg.checkpointDir.map(_ => fingerprint64(initial.toDF()))
-      val (state0, rounds0, resumedConverged) = cfg.checkpointDir match {
-        case Some(dir) =>
-          Superstep.resumeOrInit(spark, dir, initial.toDF(), "cc_star", inputFp)
-        case None => (initial.toDF(), 0, false)
-      }
-
-      var g = GraftSqlShim.bind(loopSession, state0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      var backing = g // owns the persisted blocks behind the current view
-      var rounds = rounds0
-      var converged = resumedConverged
-      var fp = if (converged) (0L, 0L) else fingerprintAndCount(g)
-      GraftSqlShim.waitListenerBus(spark)
-      listener.drainAs("init") // init/resume stages are not round phases
-      var stats = List.empty[Superstep.IterStats]
-      while (!converged && rounds < maxRounds) {
-        val t0 = System.nanoTime()
-        // large-star: Γ taken over both directions; m(u) = min(Γ(u) ∪ {u});
-        // every neighbour v > u re-points to m(u)
-        val bidir = g.select($"u", $"v").union(g.select($"v".as("u"), $"u".as("v")))
-        // least AFTER the aggregation: u is the group key, so folding it
-        // into the agg as least(min(v), first(u)) only added a first()
-        // buffer (value + valueSet) to every partial-agg exchange row —
-        // identical m, two fewer shuffled fields
-        val minsL = bidir.groupBy($"u").agg(min($"v").as("mv"))
-          .select($"u", least($"mv", $"u").as("m"))
-        val ls = distinctEdges(bidir.join(Superstep.shj(minsL), "u")
-          .filter($"v" > $"u")
-          .select($"v".as("u"), $"m".as("v"))
-          .filter($"u" =!= $"v"))
-        // small-star: all edges now point large→small; m(u) = min(N(u) ∪ {u});
-        // u and its neighbours except m re-point to m
-        val minsS = ls.groupBy($"u").agg(min($"v").as("m"))
-        val ss = distinctEdges(ls.join(Superstep.shj(minsS), "u")
-          .filter($"v" =!= $"m")
-          .select($"v".as("u"), $"m".as("v"))
-          .union(minsS.select($"u", $"m".as("v")))
-          .filter($"u" =!= $"v"))
-        // persist a FLAT LogicalRDD view of the round result: the IMR the
-        // next round references then carries a one-node cachedPlan (scan of
-        // this round's executed RDD) instead of the whole round plan. A
-        // round plan references the previous state ~12× (bidir twice, both
-        // star joins, the union), so IMR-over-raw-plan nests 12^depth
-        // previous-round references into every plan STRING the driver
-        // renders (SparkPlanInfo/UI) — OOM after a handful of rounds.
-        val ssB = GraftSqlShim.truncatedView(GraftSqlShim.bind(loopSession, ss))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val newFp = fingerprintAndCount(ssB) // materializes the persisted set
-        GraftSqlShim.waitListenerBus(spark)
-        val phases = listener.drainAs("star")
-        // logical-plan truncation every round (each half-step references its
-        // input twice → untruncated plans double per round); a real
-        // localCheckpoint every K rounds bounds the RDD DAG
-        val (view, newBacking) =
-          if ((rounds + 1 - rounds0) % StarLocalCheckpointEvery == 0) {
-            val lc = ssB.localCheckpoint(eager = true)
-            ssB.unpersist(blocking = false)
-            lc.persist(StorageLevel.MEMORY_AND_DISK)
-            (GraftSqlShim.cachedView(lc), lc)
-          } else (GraftSqlShim.cachedView(ssB), ssB)
-        GraftSqlShim.waitListenerBus(spark)
-        listener.drainAs("lc") // discard the localCheckpoint job's stages
-        rounds += 1
-        converged = newFp == fp
-        fp = newFp
-        val computeMs = (System.nanoTime() - t0) / 1000000L
-        val t1 = System.nanoTime()
-        cfg.checkpointDir.foreach { dir =>
-          if (converged || rounds % cfg.checkpointEvery == 0 || rounds >= maxRounds) {
-            Superstep.writeCheckpoint(dir, "cc_star", rounds,
-              changed = if (converged) 0L else newFp._2, rows = newFp._2,
-              state = view, converged = converged, threshold = 0L,
-              phases = phases, inputFingerprint = inputFp)
-            GraftSqlShim.waitListenerBus(spark)
-            listener.drainAs("ckpt") // keep next round's phases clean
-          }
-        }
-        val checkpointMs = (System.nanoTime() - t1) / 1000000L
-        backing.unpersist(blocking = false)
-        g = view
-        backing = newBacking
-        stats ::= Superstep.IterStats(rounds, if (converged) 0 else 1, newFp._2,
-          computeMs, checkpointMs, phases)
-      }
-
-      // final vertex mapping + count plan under the CALLER's session/confs
-      val comps = vertices
-        .join(GraftSqlShim.bind(spark, g).select($"u".as("id"), $"v".as("c")),
-          Seq("id"), "left_outer")
-        .select($"id", coalesce($"c", $"id").as("component"))
-        .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
-      val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
-      backing.unpersist(blocking = false)
-      vertices.unpersist(blocking = false)
-      CcResult(comps, rounds - rounds0, nComp, stats.reverse,
-        release = () => comps.unpersist(blocking = false))
+    // `g` is the driver's flat checkpointed leaf: a round references it
+    // ~12× (bidir twice, both star joins, the union), so a leaf over the
+    // previous round's plan would nest 12^depth earlier rounds into every
+    // plan string the driver renders (OOM after a handful of rounds)
+    def round(g: DataFrame, iter: Int): DataFrame = {
+      // large-star: Γ taken over both directions; m(u) = min(Γ(u) ∪ {u});
+      // every neighbour v > u re-points to m(u)
+      val bidir = g.select($"u", $"v").union(g.select($"v".as("u"), $"u".as("v")))
+      // least AFTER the aggregation: u is the group key, so folding it
+      // into the agg as least(min(v), first(u)) only added a first()
+      // buffer (value + valueSet) to every partial-agg exchange row —
+      // identical m, two fewer shuffled fields
+      val minsL = bidir.groupBy($"u").agg(min($"v").as("mv"))
+        .select($"u", least($"mv", $"u").as("m"))
+      val ls = distinctEdges(bidir.join(Superstep.shj(minsL), "u")
+        .filter($"v" > $"u")
+        .select($"v".as("u"), $"m".as("v"))
+        .filter($"u" =!= $"v"))
+      // small-star: all edges now point large→small; m(u) = min(N(u) ∪ {u});
+      // u and its neighbours except m re-point to m
+      val minsS = ls.groupBy($"u").agg(min($"v").as("m"))
+      distinctEdges(ls.join(Superstep.shj(minsS), "u")
+        .filter($"v" =!= $"m")
+        .select($"v".as("u"), $"m".as("v"))
+        .union(minsS.select($"u", $"m".as("v")))
+        .filter($"u" =!= $"v"))
     }
-  }
 
-  /** Star rounds between real `localCheckpoint`s of the round state. */
-  private val StarLocalCheckpointEvery = 8
+    // input identity = the canonical undirected distinct edge set (raw
+    // `edges` would let duplicate rows cancel in the XOR fold)
+    val inputFp = cfg.checkpointDir.map(_ => fingerprint64(initial))
+    val res = Superstep.drive(initial, None, round,
+      cfg.copy(maxIter = maxRounds, convergenceThreshold = 0L), "cc_star", inputFp)
 
-  private def fingerprintAndCount(df: DataFrame): (Long, Long) = {
-    val r = df.agg(bit_xor(xxhash64(df.columns.map(col): _*)), count(lit(1))).head()
-    (if (r.isNullAt(0)) 0L else r.getLong(0), r.getLong(1))
+    // final vertex mapping + count plan under the CALLER's session/confs
+    val comps = vertices
+      .join(res.state.select($"u".as("id"), $"v".as("c")), Seq("id"), "left_outer")
+      .select($"id", coalesce($"c", $"id").as("component"))
+      .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
+    val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
+    res.release()
+    vertices.unpersist(blocking = false)
+    CcResult(comps, res.iterations, nComp, res.stats,
+      release = () => comps.unpersist(blocking = false))
   }
 
   /** Order-sensitive FNV-64 fingerprint of the component column sorted by

@@ -33,7 +33,7 @@ object Paths {
       maxDist: Double,
       stats: List[Superstep.IterStats],
       converged: Boolean = true,
-      // frees the loop state backing `dists` once the result is consumed
+      // frees the persisted dists once the result is consumed
       release: () => Unit = () => ())
 
   /** BFS levels from `source`; `maxLevels` caps rounds (reference default
@@ -112,8 +112,10 @@ object Paths {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val agg = dists.agg(count(lit(1)), max($"dist")).head()
     side.release()
+    // dists is persisted + materialized — free the loop state behind it
+    res.release()
     PathResult(dists, res.iterations, agg.getLong(0),
       if (agg.isNullAt(1)) 0.0 else agg.getDouble(1), res.stats, res.converged,
-      release = res.release)
+      release = () => dists.unpersist(blocking = false))
   }
 }

@@ -6,7 +6,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.fs.Path
 import graft.graph.SkewJoin
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import java.nio.charset.StandardCharsets
+import scala.collection.immutable.ListMap
+import scala.util.Using
 
 /** Generic bulk-synchronous superstep driver shared by every iterative
   * vertex program (LP / PageRank / CC / BFS / SSSP).
@@ -40,7 +44,7 @@ import java.nio.charset.StandardCharsets
   *    re-sorts are pure waste against a hash-partitioned cached state) are
   *    scoped to a cloned child session, NOT mutated on the caller's session,
   *    so concurrent loops / relational queries never race on global conf
-  *    ([[inLoopScope]], shared with star CC's rounds);
+  *    ([[drive]], the one round driver, shared with star CC's rounds);
   *  - the edge side is partitioned, sized, salted and persisted ONCE per
   *    run ([[edgeSide]]), and every algorithm's gather is its one join
   *    ([[EdgeSide.gather]]).
@@ -96,7 +100,8 @@ object Superstep {
     * column (true on every row whose vertex value changed this step). The
     * previous state still carries its own `_chg` (absent on iteration 0) so
     * frontier-based algorithms can restrict work to changed vertices; the
-    * driver aggregates the new `_chg` to decide convergence.
+    * driver aggregates the new `_chg` to decide convergence. A step without
+    * `_chg` (star CC's edge set) converges at its fixpoint (see [[drive]]).
     */
   type Step = (DataFrame, Int) => DataFrame
 
@@ -163,8 +168,8 @@ object Superstep {
       * The canonical superstep job is gather (map-side scatter + partial
       * agg) then apply (final agg + apply join + state materialization —
       * the toRdd consume rides this stage; there is no separate
-      * count/collect stage). Any other shape falls back to positional
-      * stage names.
+      * count/collect stage). Any other shape (star CC's rounds) falls back
+      * to positional stage names.
       */
     def drain(): List[PhaseWindow] = {
       val raw = buf.synchronized { val r = buf.sortBy(_._1).toList; buf.clear(); r }
@@ -172,14 +177,6 @@ object Superstep {
         if (raw.size == 2) List("gather", "apply")
         else raw.indices.map(i => s"stage$i").toList
       raw.zip(names).map { case ((_, w), n) => w.copy(phase = n) }
-    }
-    /** Drain with positional `prefix0..prefixN` names (loops whose job
-      * shape is not the canonical gather/apply superstep, e.g. star CC
-      * rounds).
-      */
-    def drainAs(prefix: String): List[PhaseWindow] = {
-      val raw = buf.synchronized { val r = buf.sortBy(_._1).toList; buf.clear(); r }
-      raw.zipWithIndex.map { case ((_, w), i) => w.copy(phase = s"$prefix$i") }
     }
   }
 
@@ -259,39 +256,6 @@ object Superstep {
 
   private val NarrowWidth = 8
 
-  /** Run `body` in a loop's scope: the loop SQL confs (see the object doc)
-    * on a cloned child session, and a [[PhaseListener]] that collects only
-    * the stages of jobs this thread tags with a fresh loop id — concurrent
-    * loops in one session keep disjoint phase windows.
-    * `width` sets the shuffle width (see [[edgeSide]]).
-    */
-  private[algo] def inLoopScope[T](session: SparkSession, width: Option[Int])(
-      body: (SparkSession, PhaseListener) => T): T = {
-    val loopSession = GraftSqlShim.sessionWithConfs(session,
-      Seq(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.join.preferSortMergeJoin" -> "false",
-      // NO broadcast joins inside the loop: with a sub-threshold state the
-      // planner would otherwise collect + re-broadcast the evolving frontier
-      // EVERY superstep (serial driver cost growing with |V| — measured as
-      // the dominant per-superstep fixed cost at 100K vertices, and fatal
-      // to scaling at 4M). The co-partitioned shuffled-hash gather join
-      // needs zero exchanges and builds only |partition|-sized hash maps.
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++
-      width.map(w => "spark.sql.shuffle.partitions" -> w.toString): _*)
-    // every job the loop submits (supersteps, localCheckpoints, durable
-    // checkpoint writes) is tagged via a thread-local SparkContext property
-    val loopId = java.util.UUID.randomUUID().toString
-    val listener = new PhaseListener(Some(loopId))
-    session.sparkContext.addSparkListener(listener)
-    session.sparkContext.setLocalProperty(LoopIdProperty, loopId)
-    try body(loopSession, listener)
-    finally {
-      session.sparkContext.setLocalProperty(LoopIdProperty, null)
-      session.sparkContext.removeSparkListener(listener)
-    }
-  }
-
   /** Run `step` over the edge side `side` until the number of changed rows
     * is ≤ `cfg.convergenceThreshold` (or the change ratio is ≤
     * `cfg.convergenceRatio`) or `cfg.maxIter` supersteps have completed.
@@ -320,7 +284,35 @@ object Superstep {
       step: Step,
       cfg: graft.model.RunConfig,
       algo: String,
-      inputFingerprint: Option[Long] = None): LoopResult = {
+      inputFingerprint: Option[Long] = None): LoopResult =
+    drive(init, Some(side.width), step, cfg, algo, inputFingerprint)
+
+  /** The one round driver: resume, loop scope, one materializing job per
+    * round, convergence, checkpoint gate, stats and release, for the
+    * vertex loops ([[loopResumable]]) and star CC's edge-set rounds alike.
+    *
+    * `width`: the vertex loops place the state by `id` at their edge
+    * side's width and run at that shuffle width; `None` (star's edge set,
+    * which has no vertex key) places nothing, runs at the session width,
+    * and its state leaf claims no partitioning (see
+    * [[GraftSqlShim.materializeLocalCheckpointed]]).
+    *
+    * A step whose output carries `_chg` converges by its changed count
+    * (see [[loopResumable]]). A step without it converges when the round's
+    * row count and order-insensitive fingerprint (`bit_xor(xxhash64(row))`)
+    * repeat the previous state's: the state is its own fixpoint test. Both
+    * are observed on the round's one materializing job, and the initial
+    * (or resumed) state's pair on the init job, so a resumed run converges
+    * at the same round as an uninterrupted one. Such a step reports
+    * `changed` = its row count, 0 at the fixpoint.
+    */
+  private[algo] def drive(
+      init: => DataFrame,
+      width: Option[Int],
+      step: Step,
+      cfg: graft.model.RunConfig,
+      algo: String,
+      inputFingerprint: Option[Long]): LoopResult = {
     require(cfg.checkpointEvery > 0,
       s"checkpointEvery must be positive, got ${cfg.checkpointEvery}")
     val session = SparkSession.active
@@ -332,17 +324,38 @@ object Superstep {
         (state, doneIter)
       case None => (init, 0)
     }
-    val placed = start.repartition(side.width, col("id"))
-
-    inLoopScope(session, Some(side.width)) { (loopSession, listener) =>
-      // initial state: materialized once, lineage truncated
-      var state = GraftSqlShim.bind(loopSession, placed).localCheckpoint(eager = true)
+    val loopSession = GraftSqlShim.sessionWithConfs(session,
+      Seq(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.join.preferSortMergeJoin" -> "false",
+      // NO broadcast joins inside the loop: with a sub-threshold state the
+      // planner would otherwise collect + re-broadcast the evolving frontier
+      // EVERY superstep (serial driver cost growing with |V| — measured as
+      // the dominant per-superstep fixed cost at 100K vertices, fatal to
+      // scaling at 4M, and ~4.8 s/round on star CC's 1M-edge path graph).
+      // The co-partitioned shuffled-hash gather join needs zero exchanges
+      // and builds only |partition|-sized hash maps.
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++
+      width.map(w => "spark.sql.shuffle.partitions" -> w.toString): _*)
+    // every job the loop submits (supersteps, durable checkpoint writes) is
+    // tagged via a thread-local SparkContext property, and the listener
+    // collects only those jobs' stages — concurrent loops in one session
+    // keep disjoint phase windows
+    val loopId = java.util.UUID.randomUUID().toString
+    val listener = new PhaseListener(Some(loopId))
+    session.sparkContext.addSparkListener(listener)
+    session.sparkContext.setLocalProperty(LoopIdProperty, loopId)
+    try {
+      val placed = width.fold(start)(w => start.repartition(w, col("id")))
+      // initial state: materialized once, lineage truncated; its observed
+      // pair is the first fixpoint test's "previous state"
+      val (initView, initRelease, initRows, initMeasure) = materializeRound(
+        observeRound(GraftSqlShim.bind(loopSession, placed), "init"), "init", width)
+      var state = initView
+      var releaseBacking = initRelease // frees the blocks backing `state`
+      var previous = (initRows, initMeasure)
       GraftSqlShim.waitListenerBus(session)
       listener.drain() // init stages are not superstep phases
-      // frees the blocks backing `state`
-      var releaseBacking: () => Unit = {
-        val b = state; () => b.unpersist(blocking = false)
-      }
       var iter = startIter
       var converged = false
       var stats = List.empty[IterStats]
@@ -350,14 +363,13 @@ object Superstep {
       val loopTimers = sys.env.contains("SPARK_GRAFT_LOOP_TIMERS")
       while (iter < cfg.maxIter && !converged) {
         val t0 = System.nanoTime()
-        // changed/row counts ride the materializing job via observe()
-        // (accumulator-backed, pass-through: partitioning/ordering preserved,
-        // no stage break) — no separate aggregation job per superstep, which
-        // at converged-frontier sizes costs as much as the superstep
+        // row count and changed count (or fingerprint) ride the
+        // materializing job via observe() (accumulator-backed, pass-through:
+        // partitioning/ordering preserved, no stage break) — no separate
+        // aggregation job per superstep, which at converged-frontier sizes
+        // costs as much as the superstep
         val obsName = s"superstep_${iter + 1}"
-        val next = GraftSqlShim.bind(loopSession, step(state, iter))
-          .observe(obsName, count(lit(1)).as("rows"),
-            sum(when(col("_chg"), 1L).otherwise(0L)).as("changed"))
+        val next = observeRound(GraftSqlShim.bind(loopSession, step(state, iter)), obsName)
         val tBuilt = System.nanoTime()
         // force optimization + physical planning + codegen eagerly so the
         // timer split can attribute plan time separately from job execution
@@ -375,22 +387,16 @@ object Superstep {
         // Aggregate plan, no extra single-task final stage, no Observation
         // listener-bus round-trip (measured ~0.1 s/superstep of job
         // scaffolding at converged-frontier sizes, BENCH.md §9)
-        val (view, newRelease, observed) = GraftSqlShim.materializeLocalCheckpointed(next)
+        val (view, newRelease, rows, measure) = materializeRound(next, obsName, width)
         session.sparkContext.setJobDescription(null)
         val tCounted = System.nanoTime()
-        val m = observed.getOrElse(obsName, throw new IllegalStateException(
-          s"observed metrics for $obsName missing from the materializing job"))
-        val changed = m.getAs[Any]("changed") match {
-          case null => 0L
-          case v => v.asInstanceOf[Long]
-        }
-        val rows = m.getAs[Any]("rows").asInstanceOf[Long]
+        val byChanged = next.columns.contains("_chg")
         if (loopTimers) {
           val tObs = System.nanoTime()
           System.err.println(f"[loop] iter=${iter + 1} build=${(tBuilt - t0) / 1e6}%.0fms " +
             f"plan=${(tPlanned - tBuilt) / 1e6}%.0fms " +
             f"exec=${(tCounted - tPlanned) / 1e6}%.0fms obsGet=${(tObs - tCounted) / 1e6}%.0fms " +
-            s"changed=$changed")
+            s"${if (byChanged) "changed" else "fp"}=$measure")
         }
         GraftSqlShim.waitListenerBus(session)
         val phases = listener.drain()
@@ -401,10 +407,14 @@ object Superstep {
 
         // the FULL convergence decision (absolute count, `ow-lp/src/lib.rs:
         // 424-426`, OR the lpst class-API change-ratio rule, `lpst/src/lib
-        // .rs:484-496`) drives loop exit, the checkpoint-write gate and the
-        // manifest's converged field alike
-        converged = changed <= cfg.convergenceThreshold ||
-          cfg.convergenceRatio.exists(r => rows > 0 && changed.toDouble / rows <= r)
+        // .rs:484-496`; or the fixpoint test) drives loop exit, the
+        // checkpoint-write gate and the manifest's converged field alike
+        converged =
+          if (byChanged) measure <= cfg.convergenceThreshold ||
+            cfg.convergenceRatio.exists(r => rows > 0 && measure.toDouble / rows <= r)
+          else (rows, measure) == previous
+        val changed = if (byChanged) measure else if (converged) 0L else rows
+        previous = (rows, measure)
 
         val t1 = System.nanoTime()
         cfg.checkpointDir.foreach { dir =>
@@ -433,7 +443,29 @@ object Superstep {
       LoopResult(GraftSqlShim.bind(session, state.drop("_chg")),
         iter - startIter, converged, stats.reverse,
         release = releaseBacking)
+    } finally {
+      session.sparkContext.setLocalProperty(LoopIdProperty, null)
+      session.sparkContext.removeSparkListener(listener)
     }
+  }
+
+  /** Observe a round's row count and, when it carries `_chg`, its changed
+    * count, else its order-insensitive fingerprint (see [[drive]]).
+    */
+  private def observeRound(df: DataFrame, name: String): DataFrame =
+    df.observe(name, count(lit(1)).as("rows"),
+      (if (df.columns.contains("_chg")) sum(when(col("_chg"), 1L).otherwise(0L))
+       else bit_xor(xxhash64(df.columns.map(col): _*))).as("measure"))
+
+  /** The round's one job: (view, release, rows, measure) of
+    * [[observeRound]]'s observation `name`; a null sum or fold reads 0.
+    */
+  private def materializeRound(df: DataFrame, name: String, width: Option[Int]) = {
+    val (view, release, observed) =
+      GraftSqlShim.materializeLocalCheckpointed(df, keepPartitioning = width.isDefined)
+    val m = observed.getOrElse(name, throw new IllegalStateException(
+      s"observed metrics for $name missing from the materializing job"))
+    (view, release, m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
   }
 
   /** Resume state from the newest committed checkpoint under `dir`, or fall
@@ -452,15 +484,14 @@ object Superstep {
       expectedAlgo: String,
       inputFingerprint: Option[Long] = None): (DataFrame, Int, Boolean) = {
     latestManifest(spark, dir) match {
-      case Some((iterDone, manifest)) =>
-        val found = "\"algo\":\"([^\"]*)\"".r
-          .findFirstMatchIn(manifest).map(_.group(1))
+      case Some((iterDone, json)) =>
+        val manifest = ManifestJson.readTree(json)
+        val found = Option(manifest.get("algo")).map(_.asText)
         if (!found.contains(expectedAlgo))
           throw new IllegalStateException(
             s"checkpoint at $dir was written by algo '${found.getOrElse("<unknown>")}', " +
             s"not '$expectedAlgo' — refusing to resume from another run's state")
-        val foundFp = "\"input_fp\":(-?\\d+)".r
-          .findFirstMatchIn(manifest).map(_.group(1).toLong)
+        val foundFp = Option(manifest.get("input_fp")).map(_.asLong)
         (inputFingerprint, foundFp) match {
           case (Some(now), Some(then_)) if now != then_ =>
             throw new IllegalStateException(
@@ -470,7 +501,7 @@ object Superstep {
           case _ => ()
         }
         val state = spark.read.parquet(s"$dir/iter=$iterDone/state")
-        val converged = manifest.contains("\"converged\":true")
+        val converged = manifest.path("converged").asBoolean(false)
         (state, iterDone, converged)
       case None => (init, 0, false)
     }
@@ -489,14 +520,9 @@ object Superstep {
       .sorted(Ordering[Int].reverse)
     iters.iterator.flatMap { k =>
       val mf = new Path(s"$dir/iter=$k/manifest.json")
-      if (fs.exists(mf)) {
-        val in = fs.open(mf)
-        try {
-          val bytes = new Array[Byte](fs.getFileStatus(mf).getLen.toInt)
-          in.readFully(bytes)
-          Some(k -> new String(bytes, StandardCharsets.UTF_8))
-        } finally in.close()
-      } else None
+      if (fs.exists(mf)) Some(k -> Using.resource(fs.open(mf))(in =>
+        new String(in.readAllBytes(), StandardCharsets.UTF_8)))
+      else None
     }.nextOption()
   }
 
@@ -512,21 +538,22 @@ object Superstep {
     val perPart = spark.read.parquet(statePath)
       .groupBy(spark_partition_id().as("p")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val phaseJson = phases.map(w =>
-      s"""{"phase":"${w.phase}","wall_ms":${w.wallMs},""" +
-      s""""task_time_ms":${w.taskTimeMs},"shuffle_read_bytes":${w.shuffleReadBytes},""" +
-      s""""shuffle_write_bytes":${w.shuffleWriteBytes}}""").mkString("[", ",", "]")
-    val fpJson = inputFingerprint.map(fp => s""""input_fp":$fp,""").getOrElse("")
-    val manifest =
-      s"""{"algo":"${algo}","iteration":$iteration,"changed":$changed,""" +
-      s""""rows":$rows,"converged":$converged,""" +
-      s""""convergence_threshold":$threshold,$fpJson""" +
-      s""""perPartitionRows":[${perPart.map(_._2).mkString(",")}],""" +
-      s""""phases":$phaseJson}"""
+    val manifest = ListMap[String, Any](
+      "algo" -> algo, "iteration" -> iteration, "changed" -> changed, "rows" -> rows,
+      "converged" -> converged, "convergence_threshold" -> threshold) ++
+      inputFingerprint.map("input_fp" -> _) ++
+      ListMap("perPartitionRows" -> perPart.map(_._2),
+        "phases" -> phases.map(w => ListMap(
+          "phase" -> w.phase, "wall_ms" -> w.wallMs, "task_time_ms" -> w.taskTimeMs,
+          "shuffle_read_bytes" -> w.shuffleReadBytes,
+          "shuffle_write_bytes" -> w.shuffleWriteBytes)))
     val conf = spark.sparkContext.hadoopConfiguration
     val mf = new Path(s"$dir/iter=$iteration/manifest.json")
     val fs = mf.getFileSystem(conf)
     val out = fs.create(mf, true)
-    try out.write(manifest.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    try out.write(ManifestJson.writeValueAsBytes(manifest)) finally out.close()
   }
+
+  /** Reads and writes checkpoint manifests (insertion-ordered keys). */
+  private val ManifestJson = new ObjectMapper().registerModule(DefaultScalaModule)
 }

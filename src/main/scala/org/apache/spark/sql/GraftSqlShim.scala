@@ -10,11 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *  - cloning a session so an iterative driver loop can pin SQL confs
   *    (AQE, join-strategy preference) without mutating — and racing on —
   *    the user's shared session conf
-  *  - truncating a materialized DataFrame's logical plan to a flat
-  *    `LogicalRDD` without the extra materialization job that
-  *    `localCheckpoint(eager = true)` costs
-  *  - materializing superstep state, its local checkpoint and its
-  *    observed metrics in one job.
+  *  - materializing loop state, its local checkpoint and its observed
+  *    metrics in one job, as a flat `LogicalRDD` leaf — the one state
+  *    leaf of every loop, star CC's rounds included.
   */
 object GraftSqlShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -36,55 +34,6 @@ object GraftSqlShim {
   def bind(session: SparkSession, df: DataFrame): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession],
       df.queryExecution.analyzed)
-
-  /** A DataFrame with the same rows as `df` but a flat `LogicalRDD` plan
-    * over `df`'s executed RDD. When `df` is persisted and materialized the
-    * RDD scans its cache, so this truncates the *logical* lineage (whose
-    * analysis cost would otherwise double per superstep — a step references
-    * its input twice) at zero execution cost. The RDD-level DAG still grows
-    * and is truncated separately with a periodic `localCheckpoint`.
-    *
-    * Rows are defensively copied (`InternalRow`s coming out of columnar
-    * cache scans are reused buffers; `LogicalRDD`'s contract expects owned
-    * rows — same as `Dataset.checkpoint`'s internal implementation).
-    */
-  def truncatedView(df: DataFrame): DataFrame = {
-    val cdf = df.asInstanceOf[classic.DataFrame]
-    // LogicalRDD.fromDataset carries the physical plan's outputPartitioning
-    // and ordering into the wrapper (same path Dataset.checkpoint uses), so
-    // downstream co-partitioned joins stay exchange-free.
-    val logical = execution.LogicalRDD.fromDataset(
-      cdf.queryExecution.toRdd.map(_.copy()), cdf, isStreaming = false)
-    classic.Dataset.ofRows(cdf.sparkSession, logical)
-  }
-
-  /** A DataFrame whose logical plan is the flat `InMemoryRelation` backing
-    * a persisted `df` — the same node `CacheManager.useCachedData` would
-    * substitute, so execution scans the cache directly.
-    *
-    * The star-CC round state's leaf: every round references its state
-    * ~12 times, and a `LogicalRDD` leaf breaks `ReuseExchange` for such
-    * plans (self-join deduplication renames the leaf's exprIds, and
-    * `RDDScanExec`'s canonicalization does not normalize its
-    * partitioning/ordering fields, so the renamed twins never compare
-    * equal). An `InMemoryRelation` leaf canonicalizes correctly, keeps the
-    * cached plan's partitioning, and costs no materialization job. Falls
-    * back to [[truncatedView]] when `df` is not registered in the cache
-    * manager.
-    */
-  def cachedView(df: DataFrame): DataFrame = {
-    val cdf = df.asInstanceOf[classic.DataFrame]
-    val analyzed = cdf.queryExecution.analyzed
-    cdf.sparkSession.sharedState.cacheManager.lookupCachedData(cdf) match {
-      // use the relation as-is (not withOutput — our own freshly-persisted
-      // entry always has exprId-identical output); anything else (a
-      // canonically-equal foreign entry) falls back to the RDD view
-      case Some(cd) if cd.cachedRepresentation.output == analyzed.output =>
-        classic.Dataset.ofRows(cdf.sparkSession,
-          stripOrdering(cd.cachedRepresentation))
-      case _ => truncatedView(df)
-    }
-  }
 
   /** Materialize UNPERSISTED loop state `df` as a locally-checkpointed
     * row RDD with ONE job, and return (flat-leaf view, release, observed
@@ -108,15 +57,19 @@ object GraftSqlShim {
     *    round-trip).
     *
     * The returned view is a flat `LogicalRDD` over the checkpointed rows
-    * (stable objects — served without the per-scan copy
-    * [[truncatedView]] must pay on reused-buffer scan output), carrying
-    * the plan's outputPartitioning so co-partitioned loop joins stay
-    * exchange-free. `release` drops the blocks; the view is
+    * (stable objects — served without a per-scan copy). With
+    * `keepPartitioning` it carries the plan's outputPartitioning so
+    * co-partitioned loop joins stay exchange-free. Without, it claims none:
+    * `RDDScanExec`'s canonical form keeps its partitioning's raw attributes,
+    * so the self-join-renamed copies of a partitioned leaf never reuse each
+    * other's exchanges (star CC's rounds: 11 exchanges and 12 stages
+    * instead of 6 + 3 reused and 7). `release` drops the blocks; the view is
     * unrecomputable afterwards (lineage was truncated), matching the
     * loop's retire-previous-state discipline.
     */
   def materializeLocalCheckpointed(
-      df: DataFrame): (DataFrame, () => Unit, Map[String, Row]) = {
+      df: DataFrame,
+      keepPartitioning: Boolean): (DataFrame, () => Unit, Map[String, Row]) = {
     val cdf = df.asInstanceOf[classic.DataFrame]
     val qe = guardedQueryExecution(cdf)
     val rdd = qe.toRdd.map(_.copy())
@@ -126,7 +79,9 @@ object GraftSqlShim {
         while (it.hasNext) it.next()
       }
     }
-    val logical = execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
+    val logical =
+      if (keepPartitioning) execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
+      else execution.LogicalRDD(cdf.logicalPlan.output, rdd)(cdf.sparkSession)
     (classic.Dataset.ofRows(cdf.sparkSession, logical),
       () => { rdd.unpersist(blocking = false); () },
       execution.CollectMetricsExec.collect(qe.executedPlan))
@@ -167,7 +122,7 @@ object GraftSqlShim {
   }
 
   /** Block until the listener bus has delivered all posted events. Loop
-    * phase attribution discards stages of side jobs (init, localCheckpoint,
+    * phase attribution discards stages of side jobs (init, durable
     * checkpoint writes) by draining the listener right after the action —
     * delivery is async, so without this barrier a slow bus could leak a
     * side-job stage into the NEXT superstep's window.
@@ -178,26 +133,4 @@ object GraftSqlShim {
     // which is the pre-barrier behavior
     try session.sparkContext.listenerBus.waitUntilEmpty()
     catch { case _: java.util.concurrent.TimeoutException => () }
-
-  /** Return the relation with `outputOrdering = Nil`. Two Spark 4.1.2 warts
-    * make a non-empty ordering on a self-joined cached relation fatal:
-    * `InMemoryRelation.newInstance` (applied to one branch by
-    * DeduplicateRelations) remints the output exprIds but passes
-    * outputOrdering through UNCHANGED, and `doCanonicalize`/`withOutput`
-    * then remap ordering attributes through an AttributeMap keyed by the
-    * (new) output only — the stale attribute throws NoSuchElementException.
-    * Star-CC round state is self-joined every round, so its leaf must carry
-    * no ordering. The cost is at most an in-stage Sort where an ordering is
-    * required — exactly what the LogicalRDD view paid too (its
-    * canonicalization never exposed ordering).
-    */
-  private def stripOrdering(
-      imr: execution.columnar.InMemoryRelation): execution.columnar.InMemoryRelation = {
-    if (imr.outputOrdering.isEmpty) imr
-    else {
-      val c = imr.copy(outputOrdering = Seq.empty)
-      c.statsOfPlanToCache = imr.statsOfPlanToCache
-      c
-    }
-  }
 }

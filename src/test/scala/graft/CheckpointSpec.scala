@@ -52,6 +52,33 @@ class CheckpointSpec extends SparkSpec {
     resumed.labels.collect().map(v => v.id -> v.label).toMap shouldBe expected
   }
 
+  test("a pretty-printed manifest with the same fields resumes") {
+    val dir = java.nio.file.Files.createTempDirectory("lp-chk7").toString
+    val edges = spark.createDataset(
+      SyntheticGraph.randomEdgesLocal(80, 3, seed = 5L).map { case (s, d) => Edge(s, d) })
+    val seeds = spark.createDataset(
+      SyntheticGraph.seedsLocal(80).toSeq.map { case (n, l) => Seed(n, l) })
+    val cfg = RunConfig(checkpointDir = Some(dir), checkpointEvery = 2)
+    val full = LabelPropagation.run(edges, seeds, cfg)
+    val expected = full.labels.collect().map(v => v.id -> v.label).toMap
+
+    val kept = keepOnlyEarliest(dir)
+    val Some((_, json)) = Superstep.latestManifest(spark, dir)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val pretty = mapper.writerWithDefaultPrettyPrinter()
+      .writeValueAsString(mapper.readTree(json))
+    pretty should include("\"algo\" : \"lp\"") // spaces around the colon
+    // rewritten through Hadoop's local FS, which keeps the checksum file
+    val mf = new org.apache.hadoop.fs.Path(s"$dir/iter=$kept/manifest.json")
+    val out = mf.getFileSystem(spark.sparkContext.hadoopConfiguration).create(mf, true)
+    try out.write(pretty.getBytes("UTF-8")) finally out.close()
+
+    val resumed = LabelPropagation.run(edges, seeds, cfg)
+    resumed.converged shouldBe true
+    resumed.iterations shouldBe full.iterations - kept
+    resumed.labels.collect().map(v => v.id -> v.label).toMap shouldBe expected
+  }
+
   test("resume with a converged manifest skips the loop entirely") {
     val dir = java.nio.file.Files.createTempDirectory("lp-chk2").toString
     val edges = spark.createDataset(Seq(Edge(0, 1), Edge(1, 0)))

@@ -1,10 +1,12 @@
 package graft
 
 import graft.model._
-import graft.algo.{ConnectedComponents, Paths, TriangleCount}
+import graft.algo.{ConnectedComponents, PageRank, Paths, TriangleCount}
 import graft.oracle.SerialOracles
 import graft.gen.SyntheticGraph
 import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.storage.StorageLevel
 
 /** Connected components, triangle count, BFS and SSSP: golden fixtures +
   * differential tests vs the serial oracle, plus a GraphX cross-check for
@@ -155,6 +157,27 @@ class GraphAlgoSpec extends SparkSpec {
         .collect { case (k, Some(v)) => k -> v }
       got.keySet shouldBe oracle.keySet
       got.foreach { case (k, v) => v shouldBe oracle(k) +- 1e-12 }
+    }
+  }
+
+  test("release() unpersists the result dataset of BFS, SSSP, CC, star CC, PR and TC") {
+    val e = edgeDs(SyntheticGraph.randomEdgesLocal(80, 2, seed = 21L))
+    val weighted = e.select($"src", $"dst", lit(2.0).as("weight")).as[WEdge]
+    val bfs = Paths.bfs(e, 0L)
+    val sssp = Paths.sssp(weighted, 0L)
+    val cc = ConnectedComponents.run(e)
+    val star = ConnectedComponents.runStar(e)
+    val pr = PageRank.run(e)
+    val tc = TriangleCount.run(e)
+    Seq[(String, org.apache.spark.sql.Dataset[_], () => Unit)](
+      ("bfs", bfs.dists, bfs.release), ("sssp", sssp.dists, sssp.release),
+      ("cc", cc.components, cc.release), ("star cc", star.components, star.release),
+      ("pr", pr.ranks, pr.release), ("tc", tc.counts, tc.release)).foreach {
+      case (algo, result, release) => withClue(s"$algo: ") {
+        result.storageLevel should not be StorageLevel.NONE
+        release()
+        result.storageLevel shouldBe StorageLevel.NONE
+      }
     }
   }
 }
