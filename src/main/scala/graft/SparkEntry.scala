@@ -453,9 +453,10 @@ object SparkEntry {
     // ranks coincide with node ids. The same independent splitmix64 SQL
     // is therefore the end-to-end oracle for the whole extract+encode
     // pipeline: any regression in href parsing, url resolution or rank
-    // assignment breaks the hash. (Quote/entity/relative-href edge cases
-    // the synthetic pages don't exercise are golden-pinned in
-    // LinkExtractSpec.)
+    // assignment breaks the hash. (Quote, entity, case, word-boundary,
+    // block and malformed-UTF-8 edge cases the synthetic pages don't
+    // exercise are golden-pinned in src/test/scala/graft/LinkExtractSpec,
+    // which also checks the native scans against the former regex passes.)
     "q_extract_edges" -> synthEdgesOracleSql(n = 500, density = 4),
     // byte-identical text extraction (north rule): the extracted text of a
     // synthesized page is a pure function of its index — title token, body

@@ -2,6 +2,7 @@ package graft.extract
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.functions.{HrefsExpr, HtmlTextExpr}
 import graft.model._
 
 /** Deterministic link and text extraction from the pages table
@@ -19,26 +20,24 @@ import graft.model._
   *    fragment-only, `javascript:`, `mailto:` and empty refs dropped.
   *    Duplicate links are PRESERVED (a page linking twice votes twice,
   *    mirroring the reference's duplicate-edge semantics).
-  *  - text: html with `<script>`/`<style>` blocks and all tags removed, the
-  *    five standard entities unescaped, whitespace runs collapsed to single
-  *    spaces, trimmed. Simple by design: the contract is byte-stability,
-  *    and goldens are pinned in LinkExtractSpec.
+  *  - text: html with `<script>`/`<style>` blocks, comments and all tags
+  *    removed, the five standard entities unescaped, whitespace runs
+  *    collapsed to single spaces, trimmed. Simple by design: the contract
+  *    is byte-stability, and goldens are pinned in LinkExtractSpec.
   *
-  * Both run as codegen'd SQL expressions (`regexp_extract_all` etc.), not
-  * Scala UDFs, so they stay inside whole-stage codegen and scale linearly
-  * with input bytes; the href pipeline is `explode`-shaped so a hub page
-  * with 10^4 links fans out into rows, not driver memory.
+  * Each page is scanned by two native codegen'd expressions,
+  * [[graft.functions.HrefsExpr]] and [[graft.functions.HtmlTextExpr]]: one
+  * UTF-8 decode and one hand loop per page instead of a `java.util.regex`
+  * pass per rule, with the regex semantics they replace (LinkExtractSpec
+  * checks them against that formulation on random documents). Resolution
+  * stays relational, and the href pipeline is `explode`-shaped so a hub
+  * page with 10^4 links fans out into rows, not driver memory.
   */
 object LinkExtract {
 
-  private val HrefPattern = """(?i)<a\b[^>]*?\bhref\s*=\s*("([^"]*)"|'([^']*)')"""
-
   /** Raw href attribute values in document order (may be relative). */
-  def hrefsCol(html: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val doubleQ = regexp_extract_all(html.cast("string"), lit(HrefPattern), lit(1))
-    // strip the surrounding quotes (group alternation keeps them)
-    transform(doubleQ, h => regexp_replace(h, "^[\"']|[\"']$", ""))
-  }
+  def hrefsCol(html: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    HrefsExpr.hrefs(html)
 
   /** Resolve an href against the page url: absolute http(s) kept as-is;
     * `//host/x` gets the page's scheme; `/x` joins the page origin; other
@@ -71,22 +70,8 @@ object LinkExtract {
   /** Deterministic text extraction (byte-identical across runs/parallelism;
     * goldens pinned in LinkExtractSpec).
     */
-  def textCol(html: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val s0 = html.cast("string")
-    val noScript = regexp_replace(s0, "(?is)<(script|style)\\b.*?</\\1\\s*>", " ")
-    val noComment = regexp_replace(noScript, "(?s)<!--.*?-->", " ")
-    val noTags = regexp_replace(noComment, "(?s)<[^>]*>", " ")
-    val unescaped = regexp_replace(
-      regexp_replace(
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(noTags, "&lt;", "<"),
-            "&gt;", ">"),
-          "&quot;", "\""),
-        "&#39;", "'"),
-      "&amp;", "&")
-    trim(regexp_replace(unescaped, "\\s+", " "))
-  }
+  def textCol(html: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    HtmlTextExpr.text(html)
 
   /** pages → (url, text) with extracted text. */
   def extractText(pages: DataFrame): DataFrame =

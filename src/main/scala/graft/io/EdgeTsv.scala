@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.TsvEdgeExpr
 import graft.model._
 
 /** Reference-native TSV edge-table reader/writer: lines `src \t dst [\t label]`.
@@ -19,43 +20,18 @@ import graft.model._
   *    the canonical Rust rule; the GraphX shell's keep-first divergence is
   *    deliberately not followed, see SURVEY.md §7.8).
   *
-  * Everything is built from codegen'd `functions._` columns; the only cast
-  * boundary is string→long with permissive null-on-failure (`try_cast`-style
-  * via cast, which yields null for non-numeric under ANSI-off).
+  * Each line is parsed once, by the native [[graft.functions.TsvEdgeExpr]]
+  * under `inline`: integers are strict (`^-?[0-9]{1,18}$`, so "1.5"/"1e3"
+  * do not parse — Rust u32::parse rejects them), and a malformed field is
+  * null, never an error.
   */
 object EdgeTsv {
-
-  private val U32Max = 0xffffffffL
 
   /** Raw parsed lines → (src, dst, label?) DataFrame; label null when absent
     * or invalid. `numNodes` < 0 disables the range filter.
     */
-  def parse(lines: DataFrame, numNodes: Long): DataFrame = {
-    val parts = split(col("value"), "\t")
-    val asLong = (c: org.apache.spark.sql.Column) =>
-      // strict integer syntax only ("1.5"/"1e3" must not parse — Rust
-      // u32::parse rejects them); the regexp gate keeps the cast total even
-      // under ANSI mode, and get() is null-safe out of bounds
-      when(c.rlike("^[0-9]{1,18}$"), c.cast("long"))
-    val srcC = asLong(get(parts, lit(0)))
-    val dstC = asLong(get(parts, lit(1)))
-    val third = get(parts, lit(2))
-    val rawLabel = when(third.rlike("^-?[0-9]{1,18}$"), third.cast("long"))
-    val labelC = when(rawLabel.isNotNull && rawLabel >= 0 && rawLabel <= U32Max, rawLabel)
-    val ranged =
-      if (numNodes >= 0)
-        lines.select(srcC.as("src"), dstC.as("dst"), labelC.as("label"))
-          .filter(col("src").isNotNull && col("dst").isNotNull &&
-            col("src") >= 0 && col("src") <= U32Max &&
-            col("dst") >= 0 && col("dst") <= U32Max &&
-            col("src") < numNodes && col("dst") < numNodes)
-      else
-        lines.select(srcC.as("src"), dstC.as("dst"), labelC.as("label"))
-          .filter(col("src").isNotNull && col("dst").isNotNull &&
-            col("src") >= 0 && col("src") <= U32Max &&
-            col("dst") >= 0 && col("dst") <= U32Max)
-    ranged
-  }
+  def parse(lines: DataFrame, numNodes: Long): DataFrame =
+    lines.select(inline(TsvEdgeExpr.edges(col("value"), numNodes)))
 
   /** Read the edge table from a TSV path. */
   def readEdges(spark: SparkSession, path: String, numNodes: Long = -1L): Dataset[Edge] = {

@@ -65,7 +65,9 @@ object GraftSqlShim {
     * other's exchanges (star CC's rounds: 11 exchanges and 12 stages
     * instead of 6 + 3 reused and 7). `release` drops the blocks; the view is
     * unrecomputable afterwards (lineage was truncated), matching the
-    * loop's retire-previous-state discipline.
+    * loop's retire-previous-state discipline. It goes through
+    * `SparkContext.unpersistRDD`: `RDD.unpersist` on a locally checkpointed
+    * RDD logs a "cannot be recomputed" WARN, one per superstep.
     */
   def materializeLocalCheckpointed(
       df: DataFrame,
@@ -83,7 +85,7 @@ object GraftSqlShim {
       if (keepPartitioning) execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
       else execution.LogicalRDD(cdf.logicalPlan.output, rdd)(cdf.sparkSession)
     (classic.Dataset.ofRows(cdf.sparkSession, logical),
-      () => { rdd.unpersist(blocking = false); () },
+      () => rdd.sparkContext.unpersistRDD(rdd.id, blocking = false),
       execution.CollectMetricsExec.collect(qe.executedPlan))
   }
 

@@ -374,4 +374,44 @@ class LabelPropagationSpec extends SparkSpec {
         lpShifted(edges ++ edges, seeds, idOff = off, cfg = saltCfg) shouldBe plain
       }
   }
+
+  test("an LP run logs no 'locally checkpointed' WARN when it releases its state") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val messages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("lp-rdd-warns", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = messages.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val name = "org.apache.spark.rdd"
+    val logger = new LoggerConfig(name, Level.WARN, false)
+    logger.addAppender(capture, Level.WARN, null)
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
+    def warns = messages.toArray.count(_.toString.contains("locally checkpointed"))
+    try {
+      // the capture sees the WARN that RDD.unpersist logs for such an RDD
+      val probe = spark.sparkContext.parallelize(1 to 10).map(_ + 1)
+      probe.localCheckpoint()
+      probe.count()
+      probe.unpersist()
+      warns shouldBe 1
+      messages.clear()
+      val edges = SyntheticGraph.communityEdgesLocal(120, 4, 0.3, 0.02)
+      val res = LabelPropagation.run(
+        spark.createDataset(edges.map { case (s, d) => Edge(s, d) }),
+        spark.createDataset(Seq(Seed(0, 100), Seed(65, 300))))
+      res.labels.count()
+      res.release()
+      res.iterations should be > 1
+      warns shouldBe 0
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+  }
 }
