@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
 
 /** Two-parallelism scaling evidence for the north rule ("≥0.8 throughput
   * scaling efficiency between N and 4N executors").
@@ -31,13 +31,11 @@ import org.apache.spark.sql.SparkSession
   * (default 4) CONCURRENT `local[N]` child JVMs — separate heaps
   * (`SPARK_GRAFT_EXEC_HEAP`, default 24g) and scratch dirs, i.e. real
   * executor-style isolation on one box (see [[runExecutorsMode]]).
-  * (NOT `sbt runMain`: the default forked mode rebuilds the child command
-  * from java.class.path, which under sbt's in-process runner is the sbt
-  * LAUNCHER classpath, so the child would die with ClassNotFoundException.
-  * `main` fails fast if graft.ScalingBench is not loadable from
-  * java.class.path; set SPARK_GRAFT_SCALE_FORK=0 to run both levels
-  * in-process under sbt.) Prints one JSON line; BENCH.md records the
-  * results.
+  * Every level runs in a child JVM whose command is rebuilt from
+  * java.class.path; `main` fails fast if graft.ScalingBench is not loadable
+  * from it (sbt's in-process runner would hand the child the sbt LAUNCHER
+  * classpath; `scripts/run_main.sh` and the build's forked `runMain` do
+  * not). Prints one JSON line; BENCH.md records the results.
   */
 object ScalingBench {
 
@@ -75,45 +73,40 @@ object ScalingBench {
     } finally spark.stop()
   }
 
-  /** Locale-pinned decimal formatting for every machine-parsed number: the
+  /** Locale-pinned decimal formatting for the printed result lines: the
     * default `f"%.3f"` interpolator is locale-sensitive, and a comma-decimal
-    * locale (e.g. de_DE) would emit `"lp_wall":94,017`, which the
-    * `[0-9.]+` parser silently truncates to 94 — corrupting medians and the
-    * derived efficiency with no error.
+    * locale (e.g. de_DE) would emit `"lp_wall":94,017`.
     */
   private def d(v: Double, places: Int): String =
     s"%.${places}f".formatLocal(java.util.Locale.ROOT, v)
 
   /** One level as a single JSON line (the child → parent protocol of the
-    * forked two-JVM mode, and a replayable record either way).
+    * forked levels, and a replayable record), written and read
+    * with the checkpoint manifests' Jackson mapper.
     */
   private[graft] def levelJson(l: Level): String =
-    s"""{"level":{"cpus":${l.cpus},"edges":${l.edges},""" +
-    s""""lp_iters":${l.lpIters},"lp_wall":${d(l.lpWall, 3)},""" +
-    s""""lp_med_iter":${d(l.lpMedIter, 4)},""" +
-    s""""pr_iters":${l.prIters},"pr_wall":${d(l.prWall, 3)},""" +
-    s""""pr_med_iter":${d(l.prMedIter, 4)},""" +
-    s""""lp_fp":${l.lpFp},"pr_fp":${l.prFp}}}"""
+    graft.algo.Superstep.ManifestJson.writeValueAsString(Map("level" -> ListMap(
+      "cpus" -> l.cpus, "edges" -> l.edges,
+      "lp_iters" -> l.lpIters, "lp_wall" -> l.lpWall, "lp_med_iter" -> l.lpMedIter,
+      "pr_iters" -> l.prIters, "pr_wall" -> l.prWall, "pr_med_iter" -> l.prMedIter,
+      "lp_fp" -> l.lpFp, "pr_fp" -> l.prFp)))
 
-  private def num(json: String, key: String): String =
-    s""""$key":(-?[0-9.]+)""".r.findFirstMatchIn(json).map(_.group(1))
+  private[graft] def parseLevel(json: String): Level = {
+    val level = graft.algo.Superstep.ManifestJson.readTree(json).path("level")
+    def num(key: String) = Option(level.get(key)).filter(_.isNumber)
       .getOrElse(throw new IllegalStateException(s"no $key in level line: $json"))
-
-  private[graft] def parseLevel(json: String): Level = Level(
-    num(json, "cpus").toInt, num(json, "edges").toLong,
-    num(json, "lp_iters").toInt, num(json, "lp_wall").toDouble,
-    num(json, "lp_med_iter").toDouble,
-    num(json, "pr_iters").toInt, num(json, "pr_wall").toDouble,
-    num(json, "pr_med_iter").toDouble,
-    num(json, "lp_fp").toLong, num(json, "pr_fp").toLong)
+    Level(num("cpus").asInt, num("edges").asLong,
+      num("lp_iters").asInt, num("lp_wall").asDouble, num("lp_med_iter").asDouble,
+      num("pr_iters").asInt, num("pr_wall").asDouble, num("pr_med_iter").asDouble,
+      num("lp_fp").asLong, num("pr_fp").asLong)
+  }
 
   /** Run one level in a CHILD JVM (same classpath + JVM flags, env
     * `SPARK_GRAFT_SCALE_LEVEL` selects the core count) and parse its level
-    * line. Default protocol since round 4: a real cluster's N and 4N runs
-    * are separate driver JVMs, and reusing one JVM for both levels tripped
-    * a Spark 4.1.2 session-transition race exactly once (a superstep plan
-    * constructed in the second SparkContext captured a null session and
-    * NPE'd at execute — see GraftSqlShim.materializeLocalCheckpointed's guard).
+    * line. A real cluster's N and 4N runs are separate driver JVMs, and
+    * reusing one JVM for both levels tripped a Spark 4.1.2
+    * session-transition race exactly once (a superstep plan constructed in
+    * the second SparkContext captured a null session and NPE'd at execute).
     * Fresh JVMs per level remove that whole state class; determinism is
     * still asserted via bit-identical cross-JVM result fingerprints.
     */
@@ -236,6 +229,24 @@ object ScalingBench {
       prWall = runs.map(_.prWall).min, prMedIter = runs.map(_.prMedIter).min)
   }
 
+  /** Refuse a `classPath` from which graft.ScalingBench is not loadable:
+    * each level's child JVM is started on it (under sbt's in-process
+    * runner it is the sbt LAUNCHER classpath, and the child would die with
+    * ClassNotFoundException) — caught before paying for a level run.
+    */
+  private[graft] def requireLoadable(classPath: String): Unit = {
+    val loadable = classPath.split(java.io.File.pathSeparatorChar).exists { entry =>
+      new java.io.File(entry, "graft/ScalingBench.class").isFile ||
+      (entry.endsWith(".jar") && {
+        val f = new java.io.File(entry)
+        f.isFile && scala.util.Using(new java.util.jar.JarFile(f))(
+          _.getEntry("graft/ScalingBench.class") != null).getOrElse(false)
+      })
+    }
+    require(loadable, "graft.ScalingBench is not on java.class.path (running " +
+      "under sbt's in-process runner?) — use scripts/run_main.sh graft.ScalingBench")
+  }
+
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val nSmall = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "8").toInt
@@ -251,53 +262,31 @@ object ScalingBench {
       return
     }
 
+    requireLoadable(System.getProperty("java.class.path"))
     val mode = sys.env.getOrElse("SPARK_GRAFT_SCALE_MODE", "threads")
-    val fork = mode == "executors" ||
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_FORK", "1") != "0"
-    if (fork) {
-      // under sbt's in-process runner java.class.path is the sbt LAUNCHER
-      // classpath and the child dies with ClassNotFoundException — catch
-      // that misconfiguration before paying for a level run
-      val cp = System.getProperty("java.class.path")
-        .split(java.io.File.pathSeparatorChar)
-      val loadable = cp.exists { entry =>
-        new java.io.File(entry, "graft/ScalingBench.class").isFile ||
-        (entry.endsWith(".jar") && {
-          val f = new java.io.File(entry)
-          f.isFile && scala.util.Using(new java.util.jar.JarFile(f))(
-            _.getEntry("graft/ScalingBench.class") != null).getOrElse(false)
-        })
-      }
-      require(loadable,
-        "graft.ScalingBench is not on java.class.path (running under sbt's " +
-        "in-process runner?) — use scripts/run_main.sh graft.ScalingBench, " +
-        "or set SPARK_GRAFT_SCALE_FORK=0 to run both levels in this JVM")
-    }
     if (mode == "executors") {
       val workers = sys.env.getOrElse("SPARK_GRAFT_SCALE_WORKERS", "4").toInt
       runExecutorsMode(nSmall, workers, nodes, density, reps)
       return
     }
-    // Forked mode ALTERNATES the levels (N, 4N, N, 4N, …), one rep per
-    // child JVM, instead of running all N reps then all 4N reps: the host
+    // The levels ALTERNATE (N, 4N, N, 4N, …), one rep per child JVM,
+    // instead of running all N reps then all 4N reps: the host
     // drifts 1.4× across hour-scale windows (BENCH.md §10), and with
     // sequential levels that drift lands entirely on whichever level runs
     // last, corrupting the ratio (measured: a fast-window 8-core level +
     // slow-window 32-core level read as eff 0.64 on the same commit that
     // paired at ≥0.8). Adjacent (N, 4N) children share one window, so the
     // min-per-level estimator sees at least one drift-matched pair.
-    val (small, large) = if (fork) {
-      val pairs = (1 to reps).map { r =>
-        val s = runForked(nSmall, nodes, density, 1)
-        val l = runForked(nLarge, nodes, density, 1)
-        val pe = l.combinedTput / (4.0 * s.combinedTput)
-        System.err.println(s"[scaling] pair $r/$reps eff=${d(pe, 3)} " +
-          s"(lp ${d(l.lpTput / (4.0 * s.lpTput), 3)}, " +
-          s"pr ${d(l.prTput / (4.0 * s.prTput), 3)})")
-        (s, l)
-      }
-      (minLevel(pairs.map(_._1)), minLevel(pairs.map(_._2)))
-    } else (runAt(nSmall, nodes, density, reps), runAt(nLarge, nodes, density, reps))
+    val pairs = (1 to reps).map { r =>
+      val s = runForked(nSmall, nodes, density, 1)
+      val l = runForked(nLarge, nodes, density, 1)
+      val pe = l.combinedTput / (4.0 * s.combinedTput)
+      System.err.println(s"[scaling] pair $r/$reps eff=${d(pe, 3)} " +
+        s"(lp ${d(l.lpTput / (4.0 * s.lpTput), 3)}, " +
+        s"pr ${d(l.prTput / (4.0 * s.prTput), 3)})")
+      (s, l)
+    }
+    val (small, large) = (minLevel(pairs.map(_._1)), minLevel(pairs.map(_._2)))
 
     require(small.lpFp == large.lpFp,
       s"LP results differ across parallelism: ${small.lpFp} vs ${large.lpFp}")

@@ -124,38 +124,32 @@ object Superstep {
     */
   def shj(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
-  /** The thread-local SparkContext property that tags every job a loop
-    * submits with its owning loop's id (local properties are inherited by
-    * the submitting thread's jobs only, so concurrent loops on different
-    * driver threads tag disjoint job sets).
+  /** The thread-local SparkContext property that tags a loop's superstep
+    * jobs with its owning loop's id (local properties are inherited by the
+    * submitting thread's jobs only, so concurrent loops on different driver
+    * threads tag disjoint job sets).
     */
   private[graft] val LoopIdProperty = "graft.loop.id"
 
-  /** Collects per-stage windows; drained once per superstep. Stage events
-    * for the materializing job are flushed by an explicit listener-bus
-    * barrier (waitListenerBus) before the drain, so the drain is race-free
-    * for the job it attributes.
-    *
-    * `loopId`: when set, only stages belonging to jobs tagged with this
-    * loop's [[LoopIdProperty]] are collected — a SparkListener is
-    * SparkContext-global, so without the scope two concurrent loops in one
-    * session would cross-pollute each other's phase windows. `None`
-    * collects everything (ad-hoc measurement, e.g. Bench's LSH
-    * shuffle-byte receipt).
+  /** Collects the stage windows of the jobs tagged with `loopId` under
+    * [[LoopIdProperty]]; drained once per superstep. A SparkListener is
+    * SparkContext-global, so the scope keeps two concurrent loops in one
+    * session from cross-polluting each other's phase windows, and untagged
+    * jobs (a loop's init and durable-checkpoint jobs) never enter them.
+    * Stage events for the tagged job are flushed by an explicit
+    * listener-bus barrier (waitListenerBus) before the drain, so the drain
+    * is race-free for the job it attributes.
     */
-  private[graft] final class PhaseListener(loopId: Option[String] = None)
-      extends SparkListener {
+  private[graft] final class PhaseListener(loopId: String) extends SparkListener {
     private val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, PhaseWindow)]
-    // stage ids owned by this loop's jobs (only consulted when loopId is set)
+    // stage ids owned by this loop's tagged jobs
     private val owned = scala.collection.mutable.HashSet.empty[Int]
     override def onJobStart(ev: SparkListenerJobStart): Unit =
-      loopId.foreach { id =>
-        if (Option(ev.properties).exists(p => p.getProperty(LoopIdProperty) == id))
-          owned.synchronized { ev.stageInfos.foreach(owned += _.stageId) }
-      }
+      if (Option(ev.properties).exists(p => p.getProperty(LoopIdProperty) == loopId))
+        owned.synchronized { ev.stageInfos.foreach(owned += _.stageId) }
     override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
       val si = ev.stageInfo
-      if (loopId.isDefined && !owned.synchronized(owned.contains(si.stageId)))
+      if (!owned.synchronized(owned.contains(si.stageId)))
         return
       val wall = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s)
         .getOrElse(0L)
@@ -301,10 +295,16 @@ object Superstep {
     * (see [[loopResumable]]). A step without it converges when the round's
     * row count and order-insensitive fingerprint (`bit_xor(xxhash64(row))`)
     * repeat the previous state's: the state is its own fixpoint test. Both
-    * are observed on the round's one materializing job, and the initial
-    * (or resumed) state's pair on the init job, so a resumed run converges
-    * at the same round as an uninterrupted one. Such a step reports
-    * `changed` = its row count, 0 at the fixpoint.
+    * come from the round's one materializing job (the counts are its
+    * results, the measure its observation), and the initial (or resumed)
+    * state's pair from the init job, so a resumed run converges at the
+    * same round as an uninterrupted one. Such a step reports `changed` =
+    * its row count, 0 at the fixpoint.
+    *
+    * Only the superstep jobs carry the loop's [[LoopIdProperty]] and a
+    * `"<algo> superstep N"` job description, so they alone feed the phase
+    * windows; Spark posts each one's physical plan in its
+    * `SparkListenerSQLExecutionStart` event under that description.
     */
   private[algo] def drive(
       init: => DataFrame,
@@ -337,71 +337,53 @@ object Superstep {
       // and builds only |partition|-sized hash maps.
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++
       width.map(w => "spark.sql.shuffle.partitions" -> w.toString): _*)
-    // every job the loop submits (supersteps, durable checkpoint writes) is
-    // tagged via a thread-local SparkContext property, and the listener
-    // collects only those jobs' stages — concurrent loops in one session
-    // keep disjoint phase windows
+    // the superstep jobs are tagged via a thread-local SparkContext
+    // property, and the listener collects only those jobs' stages —
+    // concurrent loops in one session keep disjoint phase windows
     val loopId = java.util.UUID.randomUUID().toString
-    val listener = new PhaseListener(Some(loopId))
+    val listener = new PhaseListener(loopId)
     session.sparkContext.addSparkListener(listener)
-    session.sparkContext.setLocalProperty(LoopIdProperty, loopId)
     try {
       val placed = width.fold(start)(w => start.repartition(w, col("id")))
       // initial state: materialized once, lineage truncated; its observed
       // pair is the first fixpoint test's "previous state"
-      val (initView, initRelease, initRows, initMeasure) = materializeRound(
+      val (initView, initRelease, initRows, initMeasure, _) = materializeRound(
         observeRound(GraftSqlShim.bind(loopSession, placed), "init"), "init", width)
       var state = initView
       var releaseBacking = initRelease // frees the blocks backing `state`
       var previous = (initRows, initMeasure)
-      GraftSqlShim.waitListenerBus(session)
-      listener.drain() // init stages are not superstep phases
       var iter = startIter
       var converged = false
       var stats = List.empty[IterStats]
 
-      val loopTimers = sys.env.contains("SPARK_GRAFT_LOOP_TIMERS")
       while (iter < cfg.maxIter && !converged) {
         val t0 = System.nanoTime()
-        // row count and changed count (or fingerprint) ride the
-        // materializing job via observe() (accumulator-backed, pass-through:
-        // partitioning/ordering preserved, no stage break) — no separate
-        // aggregation job per superstep, which at converged-frontier sizes
-        // costs as much as the superstep
+        // changed count (or fingerprint) rides the materializing job via
+        // observe() (accumulator-backed, pass-through: partitioning/ordering
+        // preserved, no stage break) — no separate aggregation job per
+        // superstep, which at converged-frontier sizes costs as much as the
+        // superstep
         val obsName = s"superstep_${iter + 1}"
         val next = observeRound(GraftSqlShim.bind(loopSession, step(state, iter)), obsName)
-        val tBuilt = System.nanoTime()
-        // force optimization + physical planning + codegen eagerly so the
-        // timer split can attribute plan time separately from job execution
-        // (the job reuses the lazily-cached executedPlan, so this moves cost,
-        // never duplicates it)
-        if (loopTimers) next.queryExecution.executedPlan
-        val tPlanned = System.nanoTime()
-        if (iter == 2 && sys.env.contains("SPARK_GRAFT_EXPLAIN_STEP"))
-          next.explain("formatted") // debug: dump one steady-state superstep plan
-        // tag the materializing job so driver logs / the UI attribute every
-        // stage to its superstep (and stray jobs stand out)
+        // tag the materializing job: its stages are this superstep's phases,
+        // and driver logs / the UI / SQL execution events name its superstep
+        session.sparkContext.setLocalProperty(LoopIdProperty, loopId)
         session.sparkContext.setJobDescription(s"$algo superstep ${iter + 1}")
-        // THE one job: materializes + localCheckpoints the state, fires the
-        // CollectMetrics accumulator and reads it synchronously — no count()
-        // Aggregate plan, no extra single-task final stage, no Observation
-        // listener-bus round-trip (measured ~0.1 s/superstep of job
-        // scaffolding at converged-frontier sizes, BENCH.md §9)
-        val (view, newRelease, rows, measure) = materializeRound(next, obsName, width)
-        session.sparkContext.setJobDescription(null)
-        val tCounted = System.nanoTime()
+        // THE one job: materializes + localCheckpoints the state, counts its
+        // rows per partition, fires the CollectMetrics accumulator and reads
+        // it synchronously — no count() Aggregate plan, no extra single-task
+        // final stage, no Observation listener-bus round-trip (measured
+        // ~0.1 s/superstep of job scaffolding at converged-frontier sizes,
+        // BENCH.md §9)
+        val (view, newRelease, rows, measure, partitionRows) =
+          try materializeRound(next, obsName, width)
+          finally {
+            session.sparkContext.setJobDescription(null)
+            session.sparkContext.setLocalProperty(LoopIdProperty, null)
+          }
         val byChanged = next.columns.contains("_chg")
-        if (loopTimers) {
-          val tObs = System.nanoTime()
-          System.err.println(f"[loop] iter=${iter + 1} build=${(tBuilt - t0) / 1e6}%.0fms " +
-            f"plan=${(tPlanned - tBuilt) / 1e6}%.0fms " +
-            f"exec=${(tCounted - tPlanned) / 1e6}%.0fms obsGet=${(tObs - tCounted) / 1e6}%.0fms " +
-            s"${if (byChanged) "changed" else "fp"}=$measure")
-        }
         GraftSqlShim.waitListenerBus(session)
         val phases = listener.drain()
-        if (loopTimers)
-          System.err.println(f"[loop] iter=${iter + 1} total=${(System.nanoTime() - t0) / 1e6}%.0fms")
         val computeMs = (System.nanoTime() - t0) / 1000000L
         iter += 1
 
@@ -421,13 +403,8 @@ object Superstep {
           // state is checkpointed WITH its _chg column: frontier algorithms
           // need it to resume with the correct active set
           if (converged || iter % cfg.checkpointEvery == 0 || iter >= cfg.maxIter) {
-            writeCheckpoint(dir, algo, iter, changed, rows, view, converged,
+            writeCheckpoint(dir, algo, iter, changed, partitionRows, view, converged,
               cfg.convergenceThreshold, phases, inputFingerprint)
-            // the parquet write + per-partition count are their own jobs:
-            // drain their stages so the NEXT iteration's phase windows stay
-            // attributed to its own superstep job only
-            GraftSqlShim.waitListenerBus(session)
-            listener.drain()
           }
         }
         val checkpointMs = (System.nanoTime() - t1) / 1000000L
@@ -443,29 +420,27 @@ object Superstep {
       LoopResult(GraftSqlShim.bind(session, state.drop("_chg")),
         iter - startIter, converged, stats.reverse,
         release = releaseBacking)
-    } finally {
-      session.sparkContext.setLocalProperty(LoopIdProperty, null)
-      session.sparkContext.removeSparkListener(listener)
-    }
+    } finally session.sparkContext.removeSparkListener(listener)
   }
 
-  /** Observe a round's row count and, when it carries `_chg`, its changed
-    * count, else its order-insensitive fingerprint (see [[drive]]).
+  /** Observe a round's changed count when it carries `_chg`, else its
+    * order-insensitive fingerprint (see [[drive]]).
     */
   private def observeRound(df: DataFrame, name: String): DataFrame =
-    df.observe(name, count(lit(1)).as("rows"),
+    df.observe(name,
       (if (df.columns.contains("_chg")) sum(when(col("_chg"), 1L).otherwise(0L))
        else bit_xor(xxhash64(df.columns.map(col): _*))).as("measure"))
 
-  /** The round's one job: (view, release, rows, measure) of
-    * [[observeRound]]'s observation `name`; a null sum or fold reads 0.
+  /** The round's one job: (view, release, rows, measure, row count of each
+    * partition), with the measure of [[observeRound]]'s observation `name`;
+    * a null sum or fold reads 0.
     */
   private def materializeRound(df: DataFrame, name: String, width: Option[Int]) = {
-    val (view, release, observed) =
+    val (view, release, observed, partitionRows) =
       GraftSqlShim.materializeLocalCheckpointed(df, keepPartitioning = width.isDefined)
     val m = observed.getOrElse(name, throw new IllegalStateException(
       s"observed metrics for $name missing from the materializing job"))
-    (view, release, m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1))
+    (view, release, partitionRows.sum, if (m.isNullAt(0)) 0L else m.getLong(0), partitionRows)
   }
 
   /** Resume state from the newest committed checkpoint under `dir`, or fall
@@ -526,23 +501,23 @@ object Superstep {
     }.nextOption()
   }
 
+  /** Write `state` and then its manifest, the commit marker. `partitionRows`
+    * are the state's per-partition row counts, taken from the job that
+    * materialized it; `rows` is their sum.
+    */
   private[graft] def writeCheckpoint(
       dir: String, algo: String, iteration: Int,
-      changed: Long, rows: Long, state: DataFrame,
+      changed: Long, partitionRows: Array[Long], state: DataFrame,
       converged: Boolean, threshold: Long, phases: List[PhaseWindow],
       inputFingerprint: Option[Long] = None): Unit = {
     val spark = state.sparkSession
-    val statePath = s"$dir/iter=$iteration/state"
-    state.write.mode("overwrite").parquet(statePath)
-    // per-partition row counts of the written state = lineage metric
-    val perPart = spark.read.parquet(statePath)
-      .groupBy(spark_partition_id().as("p")).count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    state.write.mode("overwrite").parquet(s"$dir/iter=$iteration/state")
     val manifest = ListMap[String, Any](
-      "algo" -> algo, "iteration" -> iteration, "changed" -> changed, "rows" -> rows,
+      "algo" -> algo, "iteration" -> iteration, "changed" -> changed,
+      "rows" -> partitionRows.sum,
       "converged" -> converged, "convergence_threshold" -> threshold) ++
       inputFingerprint.map("input_fp" -> _) ++
-      ListMap("perPartitionRows" -> perPart.map(_._2),
+      ListMap("perPartitionRows" -> partitionRows,
         "phases" -> phases.map(w => ListMap(
           "phase" -> w.phase, "wall_ms" -> w.wallMs, "task_time_ms" -> w.taskTimeMs,
           "shuffle_read_bytes" -> w.shuffleReadBytes,
@@ -554,6 +529,8 @@ object Superstep {
     try out.write(ManifestJson.writeValueAsBytes(manifest)) finally out.close()
   }
 
-  /** Reads and writes checkpoint manifests (insertion-ordered keys). */
-  private val ManifestJson = new ObjectMapper().registerModule(DefaultScalaModule)
+  /** Reads and writes checkpoint manifests (insertion-ordered keys) and
+    * ScalingBench's level lines.
+    */
+  private[graft] val ManifestJson = new ObjectMapper().registerModule(DefaultScalaModule)
 }

@@ -139,9 +139,6 @@ object TriangleCount {
       .select($"id", coalesce($"triangles", lit(0L)).as("triangles"))
       .as[VertexTriangles]
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN_TC").contains("1")) {
-      counts.explain("formatted")
-    }
     counts.count()
     val total = counts.agg(coalesce(sum($"triangles"), lit(0L)))
       .head().getLong(0) / 3

@@ -39,31 +39,42 @@ object LinkExtract {
   def hrefsCol(html: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     HrefsExpr.hrefs(html)
 
-  /** Resolve an href against the page url: absolute http(s) kept as-is;
-    * `//host/x` gets the page's scheme; `/x` joins the page origin; other
-    * relative refs join origin + '/'. Fragments and query strings are kept
-    * (byte-determinism beats cosmetic canonicalization); scheme-noise
-    * (`javascript:`, `mailto:`, `#…`, empty) → null.
+  /** Scheme-noise hrefs, dropped before resolution: `javascript:`,
+    * `mailto:`, `data:`, `tel:`, fragment-only (`#…`) and empty.
+    */
+  private def noiseCol(href: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    href.rlike("(?i)^(javascript|mailto|data|tel):") || href.rlike("^#") || href === ""
+
+  private def absolute(href: org.apache.spark.sql.Column) = href.rlike("(?i)^https?://")
+
+  /** Resolve a non-noise href against the page url: absolute http(s) kept
+    * as-is; `//host/x` gets the page's scheme; `/x` joins the page origin;
+    * other relative refs join origin + '/'. Fragments and query strings are
+    * kept (byte-determinism beats cosmetic canonicalization). A relative
+    * href on a null page url resolves to null.
     */
   def resolveCol(pageUrl: org.apache.spark.sql.Column,
                  href: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val scheme = regexp_extract(pageUrl, "^(https?)://", 1)
     val origin = regexp_extract(pageUrl, "^(https?://[^/]+)", 1)
-    when(href.rlike("(?i)^(javascript|mailto|data|tel):") || href.rlike("^#") ||
-         href === "", lit(null))
-      .when(href.rlike("(?i)^https?://"), href)
+    when(absolute(href), href)
       .when(href.startsWith("//"), concat(scheme, lit(":"), href))
       .when(href.startsWith("/"), concat(origin, href))
       .otherwise(concat(origin, lit("/"), href))
   }
 
-  /** pages → url-level directed edge table (duplicates preserved). */
+  /** pages → url-level directed edge table (duplicates preserved). The
+    * filter names the resolution's null cases on the raw href — noise, or a
+    * relative href on a null page url — so the resolution is projected
+    * once: filtering on the resolved column would be pushed below the
+    * projection and evaluate the resolution twice per href.
+    */
   def urlEdges(pages: DataFrame): Dataset[UrlEdge] = {
     val spark = pages.sparkSession
     import spark.implicits._
     pages.select($"url".as("src_url"), explode(hrefsCol($"html")).as("href"))
+      .filter(!noiseCol($"href") && ($"src_url".isNotNull || absolute($"href")))
       .select($"src_url", resolveCol($"src_url", $"href").as("dst_url"))
-      .filter($"dst_url".isNotNull)
       .as[UrlEdge]
   }
 

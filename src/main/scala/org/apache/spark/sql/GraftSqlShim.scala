@@ -37,15 +37,15 @@ object GraftSqlShim {
 
   /** Materialize UNPERSISTED loop state `df` as a locally-checkpointed
     * row RDD with ONE job, and return (flat-leaf view, release, observed
-    * metrics). This fuses everything the superstep loop needs into the
-    * single materializing job:
+    * metrics, row count of each partition). This fuses everything the
+    * superstep loop needs into the single materializing job:
     *
     *  - the plan executes once (its `toRdd` iterators are consumed under a
-    *    SQL execution id — no `count()` Aggregate, no extra single-task
-    *    stage); rows are defensively copied ONCE (`map(_.copy())` — the
-    *    same contract `Dataset.checkpoint` uses) and stored as
-    *    deserialized MEMORY_AND_DISK blocks — no columnar encode at
-    *    materialization and no per-scan decode afterwards (the state is
+    *    SQL execution id by a counting function — no `count()` Aggregate,
+    *    no extra single-task stage); rows are defensively copied ONCE
+    *    (`map(_.copy())` — the same contract `Dataset.checkpoint` uses) and
+    *    stored as deserialized MEMORY_AND_DISK blocks — no columnar encode
+    *    at materialization and no per-scan decode afterwards (the state is
     *    scanned twice per superstep);
     *  - `localCheckpoint()` is marked BEFORE the job, so the job's own
     *    cached blocks become the checkpoint — RDD lineage is truncated
@@ -54,7 +54,7 @@ object GraftSqlShim {
     *  - every `observe()` CollectMetrics accumulator fires in the same
     *    job and is read SYNCHRONOUSLY (merged driver-side before the job
     *    returns — no [[org.apache.spark.sql.Observation]] listener-bus
-    *    round-trip).
+    *    round-trip); the per-partition row counts are the job's results.
     *
     * The returned view is a flat `LogicalRDD` over the checkpointed rows
     * (stable objects — served without a per-scan copy). With
@@ -71,63 +71,32 @@ object GraftSqlShim {
     */
   def materializeLocalCheckpointed(
       df: DataFrame,
-      keepPartitioning: Boolean): (DataFrame, () => Unit, Map[String, Row]) = {
+      keepPartitioning: Boolean)
+      : (DataFrame, () => Unit, Map[String, Row], Array[Long]) = {
     val cdf = df.asInstanceOf[classic.DataFrame]
-    val qe = guardedQueryExecution(cdf)
+    val qe = cdf.queryExecution
     val rdd = qe.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    execution.SQLExecution.withNewExecutionId(qe) {
-      rdd.foreachPartition { it: Iterator[_] =>
-        while (it.hasNext) it.next()
-      }
+    val partitionRows = execution.SQLExecution.withNewExecutionId(qe) {
+      rdd.sparkContext.runJob(rdd, (it: Iterator[_]) => {
+        var n = 0L
+        while (it.hasNext) { it.next(); n += 1 }
+        n
+      })
     }
     val logical =
       if (keepPartitioning) execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
       else execution.LogicalRDD(cdf.logicalPlan.output, rdd)(cdf.sparkSession)
     (classic.Dataset.ofRows(cdf.sparkSession, logical),
       () => rdd.sparkContext.unpersistRDD(rdd.id, blocking = false),
-      execution.CollectMetricsExec.collect(qe.executedPlan))
-  }
-
-  private def guardedQueryExecution(
-      cdf: classic.DataFrame): execution.QueryExecution = {
-    var qe = cdf.queryExecution
-    // Session-transition guard: `SparkPlan.session` is captured from
-    // getActiveSession at node CONSTRUCTION, and getActiveSession filters
-    // out sessions whose SparkContext is stopped — so a plan built in the
-    // window where the owning context reports stopped silently carries
-    // session = null and dies at execute() with an opaque NPE ("SparkPlan
-    // .session() is null"; observed exactly once, mid-PageRank in the
-    // SECOND SparkContext of one ScalingBench JVM, Spark 4.1.2). Detect it
-    // BEFORE executing: replan once on the dataset's own session if that
-    // session is alive (construction is deterministic from the logical
-    // plan), else fail with the real story instead of the NPE.
-    if (qe.executedPlan.exists(p => p.session eq null)) {
-      val s = cdf.sparkSession
-      if (!s.isUsable) throw new IllegalStateException(
-        "superstep state's SparkContext was stopped mid-loop (its physical " +
-        "plan was constructed against a stopped session)")
-      System.err.println(
-        "[graft] WARN: superstep plan captured a null session (active session " +
-        "was unusable at plan construction); replanning once on " +
-        s"${s.sparkContext.applicationId}")
-      qe = s.sessionState.executePlan(qe.logical)
-      // If the race fires AGAIN during the replan, executing would still
-      // die with the opaque NPE this guard exists to avoid — fail with the
-      // real story instead of retrying forever.
-      if (qe.executedPlan.exists(p => p.session eq null)) throw new IllegalStateException(
-        "superstep plan still captured a null session after replanning on " +
-        s"${s.sparkContext.applicationId} — the session-transition race fired " +
-        "twice; the owning SparkContext is likely being stopped concurrently")
-    }
-    qe
+      execution.CollectMetricsExec.collect(qe.executedPlan),
+      partitionRows)
   }
 
   /** Block until the listener bus has delivered all posted events. Loop
-    * phase attribution discards stages of side jobs (init, durable
-    * checkpoint writes) by draining the listener right after the action —
-    * delivery is async, so without this barrier a slow bus could leak a
-    * side-job stage into the NEXT superstep's window.
+    * phase attribution drains the listener right after the superstep job;
+    * delivery is async, so without this barrier a slow bus could leave the
+    * job's last stage out of its window.
     */
   def waitListenerBus(session: SparkSession): Unit =
     // best-effort: a bus that stays busy for 10s (another loop posting

@@ -52,6 +52,23 @@ class CheckpointSpec extends SparkSpec {
     resumed.labels.collect().map(v => v.id -> v.label).toMap shouldBe expected
   }
 
+  test("perPartitionRows holds one count per state partition and sums to rows") {
+    val dir = java.nio.file.Files.createTempDirectory("pr-chk-parts").toString
+    val edges = spark.createDataset(
+      SyntheticGraph.randomEdgesLocal(80, 3, seed = 5L).map { case (s, d) => Edge(s, d) })
+    val pr = PageRank.run(edges, maxIter = 2,
+      cfg = RunConfig(checkpointDir = Some(dir), checkpointEvery = 1))
+    val Some((_, json)) = Superstep.latestManifest(spark, dir)
+    val manifest = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    val parts = (0 until manifest.get("perPartitionRows").size)
+      .map(i => manifest.get("perPartitionRows").get(i).asLong)
+    // the loop runs at the session's shuffle width; its state has that many partitions
+    parts.size shouldBe spark.conf.get("spark.sql.shuffle.partitions").toInt
+    parts.sum shouldBe manifest.get("rows").asLong
+    manifest.get("rows").asLong shouldBe pr.ranks.count()
+    pr.release()
+  }
+
   test("a pretty-printed manifest with the same fields resumes") {
     val dir = java.nio.file.Files.createTempDirectory("lp-chk7").toString
     val edges = spark.createDataset(

@@ -127,6 +127,24 @@ class LinkExtractSpec extends SparkSpec {
     rows(1).isNullAt(1) shouldBe true
   }
 
+  test("urlEdges projects the href resolution once and drops relative hrefs of a null url") {
+    val html = "<a href='https://a.example/x'>1</a><a href='/rel'>2</a><a href='#f'>3</a>"
+      .getBytes(UTF_8)
+    // repartition keeps the optimizer from folding the plan over the local relation
+    val pages = Seq((Option("https://site.example/p"), html), (Option.empty[String], html))
+      .toDF("url", "html").repartition(1)
+    val edges = LinkExtract.urlEdges(pages)
+    val plan = edges.queryExecution.optimizedPlan.toString
+    withClue(plan) {
+      "regexp_extract".r.findAllMatchIn(plan).size shouldBe 3
+      "CASE WHEN".r.findAllMatchIn(plan).size shouldBe 1
+    }
+    edges.collect().map(e => (e.src_url, e.dst_url)).sortBy(_.toString).toSeq shouldBe Seq(
+      ("https://site.example/p", "https://a.example/x"),
+      ("https://site.example/p", "https://site.example/rel"),
+      (null, "https://a.example/x")).sortBy(_.toString)
+  }
+
   // ---- differential ---------------------------------------------------------
 
   /** Fragments that exercise every rule: tag, block, comment and entity

@@ -34,4 +34,17 @@ class LoopPhasesSpec extends SparkSpec {
     }
     Seq(lp.release, lpu.release, pr.release, cc.release, bfs.release, sssp.release).foreach(_())
   }
+
+  test("a PageRank that writes a durable checkpoint every superstep still reads gather then apply") {
+    val e = spark.createDataset(SyntheticGraph.randomEdgesLocal(300, 3, seed = 11L)
+      .map { case (s, d) => Edge(s, d) })
+    val dir = java.nio.file.Files.createTempDirectory("phases-chk").toString
+    val pr = PageRank.run(e, cfg = RunConfig(checkpointDir = Some(dir), checkpointEvery = 1))
+    pr.stats.size should be > 1
+    new java.io.File(dir).list().count(_.startsWith("iter=")) shouldBe pr.stats.size
+    pr.stats.foreach(st => withClue(s"pr superstep ${st.iteration}: ") {
+      st.phases.map(_.phase) shouldBe List("gather", "apply")
+    })
+    pr.release()
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.matchers.should.Matchers
 
 /** The forked two-JVM ScalingBench protocol: each level child prints one
   * JSON line, the parent parses it back. A drifted field name or a lost
@@ -8,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * encode/decode pair is pinned as an exact round-trip (no SparkSession
   * needed — this is pure string protocol).
   */
-class ScalingBenchProtocolSpec extends AnyFunSuite {
+class ScalingBenchProtocolSpec extends AnyFunSuite with Matchers {
 
   private val sample = ScalingBench.Level(
     cpus = 8, edges = 40000000L,
@@ -53,6 +54,34 @@ class ScalingBenchProtocolSpec extends AnyFunSuite {
     val broken = ScalingBench.levelJson(sample).replace("\"pr_fp\"", "\"xx\"")
     val e = intercept[IllegalStateException](ScalingBench.parseLevel(broken))
     assert(e.getMessage.contains("pr_fp"))
+  }
+
+  test("a pretty-printed level line parses") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val pretty = mapper.writerWithDefaultPrettyPrinter()
+      .writeValueAsString(mapper.readTree(ScalingBench.levelJson(sample)))
+    pretty should include("\"lp_wall\" : 94.017") // spaces around the colon
+    ScalingBench.parseLevel(pretty) shouldBe ScalingBench.parseLevel(ScalingBench.levelJson(sample))
+  }
+
+  test("a class path without graft.ScalingBench is refused, naming only scripts/run_main.sh") {
+    val tmp = java.nio.file.Files.createTempDirectory("scaling-cp")
+    val dir = tmp.resolve("classes")
+    java.nio.file.Files.createDirectories(dir.resolve("graft"))
+    java.nio.file.Files.createFile(dir.resolve("graft/ScalingBench.class"))
+    val jar = tmp.resolve("graft.jar").toFile
+    scala.util.Using.resource(new java.util.jar.JarOutputStream(
+        new java.io.FileOutputStream(jar))) { out =>
+      out.putNextEntry(new java.util.jar.JarEntry("graft/ScalingBench.class"))
+      out.closeEntry()
+    }
+    val sep = java.io.File.pathSeparator
+    ScalingBench.requireLoadable(s"${tmp.resolve("none")}$sep$dir")
+    ScalingBench.requireLoadable(jar.getPath)
+    val e = intercept[IllegalArgumentException](
+      ScalingBench.requireLoadable(s"${tmp.resolve("none")}$sep${tmp}"))
+    e.getMessage should include("scripts/run_main.sh graft.ScalingBench")
+    e.getMessage should not include "SPARK_GRAFT"
   }
 
   test("minLevel takes field-wise timing mins and asserts determinism") {
