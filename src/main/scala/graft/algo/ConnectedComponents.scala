@@ -11,8 +11,9 @@ import graft.model._
   * `connectedComponents` (`connected_components_shell.scala:21-29,75`);
   * the fixpoint is "component id = min vertex id in the weak component" —
   * any correct algorithm yields identical output, so we use a
-  * frontier-restricted min propagation: only vertices whose component id
-  * dropped last round resend. At cluster scale the round count is bounded
+  * frontier-restricted min propagation ([[Superstep.minStep]], the step
+  * BFS and SSSP share): only vertices whose component id dropped last
+  * round resend. At cluster scale the round count is bounded
   * by graph diameter; web graphs have small effective diameter, and the
   * frontier shrinks geometrically after the giant component collapses.
   */
@@ -30,11 +31,13 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // every vertex starts as its own component; aggregated rather than
-    // projected as `id AS comp` (see Superstep.loopResumable on aliases)
+    // every vertex starts as its own component and in the first frontier;
+    // aggregated rather than projected as `id AS comp` (see Superstep.loop
+    // on aliases)
     val init = edges.select($"src".as("id"))
       .union(edges.select($"dst".as("id")))
       .groupBy($"id").agg(min($"id").as("comp"))
+      .select($"id", $"comp", lit(true).as("_chg"))
     // undirected doubling, deduped (duplicates are irrelevant for min),
     // keyed by src — every superstep's gather reuses its partitioning
     val side = Superstep.edgeSide(
@@ -44,26 +47,11 @@ object ConnectedComponents {
         .distinct(),
       "src", cfg)(init.count())
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
-      val frontier =
-        (if (iter == 0) state else state.filter($"_chg")).select($"id", $"comp")
-      val msgs = side.gather(frontier)
-        .groupBy($"dst".as("id")).agg(min($"comp").as("m"))
-      state.select($"id", $"comp")
-        .join(Superstep.shj(msgs), Seq("id"), "left_outer")
-        .select(
-          $"id",
-          least($"comp", $"m").as("comp"),
-          coalesce($"m" < $"comp", lit(false)).as("_chg"))
-    }
-
-    val inputFp = cfg.checkpointDir.map(_ => fingerprint64(side.edges))
-    val res = Superstep.loopResumable(init, side, step,
-      cfg.copy(convergenceThreshold = 0L), algo = "cc", inputFingerprint = inputFp)
+    val res = Superstep.loop(init, Some(side), Superstep.minStep(side, "comp", $"comp"),
+      cfg.copy(convergenceThreshold = 0L), algo = "cc", fingerprint64(side.edges))
     val comps = res.state.select($"id", $"comp".as("component"))
       .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
     val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
-    side.release()
     // comps is persisted + materialized — free the loop state behind it
     res.release()
     CcResult(comps, res.iterations, nComp, res.stats,
@@ -84,7 +72,7 @@ object ConnectedComponents {
     *    minimum of its neighbourhood (incl. itself)
     *  - small-star: every node and its smaller neighbours re-point at that
     *    minimum — after large-star all edges already point large→small.
-    * Rounds run through [[Superstep.drive]], the vertex loops' driver: the
+    * Rounds run through [[Superstep.loop]], the vertex loops' entry: the
     * round's edge set carries no `_chg` column, so the loop ends when the
     * (distinct) edge set is a fixpoint — its order-insensitive xxhash64 XOR
     * fingerprint and row count, observed on the round's one materializing
@@ -120,7 +108,7 @@ object ConnectedComponents {
     // ~12× (bidir twice, both star joins, the union), so a leaf over the
     // previous round's plan would nest 12^depth earlier rounds into every
     // plan string the driver renders (OOM after a handful of rounds)
-    def round(g: DataFrame, iter: Int): DataFrame = {
+    def round(g: DataFrame): DataFrame = {
       // large-star: Γ taken over both directions; m(u) = min(Γ(u) ∪ {u});
       // every neighbour v > u re-points to m(u)
       val bidir = g.select($"u", $"v").union(g.select($"v".as("u"), $"u".as("v")))
@@ -146,20 +134,20 @@ object ConnectedComponents {
 
     // input identity = the canonical undirected distinct edge set (raw
     // `edges` would let duplicate rows cancel in the XOR fold)
-    val inputFp = cfg.checkpointDir.map(_ => fingerprint64(initial))
-    val res = Superstep.drive(initial, None, round,
-      cfg.copy(maxIter = maxRounds, convergenceThreshold = 0L), "cc_star", inputFp)
+    try {
+      val res = Superstep.loop(initial, None, round,
+        cfg.copy(maxIter = maxRounds, convergenceThreshold = 0L), "cc_star", fingerprint64(initial))
 
-    // final vertex mapping + count plan under the CALLER's session/confs
-    val comps = vertices
-      .join(res.state.select($"u".as("id"), $"v".as("c")), Seq("id"), "left_outer")
-      .select($"id", coalesce($"c", $"id").as("component"))
-      .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
-    val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
-    res.release()
-    vertices.unpersist(blocking = false)
-    CcResult(comps, res.iterations, nComp, res.stats,
-      release = () => comps.unpersist(blocking = false))
+      // final vertex mapping + count plan under the CALLER's session/confs
+      val comps = vertices
+        .join(res.state.select($"u".as("id"), $"v".as("c")), Seq("id"), "left_outer")
+        .select($"id", coalesce($"c", $"id").as("component"))
+        .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
+      val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
+      res.release()
+      CcResult(comps, res.iterations, nComp, res.stats,
+        release = () => comps.unpersist(blocking = false))
+    } finally vertices.unpersist(blocking = false)
   }
 
   /** Order-sensitive FNV-64 fingerprint of the component column sorted by

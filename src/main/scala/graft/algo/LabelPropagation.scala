@@ -91,31 +91,34 @@ object LabelPropagation {
     val eAgg = packedRaw.agg(
       coalesce(sum($"w"), lit(0L)),
       count(lit(1)),
-      coalesce(max($"w"), lit(1L)),
       coalesce(min($"src"), lit(0L)),
-      coalesce(max($"src"), lit(0L))).head()
+      coalesce(max($"src"), lit(0L)),
+      coalesce(max($"dst"), lit(-1L))).head()
     val edgeCount = eAgg.getLong(0)
-    val (srcMin, srcMax) = (eAgg.getLong(3), eAgg.getLong(4))
+    val (srcMin, srcMax) = (eAgg.getLong(2), eAgg.getLong(3))
+    // fail fast on out-of-range DESTINATIONS only (srcs/seeds >= n were
+    // silently dropped above, matching the reference): the reference
+    // stores any dst in the CSR and its gather indexes labels[dst] — dst
+    // >= n panics there (lib.rs:200-204); here the dense range(n) state +
+    // left-outer apply would swallow those votes silently, so the panic
+    // rides the setup aggregation, before the edge side is placed.
+    numNodes.foreach(n => require(eAgg.getLong(4) < n,
+      s"numNodes=$n but an edge destination references out-of-range id " +
+      s"${eAgg.getLong(4)} — the reference panics on gather for dst >= num_nodes"))
     // Near-unit multiplicities (Σw ≤ 1.01·rows — the common case: a
     // deduplicated or near-deduplicated edge table; the reference's random
     // generator leaves only birthday-collision duplicates, ~50 in 40M) let
-    // the adjacency expand those rare duplicates back into duplicate ROWS
-    // once at setup and drop the w column everywhere: the vote's sum(w)
-    // becomes count(*) over multiplicity-many rows — identical integer
-    // votes. That narrows the ONE per-superstep exchange (the raw vote
-    // rows — map-side combine cannot compress them: at degree d over p
-    // shuffle partitions a given (src,label) pair appears ~d/p ≤ 1 times
-    // per map task) from (src,label,w) to (src,label) — 24 vs 32 bytes of
-    // unsafe-row payload, ~25% less shuffle write+read DRAM traffic on the
-    // loop's hot path, plus a narrower cached adjacency. The max(w) guard
-    // bounds the per-row array_repeat.
-    val unitW = edgeCount <= eAgg.getLong(1) + eAgg.getLong(1) / 100 &&
-      eAgg.getLong(2) <= 4096L
-    val adjacency =
-      if (unitW) packedRaw.select($"src", $"dst",
-          explode(array_repeat(lit(0), $"w".cast("int"))).as("_d"))
-        .select($"src", $"dst")
-      else packedRaw
+    // the adjacency keep those rare duplicates as the raw edge ROWS they
+    // are and drop the w column everywhere: the vote's sum(w) becomes
+    // count(*) over multiplicity-many rows — identical integer votes. That
+    // narrows the ONE per-superstep exchange (the raw vote rows — map-side
+    // combine cannot compress them: at degree d over p shuffle partitions
+    // a given (src,label) pair appears ~d/p ≤ 1 times per map task) from
+    // (src,label,w) to (src,label) — 24 vs 32 bytes of unsafe-row payload,
+    // ~25% less shuffle write+read DRAM traffic on the loop's hot path,
+    // plus a narrower cached adjacency, placed without a grouping shuffle.
+    val unitW = edgeCount <= eAgg.getLong(1) + eAgg.getLong(1) / 100
+    val adjacency = if (unitW) boundedEdges.select($"src", $"dst") else packedRaw
     // partitioned by dst once so every gather join reuses the same exchange
     val side = Superstep.edgeSide(adjacency, "dst", cfg)(numNodes.getOrElse(
       boundedEdges.select($"src".as("id")).union(boundedEdges.select($"dst".as("id")))
@@ -139,18 +142,7 @@ object LabelPropagation {
     // superstep (observed as 5-stage superstep jobs vs PR's 3).
     val vertices = numNodes match {
       // declared universe covers isolated ids too (lpst init_labels)
-      case Some(n) =>
-        // fail fast on out-of-range DESTINATIONS only (srcs/seeds >= n were
-        // silently dropped above, matching the reference): the reference
-        // stores any dst in the CSR and its gather indexes labels[dst] —
-        // dst >= n panics there (lib.rs:200-204); here the dense range(n)
-        // state + left-outer apply would swallow those votes silently, so
-        // the panic becomes one cheap agg over the persisted adjacency.
-        val mxDst = side.edges.agg(coalesce(max($"dst"), lit(-1L))).head().getLong(0)
-        require(mxDst < n,
-          s"numNodes=$n but an edge destination references out-of-range id " +
-          s"$mxDst — the reference panics on gather for dst >= num_nodes")
-        spark.range(n).toDF("id")
+      case Some(n) => spark.range(n).toDF("id")
       case None => side.edges.select($"src".as("id"))
         .union(side.edges.select($"dst".as("id")))
         .union(dedupedSeeds.select($"node".as("id"))) // seeded isolated ids
@@ -159,13 +151,13 @@ object LabelPropagation {
     val init: DataFrame =
       if (unsupervised) {
         // label(i) = i for every vertex (ow-lp/src/lib.rs:538-546);
-        // aggregated, not projected as `id AS label` (see
-        // Superstep.loopResumable on aliases)
+        // aggregated, not projected as `id AS label` (see Superstep.loop
+        // on aliases)
         vertices.groupBy($"id").agg(min($"id").as("label"))
-          .select($"id", $"label", lit(false).as("seeded"))
+          .select($"id", $"label", lit(false).as("seeded"), lit(true).as("_chg"))
       } else {
         vertices.join(dedupedSeeds, $"id" === $"node", "left_outer")
-          .select($"id", $"label", $"label".isNotNull.as("seeded"))
+          .select($"id", $"label", $"label".isNotNull.as("seeded"), lit(true).as("_chg"))
       }
 
     // LP only ever propagates labels that exist in the INITIAL state, so the
@@ -213,7 +205,7 @@ object LabelPropagation {
     // tables) to (pk, w) — 24 vs 32 B.
     val packExchange = packedVote && srcMin >= 0L && srcMax < (1L << 32)
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
+    def step(state: DataFrame): DataFrame = {
       // P6 UNKNOWN filter: unlabeled vertices contribute nothing
       val labels = state.filter($"label".isNotNull).select($"id", $"label")
       val joined = side.gather(labels)
@@ -283,27 +275,24 @@ object LabelPropagation {
           (coalesce(label, lit(-1L)) =!= coalesce($"label", lit(-1L))).as("_chg"))
     }
 
-    // input identity for checkpoint manifests: adjacency ⊕ seeds (computed
-    // only when durable checkpointing is on — one agg over cached data)
-    // fingerprint the logical multigraph (src,dst,w): under the near-unit
-    // expansion the w column is re-derived by re-grouping — duplicate ROWS
+    // input identity for checkpoint manifests: adjacency ⊕ seeds.
+    // Fingerprint the logical multigraph (src,dst,w): under the near-unit
+    // shape the w column is re-derived by re-grouping — duplicate ROWS
     // must never reach the XOR-fold (identical rows cancel pairwise, see
     // fingerprint64's caveat), and re-grouping keeps the fingerprint equal
     // to the weighted representation's, so manifests stay interchangeable
-    val inputFp = cfg.checkpointDir.map { _ =>
+    def inputFp: Long = {
       val edgeRows =
         if (unitW) side.edges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
         else side.edges
       ConnectedComponents.fingerprint64(edgeRows) ^
         ConnectedComponents.fingerprint64(dedupedSeeds.toDF())
     }
-    val res = Superstep.loopResumable(
-      init, side, step, cfg, algo = "lp", inputFingerprint = inputFp)
+    val res = try Superstep.loop(init, Some(side), step, cfg, algo = "lp", inputFp)
+      finally dedupedSeeds.unpersist(blocking = false)
 
     val labelsOut = res.state.filter($"label".isNotNull)
       .select($"id", $"label").as[VertexLabel]
-    side.release()
-    dedupedSeeds.unpersist(blocking = false)
     LpResult(labelsOut, res.iterations, res.converged, res.stats, edgeCount,
       release = res.release)
   }

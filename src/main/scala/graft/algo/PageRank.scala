@@ -69,13 +69,13 @@ object PageRank {
     val side = Superstep.edgeSide(contribRaw, "src", cfg)(numVertices)
     packed.unpersist(blocking = false)
 
-    // after Pregel superstep 0 (initial message to every vertex)
+    // after Pregel superstep 0 (initial message to every vertex): every
+    // vertex received one, so every vertex is in the first frontier
     val init: DataFrame = vertices.select(
-      $"id", lit(resetProb).as("rank"), lit(resetProb).as("delta"))
+      $"id", lit(resetProb).as("rank"), lit(resetProb).as("delta"), lit(true).as("_chg"))
 
-    def step(state: DataFrame, iter: Int): DataFrame = {
-      val frontier = (if (iter == 0) state else state.filter($"_chg"))
-        .filter($"delta" > tol).select($"id", $"delta")
+    def step(state: DataFrame): DataFrame = {
+      val frontier = state.filter($"_chg" && $"delta" > tol).select($"id", $"delta")
       val msgs = side.gather(frontier)
         .groupBy(col("dst").as("id"))
         .agg(sum($"delta" * $"cw").as("msg"))
@@ -90,10 +90,9 @@ object PageRank {
           $"msg".isNotNull.as("_chg"))
     }
 
-    val inputFp = cfg.checkpointDir.map(_ =>
-      ConnectedComponents.fingerprint64(side.edges))
-    val res = Superstep.loopResumable(init, side, step,
-      cfg.copy(maxIter = maxIter), algo = "pagerank", inputFingerprint = inputFp)
+    val res = try Superstep.loop(init, Some(side), step, cfg.copy(maxIter = maxIter),
+        algo = "pagerank", ConnectedComponents.fingerprint64(side.edges))
+      finally vertices.unpersist(blocking = false)
 
     // SPARK-18847: scale ranks so they sum to the vertex count
     val rawSum = res.state.agg(sum($"rank")).head().getDouble(0)
@@ -102,8 +101,6 @@ object PageRank {
       .select($"id", ($"rank" * factor).as("rank")).as[VertexRank]
       .persist(StorageLevel.MEMORY_AND_DISK)
     val agg = ranks.agg(max($"rank"), sum($"rank")).head()
-    side.release()
-    vertices.unpersist(blocking = false)
     // ranks is persisted + materialized above — the loop state behind it
     // can be freed now rather than leaking one retired state per run
     res.release()

@@ -9,20 +9,23 @@ import graft.model._
   * min-distance, matching the reference's Pregel formulations
   * (`bfs_graphx_shell.scala:82-92`, `sssp_graphx_shell.scala:87-98`).
   *
-  * State rows exist only for reached vertices (absent row = unreachable =
-  * the reference's `Int.MaxValue` / `+∞` sentinel, rendered at the sink);
-  * each superstep joins only the frontier (vertices improved last round)
-  * against the edge table, so the shuffle volume per round is proportional
-  * to the frontier's out-degree sum, not the whole graph.
+  * Both are one vertex program: a dense `dist` state (+∞ = unreached; the
+  * result omits those rows, the reference's `Int.MaxValue` / `+∞`
+  * sentinel rendered at the sink) whose first frontier is the source, and
+  * the min step CC shares ([[Superstep.minStep]]) with message
+  * `dist + weight`. Each superstep joins only the frontier (vertices
+  * improved last round) against the edge table, so the shuffle volume per
+  * round is proportional to the frontier's out-degree sum, not the whole
+  * graph.
   *
-  * Both programs run on [[Superstep.loopResumable]] (r4): with
-  * `cfg.checkpointDir` set, any superstep is durably resumable
-  * mid-convergence — the checkpointed state carries the `_chg` frontier
-  * column, so a resumed run relaxes exactly the frontier the crashed run
-  * would have. The manifest records an input fingerprint of
-  * (adjacency ⊕ source), and resume refuses a checkpoint taken against a
-  * different edge table OR a different source vertex (same-table/different-
-  * source checkpoints are distinct runs, not resumable state).
+  * Both run on [[Superstep.loop]]: with `cfg.checkpointDir` set, any
+  * superstep is durably resumable mid-convergence — the checkpointed state
+  * carries the `_chg` frontier column, so a resumed run relaxes exactly
+  * the frontier the crashed run would have. The manifest records an input
+  * fingerprint of (adjacency ⊕ source), and resume refuses a checkpoint
+  * taken against a different edge table OR a different source vertex
+  * (same-table/different-source checkpoints are distinct runs, not
+  * resumable state).
   */
 object Paths {
 
@@ -64,8 +67,6 @@ object Paths {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // min over doubles is exact (no re-association), so the result is
-    // bit-identical at any loop width or salting
     val side = Superstep.edgeSide(
       edges.groupBy($"src", $"dst").agg(min($"weight").as("weight")), "src", cfg)(
       edges.select($"src").union(edges.select($"dst")).distinct().count())
@@ -81,37 +82,21 @@ object Paths {
         .union(spark.range(1).select(lit(source).as("id"))) // isolated source
         .distinct()
         .select($"id",
-          when($"id" === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"))
-
-    def step(state: DataFrame, iter: Int): DataFrame = {
-      val frontier =
-        (if (iter == 0) state.filter($"dist" < Double.PositiveInfinity)
-         else state.filter($"_chg")).select($"id", $"dist")
-      val msgs = side.gather(frontier)
-        .groupBy($"dst".as("id"))
-        .agg(min($"dist" + $"weight").as("m"))
-      state.select($"id", $"dist")
-        .join(Superstep.shj(msgs), Seq("id"), "left_outer")
-        .select(
-          $"id",
-          least($"dist", $"m").as("dist"),
-          coalesce($"m" < $"dist", lit(false)).as("_chg"))
-    }
+          when($"id" === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"),
+          ($"id" === source).as("_chg"))
 
     // input identity for checkpoint manifests: adjacency ⊕ mixed source id
     // (a different source is a different run over the same table — the
     // plain id would cancel against nothing, so it goes through splitmix64)
-    val inputFp = cfg.checkpointDir.map(_ =>
+    val res = Superstep.loop(init, Some(side),
+      Superstep.minStep(side, "dist", $"dist" + $"weight"), cfg, algo,
       ConnectedComponents.fingerprint64(side.edges) ^
         graft.functions.SplitMix64Expr.mix(source))
-    val res = Superstep.loopResumable(init, side, step, cfg, algo = algo,
-      inputFingerprint = inputFp)
     // absent-row output contract: unreachable vertices are not emitted
     val dists = res.state.filter($"dist" < Double.PositiveInfinity)
       .select($"id", $"dist").as[VertexDist]
       .persist(StorageLevel.MEMORY_AND_DISK)
     val agg = dists.agg(count(lit(1)), max($"dist")).head()
-    side.release()
     // dists is persisted + materialized — free the loop state behind it
     res.release()
     PathResult(dists, res.iterations, agg.getLong(0),

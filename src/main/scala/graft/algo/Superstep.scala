@@ -1,7 +1,7 @@
 package graft.algo
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.fs.Path
@@ -44,10 +44,10 @@ import scala.util.Using
   *    re-sorts are pure waste against a hash-partitioned cached state) are
   *    scoped to a cloned child session, NOT mutated on the caller's session,
   *    so concurrent loops / relational queries never race on global conf
-  *    ([[drive]], the one round driver, shared with star CC's rounds);
+  *    ([[loop]], the one loop entry, shared with star CC's rounds);
   *  - the edge side is partitioned, sized, salted and persisted ONCE per
-  *    run ([[edgeSide]]), and every algorithm's gather is its one join
-  *    ([[EdgeSide.gather]]).
+  *    run ([[edgeSide]]), every algorithm's gather is its one join
+  *    ([[EdgeSide.gather]]), and [[loop]] releases it when the loop ends.
   *
   * Per-iteration phase windows (reference evidence style,
   * `runtime_metrics.py:48-118`): a SparkListener attributes the superstep
@@ -97,13 +97,14 @@ object Superstep {
       release: () => Unit = () => ())
 
   /** One superstep: previous state → new state carrying a boolean `_chg`
-    * column (true on every row whose vertex value changed this step). The
-    * previous state still carries its own `_chg` (absent on iteration 0) so
-    * frontier-based algorithms can restrict work to changed vertices; the
-    * driver aggregates the new `_chg` to decide convergence. A step without
-    * `_chg` (star CC's edge set) converges at its fixpoint (see [[drive]]).
+    * column (true on every row whose vertex value changed this step). Every
+    * vertex program's init carries `_chg` too, as its first frontier, so a
+    * frontier-based step restricts work to `state.filter($"_chg")` on every
+    * superstep alike; the driver aggregates the new `_chg` to decide
+    * convergence. A step without `_chg` (star CC's edge set) converges at
+    * its fixpoint (see [[loop]]).
     */
-  type Step = (DataFrame, Int) => DataFrame
+  type Step = DataFrame => DataFrame
 
   /** Mark `df` as the BUILD side of a shuffled-hash join (loop hot paths
     * only). The loop session prefers shuffled-hash over sort-merge, but
@@ -250,107 +251,101 @@ object Superstep {
 
   private val NarrowWidth = 8
 
-  /** Run `step` over the edge side `side` until the number of changed rows
-    * is ≤ `cfg.convergenceThreshold` (or the change ratio is ≤
-    * `cfg.convergenceRatio`) or `cfg.maxIter` supersteps have completed.
-    * The initial state enters the loop hash-partitioned by `id` at the
-    * edge side's width (Spark plans the placement away when `init` already
-    * has it). A state at another width would propagate its partitioning
-    * through every apply join and re-exchange the edge side every
-    * superstep. `init` must not project an alias of `id` (`id AS comp`):
-    * the checkpointed state records only the first of its equivalent
-    * partitionings, the alias's, so superstep 1 would re-exchange it.
+  /** The one loop entry, shared by the vertex programs and star CC's
+    * edge-set rounds: resume, loop scope, one materializing job per round,
+    * convergence, checkpoint gate, stats, and the lifetime of the edge side
+    * and of the live state. A vertex program declares only its `init`
+    * (carrying `_chg`, its first frontier), its edge `side` and its `step`.
     *
-    * Convergence mirrors `should_continue` (`ow-lp/src/lib.rs:424-426`):
-    * iterate while iterations < maxIter and changed > threshold.
+    * Runs `step` until the number of changed rows is ≤
+    * `cfg.convergenceThreshold` (or the change ratio is ≤
+    * `cfg.convergenceRatio`) or `cfg.maxIter` supersteps have completed;
+    * this mirrors `should_continue` (`ow-lp/src/lib.rs:424-426`).
+    *
+    * `side`: a vertex loop's initial state enters the loop hash-partitioned
+    * by `id` at the edge side's width (Spark plans the placement away when
+    * `init` already has it), and the loop runs at that shuffle width. A
+    * state at another width would propagate its partitioning through every
+    * apply join and re-exchange the edge side every superstep. `init` must
+    * not project an alias of `id` (`id AS comp`): the checkpointed state
+    * records only the first of its equivalent partitionings, the alias's,
+    * so superstep 1 would re-exchange it. `None` (star's edge set, which
+    * has no vertex key) places nothing, runs at the session width, and its
+    * state leaf claims no partitioning (see
+    * [[GraftSqlShim.materializeLocalCheckpointed]]). The side is released
+    * when the loop ends, and the live state's blocks too when it throws.
+    *
+    * A step without `_chg` converges when the round's row count and
+    * order-insensitive fingerprint (`bit_xor(xxhash64(row))`) repeat the
+    * previous state's: the state is its own fixpoint test. Both come from
+    * the round's one materializing job (the counts are its results, the
+    * measure its observation), and the initial (or resumed) state's pair
+    * from the init job, so a resumed run converges at the same round as an
+    * uninterrupted one. Such a step reports `changed` = its row count, 0 at
+    * the fixpoint.
     *
     * Automatic resume: when `cfg.checkpointDir` holds a committed manifest,
     * the loop restarts from that state and iteration (skipping the loop
     * entirely if the manifest says converged); otherwise it starts from
     * `init`. `cfg.maxIter` counts TOTAL supersteps including the pre-crash
-    * ones, matching the reference's iteration cap semantics.
-    * `inputFingerprint` is recorded in every checkpoint manifest; resume
-    * refuses a manifest whose fingerprint differs (see [[resumeOrInit]]).
-    */
-  def loopResumable(
-      init: => DataFrame,
-      side: EdgeSide,
-      step: Step,
-      cfg: graft.model.RunConfig,
-      algo: String,
-      inputFingerprint: Option[Long] = None): LoopResult =
-    drive(init, Some(side.width), step, cfg, algo, inputFingerprint)
-
-  /** The one round driver: resume, loop scope, one materializing job per
-    * round, convergence, checkpoint gate, stats and release, for the
-    * vertex loops ([[loopResumable]]) and star CC's edge-set rounds alike.
-    *
-    * `width`: the vertex loops place the state by `id` at their edge
-    * side's width and run at that shuffle width; `None` (star's edge set,
-    * which has no vertex key) places nothing, runs at the session width,
-    * and its state leaf claims no partitioning (see
-    * [[GraftSqlShim.materializeLocalCheckpointed]]).
-    *
-    * A step whose output carries `_chg` converges by its changed count
-    * (see [[loopResumable]]). A step without it converges when the round's
-    * row count and order-insensitive fingerprint (`bit_xor(xxhash64(row))`)
-    * repeat the previous state's: the state is its own fixpoint test. Both
-    * come from the round's one materializing job (the counts are its
-    * results, the measure its observation), and the initial (or resumed)
-    * state's pair from the init job, so a resumed run converges at the
-    * same round as an uninterrupted one. Such a step reports `changed` =
-    * its row count, 0 at the fixpoint.
+    * ones, matching the reference's iteration cap semantics. `fingerprint`
+    * identifies the input; it is evaluated only when `cfg.checkpointDir` is
+    * set, recorded in every manifest, and resume refuses a manifest whose
+    * fingerprint differs (see [[resumeOrInit]]).
     *
     * Only the superstep jobs carry the loop's [[LoopIdProperty]] and a
     * `"<algo> superstep N"` job description, so they alone feed the phase
     * windows; Spark posts each one's physical plan in its
     * `SparkListenerSQLExecutionStart` event under that description.
     */
-  private[algo] def drive(
+  def loop(
       init: => DataFrame,
-      width: Option[Int],
+      side: Option[EdgeSide],
       step: Step,
       cfg: graft.model.RunConfig,
       algo: String,
-      inputFingerprint: Option[Long]): LoopResult = {
-    require(cfg.checkpointEvery > 0,
-      s"checkpointEvery must be positive, got ${cfg.checkpointEvery}")
+      fingerprint: => Long): LoopResult = {
     val session = SparkSession.active
-    val (start, startIter) = cfg.checkpointDir match {
-      case Some(dir) =>
-        val (state, doneIter, converged) =
-          resumeOrInit(session, dir, init, algo, inputFingerprint)
-        if (converged) return LoopResult(state.drop("_chg"), 0, converged = true, Nil)
-        (state, doneIter)
-      case None => (init, 0)
-    }
-    val loopSession = GraftSqlShim.sessionWithConfs(session,
-      Seq(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.join.preferSortMergeJoin" -> "false",
-      // NO broadcast joins inside the loop: with a sub-threshold state the
-      // planner would otherwise collect + re-broadcast the evolving frontier
-      // EVERY superstep (serial driver cost growing with |V| — measured as
-      // the dominant per-superstep fixed cost at 100K vertices, fatal to
-      // scaling at 4M, and ~4.8 s/round on star CC's 1M-edge path graph).
-      // The co-partitioned shuffled-hash gather join needs zero exchanges
-      // and builds only |partition|-sized hash maps.
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++
-      width.map(w => "spark.sql.shuffle.partitions" -> w.toString): _*)
+    val width = side.map(_.width)
     // the superstep jobs are tagged via a thread-local SparkContext
     // property, and the listener collects only those jobs' stages —
     // concurrent loops in one session keep disjoint phase windows
     val loopId = java.util.UUID.randomUUID().toString
     val listener = new PhaseListener(loopId)
     session.sparkContext.addSparkListener(listener)
+    var releaseBacking: () => Unit = () => () // frees the blocks backing the live state
     try {
+      require(cfg.checkpointEvery > 0,
+        s"checkpointEvery must be positive, got ${cfg.checkpointEvery}")
+      val inputFingerprint = cfg.checkpointDir.map(_ => fingerprint)
+      val (start, startIter) = cfg.checkpointDir match {
+        case Some(dir) =>
+          val (state, doneIter, converged) =
+            resumeOrInit(session, dir, init, algo, inputFingerprint)
+          if (converged) return LoopResult(state.drop("_chg"), 0, converged = true, Nil)
+          (state, doneIter)
+        case None => (init, 0)
+      }
+      val loopSession = GraftSqlShim.sessionWithConfs(session,
+        Seq(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.join.preferSortMergeJoin" -> "false",
+        // NO broadcast joins inside the loop: with a sub-threshold state the
+        // planner would otherwise collect + re-broadcast the evolving frontier
+        // EVERY superstep (serial driver cost growing with |V| — measured as
+        // the dominant per-superstep fixed cost at 100K vertices, fatal to
+        // scaling at 4M, and ~4.8 s/round on star CC's 1M-edge path graph).
+        // The co-partitioned shuffled-hash gather join needs zero exchanges
+        // and builds only |partition|-sized hash maps.
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++
+        width.map(w => "spark.sql.shuffle.partitions" -> w.toString): _*)
       val placed = width.fold(start)(w => start.repartition(w, col("id")))
       // initial state: materialized once, lineage truncated; its observed
       // pair is the first fixpoint test's "previous state"
       val (initView, initRelease, initRows, initMeasure, _) = materializeRound(
         observeRound(GraftSqlShim.bind(loopSession, placed), "init"), "init", width)
       var state = initView
-      var releaseBacking = initRelease // frees the blocks backing `state`
+      releaseBacking = initRelease
       var previous = (initRows, initMeasure)
       var iter = startIter
       var converged = false
@@ -364,7 +359,7 @@ object Superstep {
         // superstep, which at converged-frontier sizes costs as much as the
         // superstep
         val obsName = s"superstep_${iter + 1}"
-        val next = observeRound(GraftSqlShim.bind(loopSession, step(state, iter)), obsName)
+        val next = observeRound(GraftSqlShim.bind(loopSession, step(state)), obsName)
         // tag the materializing job: its stages are this superstep's phases,
         // and driver logs / the UI / SQL execution events name its superstep
         session.sparkContext.setLocalProperty(LoopIdProperty, loopId)
@@ -381,6 +376,10 @@ object Superstep {
             session.sparkContext.setJobDescription(null)
             session.sparkContext.setLocalProperty(LoopIdProperty, null)
           }
+        // the previous state is retired as soon as its successor is pinned
+        releaseBacking()
+        state = view
+        releaseBacking = newRelease
         val byChanged = next.columns.contains("_chg")
         GraftSqlShim.waitListenerBus(session)
         val phases = listener.drain()
@@ -408,10 +407,6 @@ object Superstep {
           }
         }
         val checkpointMs = (System.nanoTime() - t1) / 1000000L
-
-        releaseBacking()
-        state = view
-        releaseBacking = newRelease
         stats ::= IterStats(iter, changed, rows, computeMs, checkpointMs, phases)
       }
       // rebind the final state to the CALLER's session: downstream one-shot
@@ -420,11 +415,37 @@ object Superstep {
       LoopResult(GraftSqlShim.bind(session, state.drop("_chg")),
         iter - startIter, converged, stats.reverse,
         release = releaseBacking)
-    } finally session.sparkContext.removeSparkListener(listener)
+    } catch {
+      case t: Throwable =>
+        releaseBacking()
+        throw t
+    } finally {
+      session.sparkContext.removeSparkListener(listener)
+      side.foreach(_.release())
+    }
+  }
+
+  /** The min-propagation step of CC, BFS and SSSP (the reference's GraphX
+    * Pregel programs with a `min` merge): the frontier sends `message` (an
+    * expression over the edge side's columns and the frontier's `value`)
+    * along its edges, each `dst` keeps the least message, and the apply
+    * join lowers `value` to it; a vertex changes when its message is
+    * smaller. `min` is exact, so the result is bit-identical at any loop
+    * width or salting.
+    */
+  private[algo] def minStep(side: EdgeSide, value: String, message: Column): Step = { state =>
+    val msgs = side.gather(state.filter(col("_chg")).select(col("id"), col(value)))
+      .groupBy(col("dst").as("id")).agg(min(message).as("m"))
+    state.select(col("id"), col(value))
+      .join(shj(msgs), Seq("id"), "left_outer")
+      .select(
+        col("id"),
+        least(col(value), col("m")).as(value),
+        coalesce(col("m") < col(value), lit(false)).as("_chg"))
   }
 
   /** Observe a round's changed count when it carries `_chg`, else its
-    * order-insensitive fingerprint (see [[drive]]).
+    * order-insensitive fingerprint (see [[loop]]).
     */
   private def observeRound(df: DataFrame, name: String): DataFrame =
     df.observe(name,

@@ -1,9 +1,7 @@
 package graft.extract
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlShim}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.model._
 
 /** url → dense Long id dictionary encoding.
@@ -15,12 +13,14 @@ import graft.model._
   * `row_number().over(Window.orderBy(...))` — a single-partition global
   * window — both unusable; SURVEY.md §7.2).
   *
-  * Mechanics: range-repartition + in-partition sort on url, count rows per
-  * partition, broadcast the cumulative offsets (one Long per partition), and
-  * assign offset+position inside `mapPartitions`. Two passes over the url
-  * set, no global sort bottleneck, no driver materialization. Partition
-  * boundaries may differ between runs, but offset+position always equals the
-  * global sorted rank, so the ids don't.
+  * Mechanics: range-repartition + in-partition sort on url, materialized
+  * once with the loops' one-job materializer
+  * ([[org.apache.spark.sql.GraftSqlShim.materializeLocalCheckpointed]]),
+  * whose per-partition row counts give the cumulative offsets (one Long per
+  * partition); a narrow map over the pinned rows assigns offset+position.
+  * One pass over the url set, no global sort bottleneck, no driver
+  * materialization. Partition boundaries may differ between runs, but
+  * offset+position always equals the global sorted rank, so the ids don't.
   */
 object Dictionary {
 
@@ -30,28 +30,18 @@ object Dictionary {
   def build(urls: DataFrame): Dataset[UrlId] = {
     val spark = urls.sparkSession
     import spark.implicits._
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = urls.select(col("url")).na.drop().distinct()
-      .repartitionByRange(parts, col("url"))
-      .sortWithinPartitions("url")
-      .as[String]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val counts = sorted.mapPartitions { it =>
-      Iterator.single(TaskContext.getPartitionId() -> it.size.toLong)
-    }.collect().toMap
-    val offsets = (0 until parts).scanLeft(0L) { (acc, p) =>
-      acc + counts.getOrElse(p, 0L)
-    }.toArray
-    val bOffsets = spark.sparkContext.broadcast(offsets)
-    // materialized BEFORE `sorted` is released: recomputing `sorted` would
-    // re-sample the range bounds, so its partitions would no longer match
-    // `offsets` and ids would come out duplicated and not dense
-    val dict = sorted.mapPartitions { it =>
-      val base = bOffsets.value(TaskContext.getPartitionId())
-      it.zipWithIndex.map { case (url, i) => UrlId(url, base + i) }
-    }.localCheckpoint(eager = true)
-    sorted.unpersist(blocking = false)
-    dict
+    // pinned, not persisted: recomputing the sorted set would re-sample
+    // the range bounds, so its partitions would no longer match `offsets`
+    // and ids would come out duplicated and not dense
+    val (sorted, _, _, partitionRows) = GraftSqlShim.materializeLocalCheckpointed(
+      urls.select(col("url")).na.drop().distinct()
+        .repartitionByRange(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("url"))
+        .sortWithinPartitions("url"),
+      keepPartitioning = false)
+    val offsets = partitionRows.scanLeft(0L)(_ + _)
+    spark.createDataset(sorted.as[String].rdd.mapPartitionsWithIndex { (p, it) =>
+      it.zipWithIndex.map { case (url, i) => UrlId(url, offsets(p) + i) }
+    })
   }
 
   /** Encode url-level edges into the reference's integer edge shape via two

@@ -1,8 +1,9 @@
 package graft
 
-import graft.algo.{LabelPropagation, PageRank, Superstep}
+import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, Paths, Superstep}
 import graft.gen.SyntheticGraph
 import graft.model._
+import org.apache.spark.sql.functions.lit
 
 /** Durable checkpoint + resume: the north rule's "any iteration resumable
   * mid-convergence" requirement (the reference has no equivalent — a failed
@@ -262,5 +263,50 @@ class CheckpointSpec extends SparkSpec {
     val got = resumed.ranks.collect().map(r => r.id -> r.rank).toMap
     got.keySet shouldBe expected.keySet
     got.foreach { case (k, v) => v shouldBe expected(k) +- 1e-9 }
+  }
+
+  test("CC resumes mid-convergence to identical components") {
+    val dir = java.nio.file.Files.createTempDirectory("cc-chk").toString
+    // a path needs diameter-many min-propagation rounds
+    val edges = spark.createDataset(
+      (0L until 20L).map(i => Edge(i + 1, i)) ++ Seq(Edge(40L, 41L), Edge(42L, 41L)))
+    val cfg = RunConfig(checkpointDir = Some(dir), checkpointEvery = 3, maxIter = Int.MaxValue)
+    val full = ConnectedComponents.run(edges, cfg)
+    val expected = full.components.collect().map(c => c.id -> c.component).toMap
+    full.iterations should be > 3
+
+    val Some((latest, json)) = Superstep.latestManifest(spark, dir)
+    json should include("\"algo\":\"cc\"")
+    json should include("\"converged\":true")
+    val kept = keepOnlyEarliest(dir)
+    kept should be < latest
+
+    val resumed = ConnectedComponents.run(edges, cfg)
+    resumed.iterations should be < full.iterations // only the remaining rounds
+    resumed.components.collect().map(c => c.id -> c.component).toMap shouldBe expected
+    full.release(); resumed.release()
+  }
+
+  test("LP, PR, CC, star CC and SSSP refuse another algorithm's checkpoint and keep nothing cached") {
+    val dir = java.nio.file.Files.createTempDirectory("bfs-chk-foreign").toString
+    val edges = spark.createDataset(
+      SyntheticGraph.randomEdgesLocal(60, 3, seed = 4L).map { case (s, d) => Edge(s, d) })
+    Paths.bfs(edges, 0L, cfg = RunConfig(checkpointDir = Some(dir))).release()
+    val cfg = RunConfig(checkpointDir = Some(dir))
+    val weighted = edges.select($"src", $"dst", lit(1.0).as("weight")).as[WEdge]
+    Seq[(String, () => Unit)](
+      "lp" -> (() => LabelPropagation.run(edges, spark.createDataset(Seq(Seed(0L, 7L))), cfg)),
+      "pagerank" -> (() => PageRank.run(edges, cfg = cfg)),
+      "cc" -> (() => ConnectedComponents.run(edges, cfg)),
+      "cc_star" -> (() => ConnectedComponents.runStar(edges, cfg = cfg)),
+      "sssp" -> (() => Paths.sssp(weighted, 0L, cfg))
+    ).foreach { case (algo, run) =>
+      withClue(s"$algo: ") {
+        val before = spark.sparkContext.getPersistentRDDs.size
+        val ex = intercept[IllegalStateException](run())
+        ex.getMessage should include(s"algo 'bfs', not '$algo'")
+        spark.sparkContext.getPersistentRDDs.size shouldBe before
+      }
+    }
   }
 }

@@ -80,6 +80,34 @@ class PipelineSpec extends SparkSpec {
     encoded shouldBe pairs.indices.map(i => (i.toLong, ((i * 7919L + 13) % n))).sorted
   }
 
+  test("dictionary build over 20K urls submits a pinned number of jobs") {
+    def url(i: Int) = f"https://x.example/$i%05d"
+    val urlEdges = (0 until 20000).map(i => (url(i), url((i * 7919 + 13) % 20000)))
+      .toDF("src_url", "dst_url").as[UrlEdge].repartition(8)
+    val group = "dictionary-build-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(ev: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(ev.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // in a fresh context the listener can miss the first job it should
+      // see, so an uncounted job goes first
+      spark.range(1).count()
+      org.apache.spark.sql.GraftSqlShim.waitListenerBus(spark)
+      spark.sparkContext.setJobGroup(group, "Dictionary.build")
+      try Dictionary.buildFromEdges(urlEdges) finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftSqlShim.waitListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // under AQE each exchange's map stage is a job of its own; then the
+    // range-bounds sampling and the one job that materializes, pins and
+    // counts the sorted urls. No counting pass and no second copy of the
+    // urls: those were 2 more jobs
+    jobs.get shouldBe 6
+  }
+
   test("pages → extract → encode reproduces the generated topology exactly") {
     val n = 120L
     val density = 5
