@@ -92,11 +92,11 @@ object Bench {
     val seeds = SyntheticGraph.seeds(spark, n)
     val lp = timedBest(LabelPropagation.run(edges, seeds),
       (r: LabelPropagation.LpResult) => r.release())
-    val lpFp = ConnectedComponents.fingerprint64(lp.value.labels.toDF())
+    val lpFp = Superstep.fingerprint64(lp.value.labels.toDF())
     lp.value.release()
     val pr = timedBest(PageRank.run(edges),
       (r: PageRank.PrResult) => r.release())
-    val prFp = ConnectedComponents.fingerprint64(
+    val prFp = Superstep.fingerprint64(
       pr.value.ranks.toDF().select(col("id"), round(col("rank"), 6).as("r")))
     pr.value.release()
     // IterStats.computeMs is one superstep's job wall time

@@ -31,24 +31,24 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // every vertex starts as its own component and in the first frontier;
-    // aggregated rather than projected as `id AS comp` (see Superstep.loop
-    // on aliases)
-    val init = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id")))
-      .groupBy($"id").agg(min($"id").as("comp"))
-      .select($"id", $"comp", lit(true).as("_chg"))
-    // undirected doubling, deduped (duplicates are irrelevant for min),
-    // keyed by src — every superstep's gather reuses its partitioning
-    val side = Superstep.edgeSide(
-      edges.select($"src", $"dst")
-        .union(edges.select($"dst".as("src"), $"src".as("dst")))
-        .filter($"src" =!= $"dst")
-        .distinct(),
-      "src", cfg)(init.count())
-
-    val res = Superstep.loop(init, Some(side), Superstep.minStep(side, "comp", $"comp"),
-      cfg.copy(convergenceThreshold = 0L), algo = "cc", fingerprint64(side.edges))
+    val vertices = Superstep.vertexSet(edges)
+    val res = try {
+      // undirected doubling, deduped (duplicates are irrelevant for min),
+      // keyed by src — every superstep's gather reuses its partitioning
+      val side = Superstep.edgeSide(
+        edges.select($"src", $"dst")
+          .union(edges.select($"dst".as("src"), $"src".as("dst")))
+          .filter($"src" =!= $"dst")
+          .distinct(),
+        "src", cfg, vertices.count)
+      // every vertex starts as its own component and in the first frontier;
+      // aggregated rather than projected as `id AS comp` (see Superstep.loop
+      // on aliases)
+      val init = vertices.ids.groupBy($"id").agg(min($"id").as("comp"))
+        .select($"id", $"comp", lit(true).as("_chg"))
+      Superstep.loop(init, Some(side), Superstep.minStep(side, "comp", $"comp"),
+        cfg.copy(convergenceThreshold = 0L), algo = "cc", Superstep.fingerprint64(side.edges))
+    } finally vertices.release()
     val comps = res.state.select($"id", $"comp".as("component"))
       .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
     val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
@@ -83,16 +83,12 @@ object ConnectedComponents {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val vertices = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val vertices = Superstep.vertexSet(edges)
     // u32-id graphs pack each round's two distinct() exchanges onto ONE
     // long pk=(u<<32)|v — 16 vs 24 B of UnsafeRow per edge on the two
     // biggest per-round exchanges (same recipe as LP's packExchange;
     // bijective for ids < 2^32, so the distinct sets are identical).
-    val idB = vertices.agg(
-      coalesce(min($"id"), lit(0L)), coalesce(max($"id"), lit(0L))).head()
-    val packStar = idB.getLong(0) >= 0L && idB.getLong(1) < (1L << 32)
+    val packStar = vertices.fitsU32
     def distinctEdges(df: DataFrame): DataFrame =
       if (!packStar) df.distinct()
       else df.select((shiftleft($"u", 32) + $"v").as("pk")).distinct()
@@ -136,10 +132,11 @@ object ConnectedComponents {
     // `edges` would let duplicate rows cancel in the XOR fold)
     try {
       val res = Superstep.loop(initial, None, round,
-        cfg.copy(maxIter = maxRounds, convergenceThreshold = 0L), "cc_star", fingerprint64(initial))
+        cfg.copy(maxIter = maxRounds, convergenceThreshold = 0L), "cc_star",
+        Superstep.fingerprint64(initial))
 
       // final vertex mapping + count plan under the CALLER's session/confs
-      val comps = vertices
+      val comps = vertices.ids
         .join(res.state.select($"u".as("id"), $"v".as("c")), Seq("id"), "left_outer")
         .select($"id", coalesce($"c", $"id").as("component"))
         .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
@@ -147,14 +144,14 @@ object ConnectedComponents {
       res.release()
       CcResult(comps, res.iterations, nComp, res.stats,
         release = () => comps.unpersist(blocking = false))
-    } finally vertices.unpersist(blocking = false)
+    } finally vertices.release()
   }
 
   /** Order-sensitive FNV-64 fingerprint of the component column sorted by
     * vertex id — exact parity with `connected_components_shell.scala:34-37,
     * 77-83`. FNV chaining cannot be merged across partitions, so this runs
-    * as a single ordered pass; use [[fingerprint64]] for a scalable,
-    * order-insensitive fingerprint at 100 TB.
+    * as a single ordered pass; use [[Superstep.fingerprint64]] for a
+    * scalable, order-insensitive fingerprint at 100 TB.
     */
   def fnvHash(components: Dataset[VertexComponent]): Long = {
     val spark = components.sparkSession
@@ -166,17 +163,5 @@ object ConnectedComponents {
         it.foreach(c => acc = (acc ^ c) * 0x100000001b3L)
         Iterator.single(acc)
       }.head()
-  }
-
-  /** Order-insensitive distributed fingerprint: XOR-fold of xxhash64 over
-    * all rows (XOR is associative/commutative → identical across any
-    * partitioning, O(1) driver data, no ANSI overflow — unlike a Long sum).
-    * Collision caveat: duplicate rows cancel pairwise; callers fingerprint
-    * keyed result sets (unique ids), where that cannot happen.
-    */
-  def fingerprint64(df: DataFrame): Long = {
-    val cols = df.columns.map(col)
-    val r = df.agg(bit_xor(xxhash64(cols: _*))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 }

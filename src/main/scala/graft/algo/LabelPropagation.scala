@@ -119,10 +119,15 @@ object LabelPropagation {
     // plus a narrower cached adjacency, placed without a grouping shuffle.
     val unitW = edgeCount <= eAgg.getLong(1) + eAgg.getLong(1) / 100
     val adjacency = if (unitW) boundedEdges.select($"src", $"dst") else packedRaw
+    // without a declared universe, one pass over the endpoints and the
+    // seeded (possibly isolated) nodes gives the vertex set, its size and
+    // its bounds
+    val pass = numNodes match {
+      case Some(_) => None
+      case None => Some(Superstep.vertexSet(edges, seeds.select($"node".as("id"))))
+    }
     // partitioned by dst once so every gather join reuses the same exchange
-    val side = Superstep.edgeSide(adjacency, "dst", cfg)(numNodes.getOrElse(
-      boundedEdges.select($"src".as("id")).union(boundedEdges.select($"dst".as("id")))
-        .union(seeds.select($"node".as("id"))).distinct().count()))
+    val side = Superstep.edgeSide(adjacency, "dst", cfg, numNodes.getOrElse(pass.get.count))
 
     val dedupedSeedsAll = graft.io.EdgeTsv.dedupSeeds(seeds)
     // unsupervised ⇔ the RAW seed map is empty (lib.rs:160 checks
@@ -143,10 +148,7 @@ object LabelPropagation {
     val vertices = numNodes match {
       // declared universe covers isolated ids too (lpst init_labels)
       case Some(n) => spark.range(n).toDF("id")
-      case None => side.edges.select($"src".as("id"))
-        .union(side.edges.select($"dst".as("id")))
-        .union(dedupedSeeds.select($"node".as("id"))) // seeded isolated ids
-        .distinct()
+      case None => pass.get.ids
     }
     val init: DataFrame =
       if (unsupervised) {
@@ -174,10 +176,7 @@ object LabelPropagation {
     val labelBounds: (Long, Long) =
       if (unsupervised) numNodes match {
         case Some(n) => (0L, n - 1)
-        case None =>
-          val r = vertices.agg(
-            coalesce(min($"id"), lit(0L)), coalesce(max($"id"), lit(0L))).head()
-          (r.getLong(0), r.getLong(1))
+        case None => pass.get.bounds.getOrElse((0L, 0L))
       } else {
         val r = dedupedSeeds.agg(
           coalesce(min($"label"), lit(0L)), coalesce(max($"label"), lit(0L))).head()
@@ -217,10 +216,9 @@ object LabelPropagation {
       // output by src once, then BOTH aggregation levels (label counts,
       // then max(count, min-label tiebreak)) run in the same post-shuffle
       // stage as chained codegen HashAggregates — hash(src) already
-      // clusters (src, label). The earlier TypedImperativeAggregate
-      // ([[graft.functions.MajorityVoteAgg]], kept as the §2.8 UDAF
-      // surface) plans as ObjectHashAggregate, which falls back to
-      // SORT-based aggregation beyond 128 groups per partition
+      // clusters (src, label). An earlier TypedImperativeAggregate (a
+      // `majority_vote` UDAF) planned as ObjectHashAggregate, which falls
+      // back to SORT-based aggregation beyond 128 groups per partition
       // (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) —
       // at 4M vertices that sorted all 40M gather rows every superstep,
       // ~20× the task time of this plan.
@@ -285,11 +283,13 @@ object LabelPropagation {
       val edgeRows =
         if (unitW) side.edges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
         else side.edges
-      ConnectedComponents.fingerprint64(edgeRows) ^
-        ConnectedComponents.fingerprint64(dedupedSeeds.toDF())
+      Superstep.fingerprint64(edgeRows) ^ Superstep.fingerprint64(dedupedSeeds.toDF())
     }
     val res = try Superstep.loop(init, Some(side), step, cfg, algo = "lp", inputFp)
-      finally dedupedSeeds.unpersist(blocking = false)
+      finally {
+        dedupedSeeds.unpersist(blocking = false)
+        pass.foreach(_.release())
+      }
 
     val labelsOut = res.state.filter($"label".isNotNull)
       .select($"id", $"label").as[VertexLabel]

@@ -60,18 +60,16 @@ object PageRank {
     val contribRaw = packed.join(outDeg, "src")
       .select($"src", $"dst", ($"w".cast("double") * (lit(1.0) / $"deg")).as("cw"))
 
-    val vertices = edges.select($"src".as("id"))
-      .union(edges.select($"dst".as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val numVertices = vertices.count()
+    val vertices = Superstep.vertexSet(edges)
+    val numVertices = vertices.count
     // contributions scatter out of src: the edge side is keyed by src (a
     // src with 10^7 out-edges is salted across partitions)
-    val side = Superstep.edgeSide(contribRaw, "src", cfg)(numVertices)
+    val side = Superstep.edgeSide(contribRaw, "src", cfg, numVertices)
     packed.unpersist(blocking = false)
 
     // after Pregel superstep 0 (initial message to every vertex): every
     // vertex received one, so every vertex is in the first frontier
-    val init: DataFrame = vertices.select(
+    val init: DataFrame = vertices.ids.select(
       $"id", lit(resetProb).as("rank"), lit(resetProb).as("delta"), lit(true).as("_chg"))
 
     def step(state: DataFrame): DataFrame = {
@@ -91,16 +89,18 @@ object PageRank {
     }
 
     val res = try Superstep.loop(init, Some(side), step, cfg.copy(maxIter = maxIter),
-        algo = "pagerank", ConnectedComponents.fingerprint64(side.edges))
-      finally vertices.unpersist(blocking = false)
+        algo = "pagerank", Superstep.fingerprint64(side.edges))
+      finally vertices.release()
 
-    // SPARK-18847: scale ranks so they sum to the vertex count
-    val rawSum = res.state.agg(sum($"rank")).head().getDouble(0)
-    val factor = numVertices.toDouble / rawSum
+    // SPARK-18847: scale ranks so they sum to the vertex count (an empty
+    // graph has no ranks to scale)
+    val factor =
+      if (numVertices == 0) 0.0
+      else numVertices.toDouble / res.state.agg(sum($"rank")).head().getDouble(0)
     val ranks = res.state
       .select($"id", ($"rank" * factor).as("rank")).as[VertexRank]
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val agg = ranks.agg(max($"rank"), sum($"rank")).head()
+    val agg = ranks.agg(coalesce(max($"rank"), lit(0.0)), coalesce(sum($"rank"), lit(0.0))).head()
     // ranks is persisted + materialized above — the loop state behind it
     // can be freed now rather than leaking one retired state per run
     res.release()

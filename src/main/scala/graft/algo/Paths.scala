@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.model._
@@ -67,31 +67,27 @@ object Paths {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val side = Superstep.edgeSide(
-      edges.groupBy($"src", $"dst").agg(min($"weight").as("weight")), "src", cfg)(
-      edges.select($"src").union(edges.select($"dst")).distinct().count())
-
-    // DENSE state (one row per vertex, +∞ = unreached — the reference's
-    // sentinel, `sssp_graphx_shell.scala:27`): keeps the apply join
-    // left-outer so the state's partitioning survives each superstep (a
-    // full-outer join on a grow-as-reached state would force two state
-    // re-exchanges per superstep — see LabelPropagation).
-    def init: DataFrame =
-      side.edges.select($"src".as("id"))
-        .union(side.edges.select($"dst".as("id")))
-        .union(spark.range(1).select(lit(source).as("id"))) // isolated source
-        .distinct()
-        .select($"id",
-          when($"id" === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"),
-          ($"id" === source).as("_chg"))
-
-    // input identity for checkpoint manifests: adjacency ⊕ mixed source id
-    // (a different source is a different run over the same table — the
-    // plain id would cancel against nothing, so it goes through splitmix64)
-    val res = Superstep.loop(init, Some(side),
-      Superstep.minStep(side, "dist", $"dist" + $"weight"), cfg, algo,
-      ConnectedComponents.fingerprint64(side.edges) ^
-        graft.functions.SplitMix64Expr.mix(source))
+    val vertices = Superstep.vertexSet(edges,
+      spark.range(1).select(lit(source).as("id"))) // isolated source
+    val res = try {
+      val side = Superstep.edgeSide(
+        edges.groupBy($"src", $"dst").agg(min($"weight").as("weight")), "src", cfg,
+        vertices.count)
+      // DENSE state (one row per vertex, +∞ = unreached — the reference's
+      // sentinel, `sssp_graphx_shell.scala:27`): keeps the apply join
+      // left-outer so the state's partitioning survives each superstep (a
+      // full-outer join on a grow-as-reached state would force two state
+      // re-exchanges per superstep — see LabelPropagation).
+      val init = vertices.ids.select($"id",
+        when($"id" === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"),
+        ($"id" === source).as("_chg"))
+      // input identity for checkpoint manifests: adjacency ⊕ mixed source id
+      // (a different source is a different run over the same table — the
+      // plain id would cancel against nothing, so it goes through splitmix64)
+      Superstep.loop(init, Some(side),
+        Superstep.minStep(side, "dist", $"dist" + $"weight"), cfg, algo,
+        Superstep.fingerprint64(side.edges) ^ graft.functions.SplitMix64Expr.mix(source))
+    } finally vertices.release()
     // absent-row output contract: unreachable vertices are not emitted
     val dists = res.state.filter($"dist" < Double.PositiveInfinity)
       .select($"id", $"dist").as[VertexDist]

@@ -1,7 +1,7 @@
 package graft.algo
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.fs.Path
@@ -208,33 +208,64 @@ object Superstep {
     }
   }
 
+  /** An algorithm's vertex set, from [[vertexSet]]: the distinct `ids`, their
+    * `count`, their (min, max) (None when the set is empty), and the
+    * release of the rows pinned behind `ids`.
+    */
+  final case class VertexSet(
+      ids: DataFrame, count: Long, bounds: Option[(Long, Long)], release: () => Unit) {
+    /** Every id fits an unsigned 32-bit lane (vacuously when empty). */
+    def fitsU32: Boolean = bounds.forall { case (lo, hi) => lo >= 0L && hi < (1L << 32) }
+  }
+
+  /** The one vertex pass of an algorithm's setup: the distinct endpoints of
+    * `edges` and ids of `more` (one `id` column each), pinned and
+    * hash-partitioned by `id`, with their count (the job's per-partition
+    * counts) and bounds (observed) from the one job that pins them
+    * ([[GraftSqlShim.materializeLocalCheckpointed]]). The caller releases
+    * the set once its init (or its final join) is materialized.
+    */
+  def vertexSet(edges: Dataset[_], more: DataFrame*): VertexSet = {
+    val ids = (edges.select(col("src").as("id")) +: edges.select(col("dst").as("id")) +: more)
+      .reduce(_ union _).distinct()
+    val (set, release, observed, partitionRows) = GraftSqlShim.materializeLocalCheckpointed(
+      ids.observe("vertex_pass", min(col("id")), max(col("id"))), keepPartitioning = true)
+    val b = observed("vertex_pass")
+    VertexSet(set, partitionRows.sum,
+      if (b.isNullAt(0)) None else Some((b.getLong(0), b.getLong(1))), release)
+  }
+
   /** Place a loop's edge side: partition `raw` by `key` (the endpoint the
-    * gather joins the vertex state on), persist and materialize it once.
-    * Keys with more than `cfg.hubDegreeThreshold` rows are salted across
-    * [[SkewJoin.AutoK]] partitions, keyed by a hash of the opposite
-    * endpoint; uniform graphs pay only the one degree scan over the
-    * persisted table, which needs no exchange.
+    * gather joins the vertex state on), persist it, and in the one
+    * aggregation that fills the cache count its rows and find the largest
+    * per-key row count (a group-by on the key-partitioned cache, so no
+    * exchange). Only when that maximum exceeds `cfg.hubDegreeThreshold` are
+    * the hot keys salted across [[SkewJoin.AutoK]] partitions, keyed by a
+    * hash of the opposite endpoint.
     *
     * Loop shuffle width: measured (interleaved same-JVM, BENCH.md §9) at 2K
     * vertices an 8-way loop runs the whole 75-superstep PageRank 2.3×
     * faster than the 32-way session width (median superstep 180 ms vs
     * 510 ms — task scheduling dominates tiny states), while at 100K
     * vertices 32-way is ~1.17× faster than 8-way and at ≥4M the session
-    * width wins outright. So states of ≤ 16,384 vertices under a wider
-    * session narrow to 8-way, and the edge side is re-partitioned at that
-    * width so the gather stays co-partitioned and exchange-free. The
-    * `vertexCount` thunk is only forced when the session is wider than 8
-    * and the edge side itself is small (≤ 2^20 rows), so no extra job
-    * appears at scale. Otherwise, and for a salted (hub-skewed, hence big)
-    * graph, the loop runs at the session width.
+    * width wins outright. So states of ≤ 16,384 vertices (`vertexCount`)
+    * under a wider session, over an edge side of ≤ 2^20 rows, narrow to
+    * 8-way, and the edge side is re-partitioned at that width so the gather
+    * stays co-partitioned and exchange-free. Otherwise, and for a salted
+    * (hub-skewed, hence big) graph, the loop runs at the session width.
     */
-  def edgeSide(raw: DataFrame, key: String, cfg: graft.model.RunConfig)(
-      vertexCount: => Long): EdgeSide = {
+  def edgeSide(raw: DataFrame, key: String, cfg: graft.model.RunConfig,
+      vertexCount: Long): EdgeSide = {
     val byKey = raw.repartition(col(key)).persist(StorageLevel.MEMORY_AND_DISK)
-    val rows = byKey.count()
+    val placed = byKey.groupBy(col(key)).agg(count(lit(1)).as("n"))
+      .agg(coalesce(sum(col("n")), lit(0L)), coalesce(max(col("n")), lit(0L))).head()
+    val (rows, maxKeyRows) = (placed.getLong(0), placed.getLong(1))
     val spread = if (key == "src") "dst" else "src"
     val sessionWidth = raw.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    SkewJoin.plan(byKey, key, spread, SkewJoin.AutoK, cfg.hubDegreeThreshold) match {
+    val salt =
+      if (maxKeyRows <= cfg.hubDegreeThreshold) None
+      else SkewJoin.plan(byKey, key, spread, SkewJoin.AutoK, cfg.hubDegreeThreshold)
+    salt match {
       case Some(p) =>
         byKey.unpersist(blocking = false)
         new EdgeSide(p.salted, key, Some(p), sessionWidth)
@@ -462,6 +493,18 @@ object Superstep {
     val m = observed.getOrElse(name, throw new IllegalStateException(
       s"observed metrics for $name missing from the materializing job"))
     (view, release, partitionRows.sum, if (m.isNullAt(0)) 0L else m.getLong(0), partitionRows)
+  }
+
+  /** Order-insensitive distributed fingerprint, the loops' input identity:
+    * XOR-fold of xxhash64 over all rows (XOR is associative/commutative →
+    * identical across any partitioning, O(1) driver data, no ANSI overflow
+    * — unlike a Long sum). Collision caveat: duplicate rows cancel
+    * pairwise; callers fingerprint keyed or distinct row sets, where that
+    * cannot happen.
+    */
+  def fingerprint64(df: DataFrame): Long = {
+    val r = df.agg(bit_xor(xxhash64(df.columns.map(col): _*))).head()
+    if (r.isNullAt(0)) 0L else r.getLong(0)
   }
 
   /** Resume state from the newest committed checkpoint under `dir`, or fall

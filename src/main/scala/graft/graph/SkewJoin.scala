@@ -13,7 +13,9 @@ import org.apache.spark.storage.StorageLevel
   * Superstep) nothing re-splits them. The classic fix, done once at plan
   * time because the edge table is iteration-invariant:
   *
-  *  - detect hot keys (frequency > threshold) with one aggregation;
+  *  - detect hot keys (frequency > threshold) with one aggregation; the
+  *    edge side's placement job (`Superstep.edgeSide`) already finds the
+  *    largest key frequency, so uniform graphs never run it;
   *  - give the big side a salt column: `hash(otherCol) % k` for hot keys,
   *    0 otherwise, and pre-partition it by (key, salt);
   *  - per iteration, replicate only the state rows of hot keys k ways
@@ -40,8 +42,7 @@ object SkewJoin {
     * salt hash (any column uncorrelated with the key — e.g. the opposite
     * endpoint). Keys with more than `threshold` rows are hot. Returns None
     * when no key is hot — callers then keep the plain single-key
-    * partitioning and pay zero per-iteration salting overhead (the hot-key
-    * detection itself is one map-side-combinable count aggregation).
+    * partitioning and pay zero per-iteration salting overhead.
     */
   def plan(big: DataFrame, keyCol: String, spreadCol: String,
            k: Int, threshold: Long): Option[SaltPlan] = {

@@ -33,13 +33,6 @@ object model {
   /** One weighted directed edge (SSSP input; 3rd TSV column as Double). */
   final case class WEdge(src: Long, dst: Long, weight: Double)
 
-  /** Pre-aggregated edge with multiplicity — the engine's at-rest adjacency
-    * form. `w` = number of parallel (src,dst) copies; votes and PageRank
-    * contributions multiply by it, so semantics are identical to the raw
-    * multi-edge list at a fraction of the shuffle volume.
-    */
-  final case class PackedEdge(src: Long, dst: Long, w: Long)
-
   /** CSR-style per-source adjacency block: all out-neighbours of `src`,
     * sorted ascending, with parallel multiplicities. The Spark-native
     * equivalent of the reference CSR (`lpst/src/lib.rs:27-44`).

@@ -12,8 +12,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *    the user's shared session conf
   *  - materializing loop state, its local checkpoint and its observed
   *    metrics in one job, as a flat `LogicalRDD` leaf — the one state
-  *    leaf of every loop, star CC's rounds included, and the pinned
-  *    sorted url set of `Dictionary.build`.
+  *    leaf of every loop, star CC's rounds included, each algorithm's
+  *    vertex set (`Superstep.vertexSet`), and the pinned sorted url set
+  *    of `Dictionary.build`.
   */
 object GraftSqlShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

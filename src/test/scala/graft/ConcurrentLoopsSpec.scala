@@ -4,7 +4,7 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
-import graft.algo.{ConnectedComponents, PageRank}
+import graft.algo.{PageRank, Superstep}
 import graft.gen.SyntheticGraph
 import graft.model._
 
@@ -27,9 +27,9 @@ class ConcurrentLoopsSpec extends SparkSpec {
     // solo reference runs (sequential → no concurrency in phase capture)
     val soloA = PageRank.run(edges(7L), maxIter = 12)
     val soloB = PageRank.run(edges(8L), maxIter = 12)
-    val fpA = ConnectedComponents.fingerprint64(
+    val fpA = Superstep.fingerprint64(
       soloA.ranks.toDF().select($"id", org.apache.spark.sql.functions.round($"rank", 9).as("r")))
-    val fpB = ConnectedComponents.fingerprint64(
+    val fpB = Superstep.fingerprint64(
       soloB.ranks.toDF().select($"id", org.apache.spark.sql.functions.round($"rank", 9).as("r")))
     soloA.release(); soloB.release()
 
@@ -38,9 +38,9 @@ class ConcurrentLoopsSpec extends SparkSpec {
     val (a, b) = (Await.result(fA, 5.minutes), Await.result(fB, 5.minutes))
 
     // same results as solo (concurrency must not change the computation)
-    ConnectedComponents.fingerprint64(
+    Superstep.fingerprint64(
       a.ranks.toDF().select($"id", org.apache.spark.sql.functions.round($"rank", 9).as("r"))) shouldBe fpA
-    ConnectedComponents.fingerprint64(
+    Superstep.fingerprint64(
       b.ranks.toDF().select($"id", org.apache.spark.sql.functions.round($"rank", 9).as("r"))) shouldBe fpB
 
     // every superstep's drained window is the loop's own canonical

@@ -118,6 +118,12 @@ class GraphAlgoSpec extends SparkSpec {
       TriangleCount.run(edgeDs(tooBig))
     }
     ex.getMessage should include("2^32")
+    // the bounds cover every vertex: an id that only a self-loop names is
+    // refused too
+    val selfLoopOnly = Seq[(Long, Long)]((1L << 32, 1L << 32), (0L, 1L), (1L, 2L), (0L, 2L))
+    intercept[IllegalArgumentException] {
+      TriangleCount.run(edgeDs(selfLoopOnly))
+    }.getMessage should include(s"[0, ${1L << 32}]")
     // a negative id would set the packed keys' high bits: also rejected
     val negative = Seq[(Long, Long)]((-1L, 1L), (1L, 2L), (2L, -1L))
     val neg = intercept[IllegalArgumentException] {

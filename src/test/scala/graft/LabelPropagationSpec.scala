@@ -251,22 +251,6 @@ class LabelPropagationSpec extends SparkSpec {
       .labels.count() shouldBe 1L
   }
 
-  test("MajorityVoteAgg (UDAF surface) == the codegen max-struct vote plan") {
-    import org.apache.spark.sql.functions._
-    val rows = for { s <- 0L until 60L; j <- 0 until 7 } yield
-      (s, math.abs(SyntheticGraph.splitmix64(s * 31 + j)) % 5, 1L + (j % 3))
-    val df = rows.toDF("src", "label", "w")
-    val agg = df.groupBy($"src")
-      .agg(graft.functions.MajorityVoteAgg.majorityVote($"label", $"w").as("vote"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val codegen = df.groupBy($"src", $"label").agg(sum($"w").as("cnt"))
-      .groupBy($"src")
-      .agg(max(struct($"cnt", (-$"label").as("neg"))).as("m"))
-      .select($"src", (-$"m.neg").as("vote"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    agg shouldBe codegen
-  }
-
   test("near-unit expansion: narrow vote == weighted vote, dups still weighted") {
     // ring edges are distinct by construction → the narrow (w-less) vote
     // path engages; appending one duplicated edge (multiplicity 2, 0.07%

@@ -18,13 +18,12 @@ class LoopWidthSpec extends SparkSpec {
 
   test("edgeSide: tiny states narrow to 8-way only under a wider session") {
     val path = edgeDs((0L until 40L).map(i => (i, i + 1))).toDF()
-    def width(cfg: RunConfig, vertices: => Long): (Int, Int) = {
-      val side = Superstep.edgeSide(path, "src", cfg)(vertices)
+    def width(cfg: RunConfig, vertices: Long): (Int, Int) = {
+      val side = Superstep.edgeSide(path, "src", cfg, vertices)
       try (side.width, side.edges.rdd.getNumPartitions) finally side.release()
     }
-    // the test session is 8-way: the vertex count is never asked for
-    width(RunConfig(), fail("vertex count forced under an 8-way session")) shouldBe
-      (8, 8)
+    // the test session is 8-way: a tiny state keeps the session width
+    width(RunConfig(), 2000L) shouldBe (8, 8)
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     try {
       width(RunConfig(), 2000L) shouldBe (8, 8)
@@ -51,11 +50,11 @@ class LoopWidthSpec extends SparkSpec {
         (($"src" + $"dst") % 5 + 1).cast("double").as("weight")).as[WEdge],
         source = vertices.min)
       val out = Seq(
-        ConnectedComponents.fingerprint64(lp.labels.toDF()),
-        ConnectedComponents.fingerprint64(
+        Superstep.fingerprint64(lp.labels.toDF()),
+        Superstep.fingerprint64(
           pr.ranks.toDF().select($"id", round($"rank", 9).as("r"))),
-        ConnectedComponents.fingerprint64(cc.components.toDF()),
-        ConnectedComponents.fingerprint64(ss.dists.toDF()))
+        Superstep.fingerprint64(cc.components.toDF()),
+        Superstep.fingerprint64(ss.dists.toDF()))
       Seq(lp.release, pr.release, cc.release, ss.release).foreach(_())
       out
     }
