@@ -2,7 +2,6 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.model._
 
 /** Weakly-connected components by iterative min-id propagation.
@@ -24,7 +23,7 @@ object ConnectedComponents {
       iterations: Int,
       componentCount: Long,
       stats: List[Superstep.IterStats],
-      // frees the persisted components once the result is consumed
+      // frees only the columnar cache of `components`; `run` freed the rest
       release: () => Unit = () => ())
 
   def run(edges: Dataset[Edge], cfg: RunConfig = RunConfig(maxIter = Int.MaxValue)): CcResult = {
@@ -49,13 +48,18 @@ object ConnectedComponents {
       Superstep.loop(init, Some(side), Superstep.minStep(side, "comp", $"comp"),
         cfg.copy(convergenceThreshold = 0L), algo = "cc", Superstep.fingerprint64(side.edges))
     } finally vertices.release()
-    val comps = res.state.select($"id", $"comp".as("component"))
-      .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
-    val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
-    // comps is persisted + materialized — free the loop state behind it
-    res.release()
-    CcResult(comps, res.iterations, nComp, res.stats,
-      release = () => comps.unpersist(blocking = false))
+    result(res.state.select($"id", $"comp".as("component")).as[VertexComponent], res)
+  }
+
+  /** Fill either algorithm's `comps`, freeing the loop state `res`; the count
+    * is observed as the roots (`id == component`): a component's id is its
+    * least member.
+    */
+  private def result(comps: Dataset[VertexComponent], res: Superstep.LoopResult): CcResult = {
+    val filled = try Superstep.fill(comps, count(when(col("id") === col("component"), 1)))
+      finally res.release()
+    CcResult(filled.ds, res.iterations, filled.summary.getLong(0), res.stats,
+      release = () => filled.release())
   }
 
   /** Weakly-connected components by alternating large-star / small-star
@@ -135,15 +139,11 @@ object ConnectedComponents {
         cfg.copy(maxIter = maxRounds, convergenceThreshold = 0L), "cc_star",
         Superstep.fingerprint64(initial))
 
-      // final vertex mapping + count plan under the CALLER's session/confs
-      val comps = vertices.ids
+      // final vertex mapping, filled under the CALLER's session/confs
+      result(vertices.ids
         .join(res.state.select($"u".as("id"), $"v".as("c")), Seq("id"), "left_outer")
         .select($"id", coalesce($"c", $"id").as("component"))
-        .as[VertexComponent].persist(StorageLevel.MEMORY_AND_DISK)
-      val nComp = comps.agg(countDistinct($"component")).head().getLong(0)
-      res.release()
-      CcResult(comps, res.iterations, nComp, res.stats,
-        release = () => comps.unpersist(blocking = false))
+        .as[VertexComponent], res)
     } finally vertices.release()
   }
 

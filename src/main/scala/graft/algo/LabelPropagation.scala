@@ -1,8 +1,7 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.model._
 
 /** Synchronous semi-supervised / unsupervised label propagation as an
@@ -56,7 +55,7 @@ object LabelPropagation {
       converged: Boolean,
       stats: List[Superstep.IterStats],
       edgeCount: Long,
-      // frees the loop state backing `labels` once the result is consumed
+      // frees only the columnar cache of `labels`; `run` freed the rest
       release: () => Unit = () => ())
 
   /** Run LP over a directed edge table. `seeds` may be empty → unsupervised.
@@ -86,25 +85,26 @@ object LabelPropagation {
       case None => edges
     }
 
-    // adjacency at rest: duplicate edges collapsed to a weight
+    // adjacency at rest: duplicate edges collapsed to a weight; one job
+    // counts the distinct pairs and observes Σw, the src bounds and max dst
     val packedRaw = boundedEdges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
-    val eAgg = packedRaw.agg(
+    val (gates, pairRows) = GraftSqlShim.runJob(packedRaw.observe("edge_gates",
       coalesce(sum($"w"), lit(0L)),
-      count(lit(1)),
       coalesce(min($"src"), lit(0L)),
       coalesce(max($"src"), lit(0L)),
-      coalesce(max($"dst"), lit(-1L))).head()
+      coalesce(max($"dst"), lit(-1L))))
+    val eAgg = gates("edge_gates")
     val edgeCount = eAgg.getLong(0)
-    val (srcMin, srcMax) = (eAgg.getLong(2), eAgg.getLong(3))
+    val (srcMin, srcMax) = (eAgg.getLong(1), eAgg.getLong(2))
     // fail fast on out-of-range DESTINATIONS only (srcs/seeds >= n were
     // silently dropped above, matching the reference): the reference
     // stores any dst in the CSR and its gather indexes labels[dst] — dst
     // >= n panics there (lib.rs:200-204); here the dense range(n) state +
     // left-outer apply would swallow those votes silently, so the panic
     // rides the setup aggregation, before the edge side is placed.
-    numNodes.foreach(n => require(eAgg.getLong(4) < n,
+    numNodes.foreach(n => require(eAgg.getLong(3) < n,
       s"numNodes=$n but an edge destination references out-of-range id " +
-      s"${eAgg.getLong(4)} — the reference panics on gather for dst >= num_nodes"))
+      s"${eAgg.getLong(3)} — the reference panics on gather for dst >= num_nodes"))
     // Near-unit multiplicities (Σw ≤ 1.01·rows — the common case: a
     // deduplicated or near-deduplicated edge table; the reference's random
     // generator leaves only birthday-collision duplicates, ~50 in 40M) let
@@ -117,7 +117,8 @@ object LabelPropagation {
     // (src,label,w) to (src,label) — 24 vs 32 bytes of unsafe-row payload,
     // ~25% less shuffle write+read DRAM traffic on the loop's hot path,
     // plus a narrower cached adjacency, placed without a grouping shuffle.
-    val unitW = edgeCount <= eAgg.getLong(1) + eAgg.getLong(1) / 100
+    val pairs = pairRows.sum
+    val unitW = edgeCount <= pairs + pairs / 100
     val adjacency = if (unitW) boundedEdges.select($"src", $"dst") else packedRaw
     // without a declared universe, one pass over the endpoints and the
     // seeded (possibly isolated) nodes gives the vertex set, its size and
@@ -129,15 +130,17 @@ object LabelPropagation {
     // partitioned by dst once so every gather join reuses the same exchange
     val side = Superstep.edgeSide(adjacency, "dst", cfg, numNodes.getOrElse(pass.get.count))
 
-    val dedupedSeedsAll = graft.io.EdgeTsv.dedupSeeds(seeds)
+    // one job counts the deduped seeds and observes in-range label bounds
+    val inRange = numNodes.fold(lit(true))(n => $"node" < n)
+    val seedFill = Superstep.fill(graft.io.EdgeTsv.dedupSeeds(seeds),
+      coalesce(min(when(inRange, $"label")), lit(0L)),
+      coalesce(max(when(inRange, $"label")), lit(0L)))
     // unsupervised ⇔ the RAW seed map is empty (lib.rs:160 checks
     // is_empty() BEFORE any range filtering): seeds that are all
     // out-of-range leave a seeded run with zero effective seeds — every
     // label stays UNKNOWN — they do not flip the run to unsupervised.
-    val unsupervised = dedupedSeedsAll.isEmpty
-    val dedupedSeeds = numNodes.fold(dedupedSeedsAll)(n =>
-        dedupedSeedsAll.filter($"node" < n))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val unsupervised = seedFill.rows == 0L
+    val dedupedSeeds = seedFill.ds.filter(inRange)
 
     // DENSE state: one row per vertex from the start, null label = UNKNOWN.
     // This keeps the apply join LEFT-outer (state side streams, its `id`
@@ -164,7 +167,7 @@ object LabelPropagation {
 
     // LP only ever propagates labels that exist in the INITIAL state, so the
     // label domain is fixed at setup: unsupervised = the vertex-id range,
-    // seeded = the (tiny, persisted) seed label set. When every label fits
+    // seeded = the (tiny, filled) seed label set. When every label fits
     // in an unsigned 32-bit lane and every possible vote count fits in 31
     // bits (cnt ≤ Σw = edgeCount), the vote's argmax packs into ONE long —
     // (cnt << 32) | (2^32-1-label) — whose max() hash-aggregates: the
@@ -177,11 +180,7 @@ object LabelPropagation {
       if (unsupervised) numNodes match {
         case Some(n) => (0L, n - 1)
         case None => pass.get.bounds.getOrElse((0L, 0L))
-      } else {
-        val r = dedupedSeeds.agg(
-          coalesce(min($"label"), lit(0L)), coalesce(max($"label"), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      }
+      } else (seedFill.summary.getLong(0), seedFill.summary.getLong(1))
     val packedVote = labelBounds._1 >= 0L && labelBounds._2 < (1L << 32) &&
       edgeCount < (1L << 31)
     // Packed EXCHANGE row (r5): when both the voting src ids and the label
@@ -287,14 +286,15 @@ object LabelPropagation {
     }
     val res = try Superstep.loop(init, Some(side), step, cfg, algo = "lp", inputFp)
       finally {
-        dedupedSeeds.unpersist(blocking = false)
+        seedFill.release()
         pass.foreach(_.release())
       }
 
-    val labelsOut = res.state.filter($"label".isNotNull)
-      .select($"id", $"label").as[VertexLabel]
-    LpResult(labelsOut, res.iterations, res.converged, res.stats, edgeCount,
-      release = res.release)
+    val labels = try Superstep.fill(res.state.filter($"label".isNotNull)
+        .select($"id", $"label").as[VertexLabel])
+      finally res.release()
+    LpResult(labels.ds, res.iterations, res.converged, res.stats, edgeCount,
+      release = () => labels.release())
   }
 
   /** Label histogram report (`ow-lp/src/lib.rs:336-356`): 20 smallest-id

@@ -41,7 +41,7 @@ object PageRank {
       maxRank: Double,
       sumRank: Double,
       stats: List[Superstep.IterStats],
-      // frees the persisted ranks once the result is consumed
+      // frees only the columnar cache of `ranks`; `run` freed the rest
       release: () => Unit = () => ())
 
   def run(
@@ -92,20 +92,17 @@ object PageRank {
         algo = "pagerank", Superstep.fingerprint64(side.edges))
       finally vertices.release()
 
-    // SPARK-18847: scale ranks so they sum to the vertex count (an empty
-    // graph has no ranks to scale)
-    val factor =
-      if (numVertices == 0) 0.0
-      else numVertices.toDouble / res.state.agg(sum($"rank")).head().getDouble(0)
-    val ranks = res.state
-      .select($"id", ($"rank" * factor).as("rank")).as[VertexRank]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val agg = ranks.agg(coalesce(max($"rank"), lit(0.0)), coalesce(sum($"rank"), lit(0.0))).head()
-    // ranks is persisted + materialized above — the loop state behind it
-    // can be freed now rather than leaking one retired state per run
-    res.release()
-    PrResult(ranks, res.iterations, numVertices,
-      agg.getDouble(0), agg.getDouble(1), res.stats,
-      release = () => ranks.unpersist(blocking = false))
+    // SPARK-18847: scale ranks to sum to the vertex count (none when empty)
+    // by an ordered sum: ranks must be bit-reproducible (see Superstep.fill)
+    val ranks = try {
+      val factor =
+        if (numVertices == 0) 0.0
+        else numVertices.toDouble / res.state.agg(sum($"rank")).head().getDouble(0)
+      Superstep.fill(res.state.select($"id", ($"rank" * factor).as("rank")).as[VertexRank],
+        coalesce(max($"rank"), lit(0.0)), coalesce(sum($"rank"), lit(0.0)))
+    } finally res.release()
+    PrResult(ranks.ds, res.iterations, numVertices,
+      ranks.summary.getDouble(0), ranks.summary.getDouble(1), res.stats,
+      release = () => ranks.release())
   }
 }

@@ -2,7 +2,6 @@ package graft.algo
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.model._
 
 /** Frontier-based shortest-path programs: BFS min-hop levels and SSSP
@@ -36,7 +35,7 @@ object Paths {
       maxDist: Double,
       stats: List[Superstep.IterStats],
       converged: Boolean = true,
-      // frees the persisted dists once the result is consumed
+      // frees only the columnar cache of `dists`; `run` freed the rest
       release: () => Unit = () => ())
 
   /** BFS levels from `source`; `maxLevels` caps rounds (reference default
@@ -88,15 +87,12 @@ object Paths {
         Superstep.minStep(side, "dist", $"dist" + $"weight"), cfg, algo,
         Superstep.fingerprint64(side.edges) ^ graft.functions.SplitMix64Expr.mix(source))
     } finally vertices.release()
-    // absent-row output contract: unreachable vertices are not emitted
-    val dists = res.state.filter($"dist" < Double.PositiveInfinity)
-      .select($"id", $"dist").as[VertexDist]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val agg = dists.agg(count(lit(1)), max($"dist")).head()
-    // dists is persisted + materialized — free the loop state behind it
-    res.release()
-    PathResult(dists, res.iterations, agg.getLong(0),
-      if (agg.isNullAt(1)) 0.0 else agg.getDouble(1), res.stats, res.converged,
-      release = () => dists.unpersist(blocking = false))
+    // absent-row output contract: unreachable vertices are not emitted; the
+    // fill counts the reached ones and observes the largest distance
+    val dists = try Superstep.fill(res.state.filter($"dist" < Double.PositiveInfinity)
+        .select($"id", $"dist").as[VertexDist], coalesce(max($"dist"), lit(0.0)))
+      finally res.release()
+    PathResult(dists.ds, res.iterations, dists.rows, dists.summary.getDouble(0), res.stats,
+      res.converged, release = () => dists.release())
   }
 }

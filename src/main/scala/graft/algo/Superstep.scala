@@ -1,7 +1,7 @@
 package graft.algo
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.apache.hadoop.fs.Path
@@ -20,21 +20,18 @@ import scala.util.Using
   * (`labelpropagation_graphx_shell.scala:107-138`) with a driver-side loop
   * over declarative Dataset plans. The GraphX-shell mistake of one extra
   * `count()` join per superstep (SURVEY.md §7.6) is avoided by folding the
-  * changed-count into the single materializing aggregation via `observe()`.
+  * changed-count into the single materializing aggregation via `observe()`;
+  * outside the loop, every one-shot job (a setup cache, a result and its
+  * summary, a fingerprint) is one job of the same runner, mostly via [[fill]].
   *
   * Per-superstep cost model (this loop is the engine's hot path — every
   * avoidable fixed cost here divides directly into scaling efficiency):
   *  - exactly ONE job per superstep, and the cheapest possible one
   *    ([[org.apache.spark.sql.GraftSqlShim.materializeLocalCheckpointed]],
-  *    the "ckpt" state leaf): the step plan executes once, rows are
-  *    defensively copied once and stored as deserialized MEMORY_AND_DISK
-  *    blocks, `localCheckpoint` is marked BEFORE the job so the job's own
-  *    blocks become the checkpoint — plan-lineage AND RDD-lineage are
-  *    truncated every superstep at zero extra cost, the state is re-rooted
-  *    on a flat `LogicalRDD` over stable rows (no columnar encode at
-  *    materialization, no decode on the two per-superstep scans), and
-  *    the step's CollectMetrics accumulator fires in the same job and is
-  *    read SYNCHRONOUSLY. Measured vs the r4 columnar-IMR flow (BENCH.md
+  *    the "ckpt" state leaf, on the engine's one job runner): the step plan
+  *    executes once into locally checkpointed deserialized rows, truncating
+  *    plan and RDD lineage at zero extra cost, and the step's observation is
+  *    read in the same job. Measured vs the r4 columnar-IMR flow (BENCH.md
   *    §13): per-superstep medians 114-145 vs 166-186 ms at the
   *    2K-vertex / 600K-edge derived graph, PR 411-469 vs 499-525 ms at
   *    100K vertices, LP pairwise faster in both drift windows at 1M-4M;
@@ -90,10 +87,8 @@ object Superstep {
       iterations: Int,
       converged: Boolean,
       stats: List[IterStats],
-      // frees the persisted/localCheckpointed blocks backing `state`; call
-      // once the result has been consumed (benchmark reps otherwise
-      // accumulate one retired state per run). After release() the state
-      // may be unrecomputable (localCheckpoint truncates lineage).
+      // frees the blocks backing `state`, after which it may be
+      // unrecomputable; each algorithm calls it once its result is filled
       release: () => Unit = () => ())
 
   /** One superstep: previous state → new state carrying a boolean `_chg`
@@ -236,10 +231,10 @@ object Superstep {
   }
 
   /** Place a loop's edge side: partition `raw` by `key` (the endpoint the
-    * gather joins the vertex state on), persist it, and in the one
-    * aggregation that fills the cache count its rows and find the largest
-    * per-key row count (a group-by on the key-partitioned cache, so no
-    * exchange). Only when that maximum exceeds `cfg.hubDegreeThreshold` are
+    * gather joins the vertex state on), persist it, and observe its row
+    * count and largest per-key row count on one group-by over the cache
+    * (no exchange; under AQE the cache fills in a job of its own before
+    * it). Only when that maximum exceeds `cfg.hubDegreeThreshold` are
     * the hot keys salted across [[SkewJoin.AutoK]] partitions, keyed by a
     * hash of the opposite endpoint.
     *
@@ -257,8 +252,9 @@ object Superstep {
   def edgeSide(raw: DataFrame, key: String, cfg: graft.model.RunConfig,
       vertexCount: Long): EdgeSide = {
     val byKey = raw.repartition(col(key)).persist(StorageLevel.MEMORY_AND_DISK)
-    val placed = byKey.groupBy(col(key)).agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(col("n")), lit(0L)), coalesce(max(col("n")), lit(0L))).head()
+    val placed = GraftSqlShim.runJob(byKey.groupBy(col(key)).agg(count(lit(1)).as("n"))
+      .observe("placement", coalesce(sum(col("n")), lit(0L)), coalesce(max(col("n")), lit(0L))))
+      ._1("placement")
     val (rows, maxKeyRows) = (placed.getLong(0), placed.getLong(1))
     val spread = if (key == "src") "dst" else "src"
     val sessionWidth = raw.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -271,9 +267,7 @@ object Superstep {
         new EdgeSide(p.salted, key, Some(p), sessionWidth)
       case None
           if sessionWidth > NarrowWidth && rows <= (1L << 20) && vertexCount <= 16384L =>
-        val narrow = byKey.repartition(NarrowWidth, col(key))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        narrow.count()
+        val narrow = fill(byKey.repartition(NarrowWidth, col(key))).ds
         byKey.unpersist(blocking = false)
         new EdgeSide(narrow, key, None, NarrowWidth)
       case None => new EdgeSide(byKey, key, None, sessionWidth)
@@ -281,6 +275,30 @@ object Superstep {
   }
 
   private val NarrowWidth = 8
+
+  /** A cache from [[fill]], with its observed summary and row count. */
+  final case class Filled[T](ds: Dataset[T], summary: Row, rows: Long) {
+    /** Free this one cache. */
+    def release(): Unit = ds.unpersist(blocking = false)
+  }
+
+  /** Persist `ds` as a columnar cache and fill it in ONE job of
+    * [[GraftSqlShim.runJob]] that counts its rows and observes the `summary`
+    * aggregates (merged in task-completion order: a double sum is not
+    * bit-reproducible). The scan plans with AQE off, which would fill the
+    * cache in a job of its own first; the cache's plan keeps the caller's.
+    */
+  def fill[T](ds: Dataset[T], summary: Column*): Filled[T] = {
+    val cached = ds.persist(StorageLevel.MEMORY_AND_DISK)
+    val job = if (summary.isEmpty) cached.toDF()
+      else cached.toDF().observe("fill", summary.head, summary.tail: _*)
+    val scan = GraftSqlShim.sessionWithConfs(cached.sparkSession,
+      "spark.sql.adaptive.enabled" -> "false")
+    val (observed, partitionRows) =
+      try GraftSqlShim.runJob(GraftSqlShim.bind(scan, job))
+      catch { case t: Throwable => cached.unpersist(blocking = false); throw t }
+    Filled(cached, observed.getOrElse("fill", Row.empty), partitionRows.sum)
+  }
 
   /** The one loop entry, shared by the vertex programs and star CC's
     * edge-set rounds: resume, loop scope, one materializing job per round,
@@ -498,14 +516,12 @@ object Superstep {
   /** Order-insensitive distributed fingerprint, the loops' input identity:
     * XOR-fold of xxhash64 over all rows (XOR is associative/commutative →
     * identical across any partitioning, O(1) driver data, no ANSI overflow
-    * — unlike a Long sum). Collision caveat: duplicate rows cancel
-    * pairwise; callers fingerprint keyed or distinct row sets, where that
-    * cannot happen.
+    * — unlike a Long sum), observed on one job. Collision caveat: duplicate
+    * rows cancel pairwise; callers fingerprint keyed or distinct row sets,
+    * where that cannot happen.
     */
-  def fingerprint64(df: DataFrame): Long = {
-    val r = df.agg(bit_xor(xxhash64(df.columns.map(col): _*))).head()
-    if (r.isNullAt(0)) 0L else r.getLong(0)
-  }
+  def fingerprint64(df: DataFrame): Long = GraftSqlShim.runJob(df.observe("fingerprint",
+    coalesce(bit_xor(xxhash64(df.columns.map(col): _*)), lit(0L))))._1("fingerprint").getLong(0)
 
   /** Resume state from the newest committed checkpoint under `dir`, or fall
     * back to `init`. Returns (state, iterationAlreadyCompleted, converged).

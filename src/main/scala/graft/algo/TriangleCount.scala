@@ -2,7 +2,6 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.model._
 
 /** Exact per-vertex triangle counting with GraphX `TriangleCount` semantics
@@ -31,7 +30,7 @@ object TriangleCount {
   final case class TcResult(
       counts: Dataset[VertexTriangles],
       totalTriangles: Long,
-      // frees the persisted per-vertex counts once the result is consumed
+      // frees only the columnar cache of `counts`; `run` freed the rest
       release: () => Unit = () => ())
 
   /** Oriented-edge count up to which the closing side of the wedge join is
@@ -70,10 +69,10 @@ object TriangleCount {
           "TriangleCount requires vertex ids in [0, 2^32) (reference id domain); " +
           s"ids seen span [$minId, $maxId]")
       }
-      val canon = edges.filter($"src" =!= $"dst")
+      // filled first: the orientation scans them thrice, each a job if unfilled
+      val canon = Superstep.fill(edges.filter($"src" =!= $"dst")
         .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct()).ds
 
       // undirected degree per vertex → total-order key deg·2^32 + id
       val deg = canon.select($"a".as("id")).union(canon.select($"b".as("id")))
@@ -86,21 +85,19 @@ object TriangleCount {
       // side builds an O(|V|/partitions) hash map — without the hint the
       // planner sorts the m-row canonical edge stream twice for SMJs (the
       // BENCH.md §12 hidden-sort shape)
-      val oriented = canon.join(da.hint("shuffle_hash"), "a")
-        .join(db.hint("shuffle_hash"), "b")
-        .select(
-          when($"ka" < $"kb", $"ka").otherwise($"kb").as("u"),
-          when($"ka" < $"kb", $"kb").otherwise($"ka").as("v"))
-        .repartition($"u")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val m = oriented.count()
-      canon.unpersist(blocking = false)
+      val oriented = try Superstep.fill(canon.join(da.hint("shuffle_hash"), "a")
+          .join(db.hint("shuffle_hash"), "b")
+          .select(
+            when($"ka" < $"kb", $"ka").otherwise($"kb").as("u"),
+            when($"ka" < $"kb", $"kb").otherwise($"ka").as("v"))
+          .repartition($"u"))
+        finally canon.unpersist(blocking = false)
 
       // wedges at the lowest-ordered vertex, ordered v1 < v2 so each candidate
       // wedge is generated exactly once; closing edge must be (v1 → v2)
       val unpack = (c: org.apache.spark.sql.Column) => c.bitwiseAND(lit(0xffffffffL))
-      val e1 = oriented.select($"u", $"v".as("v1"))
-      val e2 = oriented.select($"u", $"v".as("v2"))
+      val e1 = oriented.ds.select($"u", $"v".as("v1"))
+      val e2 = oriented.ds.select($"u", $"v".as("v2"))
 
       // Three plan decisions, each sized for the 100 TB point:
       //  - a wedge row carries (uid, pk) with pk = id(v1)·2^32 + id(v2),
@@ -120,10 +117,10 @@ object TriangleCount {
         .filter($"v1" < $"v2")
         .select(unpack($"u").as("uid"),
           (shiftleft(unpack($"v1"), 32) + unpack($"v2")).as("pk"))
-      val closing = oriented
+      val closing = oriented.ds
         .select((shiftleft(unpack($"u"), 32) + unpack($"v")).as("pk"))
       val closeSide =
-        if (m <= closeBuildMaxRows) broadcast(closing) else closing.hint("shuffle_hash")
+        if (oriented.rows <= closeBuildMaxRows) broadcast(closing) else closing.hint("shuffle_hash")
       val perVertex = wedges.join(closeSide, Seq("pk"))
         .select(explode(array($"uid",
           shiftrightunsigned($"pk", 32), unpack($"pk"))).as("id"))
@@ -131,15 +128,12 @@ object TriangleCount {
         // both sides of the final attach are |V|-sized at web scale:
         // build the aggregated side, don't sort two billion-row streams
         .hint("shuffle_hash")
-      val counts = vertices.ids.join(perVertex, Seq("id"), "left_outer")
-        .select($"id", coalesce($"triangles", lit(0L)).as("triangles"))
-        .as[VertexTriangles]
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // one job fills the cache and sums the counts
-      val total = counts.agg(coalesce(sum($"triangles"), lit(0L)))
-        .head().getLong(0) / 3
-      oriented.unpersist(blocking = false)
-      TcResult(counts, total, release = () => counts.unpersist(blocking = false))
+      // one job fills the counts and observes their sum
+      val counts = try Superstep.fill(vertices.ids.join(perVertex, Seq("id"), "left_outer")
+          .select($"id", coalesce($"triangles", lit(0L)).as("triangles"))
+          .as[VertexTriangles], coalesce(sum($"triangles"), lit(0L)))
+        finally oriented.release()
+      TcResult(counts.ds, counts.summary.getLong(0) / 3, release = () => counts.release())
     } finally vertices.release()
   }
 }

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.algo.Superstep
 
 /** Salted equi-join for power-law hub skew.
   *
@@ -46,27 +46,21 @@ object SkewJoin {
     */
   def plan(big: DataFrame, keyCol: String, spreadCol: String,
            k: Int, threshold: Long): Option[SaltPlan] = {
-    val hot = big.groupBy(col(keyCol)).agg(count(lit(1)).as("_freq"))
+    // the hot keys are counted by the job that fills their cache
+    val hot = Superstep.fill(big.groupBy(col(keyCol)).agg(count(lit(1)).as("_freq"))
       .filter(col("_freq") > threshold)
-      .select(col(keyCol).as("key"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nHot = hot.count()
-    if (nHot == 0) {
-      hot.unpersist(blocking = false)
-      return None
-    }
-    val salted = big
-      .join(broadcast(hot.withColumn("_hot", lit(true))),
-        big(keyCol) === hot("key"), "left_outer")
+      .select(col(keyCol).as("key")))
+    if (hot.rows == 0) { hot.release(); return None }
+    val salted = Superstep.fill(big
+      .join(broadcast(hot.ds.withColumn("_hot", lit(true))),
+        big(keyCol) === hot.ds("key"), "left_outer")
       .drop("key")
       .withColumn("_salt",
         when(col("_hot") === true, pmod(xxhash64(col(spreadCol)), lit(k)).cast("int"))
           .otherwise(lit(0)))
       .drop("_hot")
-      .repartition(col(keyCol), col("_salt"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    salted.count()
-    Some(SaltPlan(salted, hot, k, keyCol, nHot))
+      .repartition(col(keyCol), col("_salt"))).ds
+    Some(SaltPlan(salted, hot.ds, k, keyCol, hot.rows))
   }
 
   /** Join the salted big side with per-iteration `state` on
@@ -87,7 +81,7 @@ object SkewJoin {
     // paths, where broadcasts are banned (see Superstep.shj — without the
     // hint the ban also vetoes shuffled-hash and the join degrades to a
     // per-superstep sort-merge over the salted adjacency)
-    p.salted.join(graft.algo.Superstep.shj(replicated),
+    p.salted.join(Superstep.shj(replicated),
         p.salted(p.keyCol) === replicated(stateKey) &&
           p.salted("_salt") === replicated("_salt"))
       .drop(p.salted("_salt")).drop(replicated("_salt"))

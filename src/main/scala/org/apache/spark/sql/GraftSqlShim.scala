@@ -10,6 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *  - cloning a session so an iterative driver loop can pin SQL confs
   *    (AQE, join-strategy preference) without mutating — and racing on —
   *    the user's shared session conf
+  *  - [[runJob]], the one path for one-shot jobs: `Superstep.fill` (every
+  *    result and setup cache), fingerprints, the edge gates, and
   *  - materializing loop state, its local checkpoint and its observed
   *    metrics in one job, as a flat `LogicalRDD` leaf — the one state
   *    leaf of every loop, star CC's rounds included, each algorithm's
@@ -42,21 +44,16 @@ object GraftSqlShim {
     * metrics, row count of each partition). This fuses everything the
     * superstep loop needs into the single materializing job:
     *
-    *  - the plan executes once (its `toRdd` iterators are consumed under a
-    *    SQL execution id by a counting function — no `count()` Aggregate,
-    *    no extra single-task stage); rows are defensively copied ONCE
-    *    (`map(_.copy())` — the same contract `Dataset.checkpoint` uses) and
+    *  - the plan executes once, through [[runJob]] (the observed metrics and
+    *    row counts are that job's); rows are copied ONCE (`map(_.copy())`,
+    *    the contract `Dataset.checkpoint` uses) and
     *    stored as deserialized MEMORY_AND_DISK blocks — no columnar encode
     *    at materialization and no per-scan decode afterwards (the state is
     *    scanned twice per superstep);
     *  - `localCheckpoint()` is marked BEFORE the job, so the job's own
     *    cached blocks become the checkpoint — RDD lineage is truncated
     *    every superstep at zero extra cost, with no separate checkpoint
-    *    job and no plan/closure growth between truncations;
-    *  - every `observe()` CollectMetrics accumulator fires in the same
-    *    job and is read SYNCHRONOUSLY (merged driver-side before the job
-    *    returns — no [[org.apache.spark.sql.Observation]] listener-bus
-    *    round-trip); the per-partition row counts are the job's results.
+    *    job and no plan/closure growth between truncations.
     *
     * The returned view is a flat `LogicalRDD` over the checkpointed rows
     * (stable objects — served without a per-scan copy). With
@@ -76,23 +73,29 @@ object GraftSqlShim {
       keepPartitioning: Boolean)
       : (DataFrame, () => Unit, Map[String, Row], Array[Long]) = {
     val cdf = df.asInstanceOf[classic.DataFrame]
-    val qe = cdf.queryExecution
-    val rdd = qe.toRdd.map(_.copy())
+    val rdd = cdf.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    val partitionRows = execution.SQLExecution.withNewExecutionId(qe) {
-      rdd.sparkContext.runJob(rdd, (it: Iterator[_]) => {
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        n
-      })
-    }
+    val (observed, partitionRows) = runJob(cdf, Some(rdd))
     val logical =
       if (keepPartitioning) execution.LogicalRDD.fromDataset(rdd, cdf, isStreaming = false)
       else execution.LogicalRDD(cdf.logicalPlan.output, rdd)(cdf.sparkSession)
     (classic.Dataset.ofRows(cdf.sparkSession, logical),
-      () => rdd.sparkContext.unpersistRDD(rdd.id, blocking = false),
-      execution.CollectMetricsExec.collect(qe.executedPlan),
-      partitionRows)
+      () => rdd.sparkContext.unpersistRDD(rdd.id, blocking = false), observed, partitionRows)
+  }
+
+  /** Run `df`'s plan as ONE job under a SQL execution id and return
+    * (observed metrics, row count of each partition): a counting function
+    * consumes its `toRdd` (or `pinned`, derived from it), with no `count()`
+    * Aggregate, and every `observe()` accumulator is read synchronously, with
+    * no listener-bus round-trip. Under AQE each exchange is a map-stage job.
+    */
+  def runJob(df: DataFrame, pinned: Option[org.apache.spark.rdd.RDD[_]] = None)
+      : (Map[String, Row], Array[Long]) = {
+    val qe = df.asInstanceOf[classic.DataFrame].queryExecution
+    val rows = pinned.getOrElse(qe.toRdd)
+    val partitionRows = execution.SQLExecution.withNewExecutionId(qe)(
+      rows.sparkContext.runJob(rows, org.apache.spark.util.Utils.getIteratorSize _))
+    (execution.CollectMetricsExec.collect(qe.executedPlan), partitionRows)
   }
 
   /** Block until the listener bus has delivered all posted events. Loop
