@@ -284,11 +284,12 @@ object SparkEntry {
     * but a fixed unroll can — and once the frontier empties every further
     * step is a no-op, so a deep-enough unroll is termination-independent;
     * without MATERIALIZED the double self-reference per step inlines
-    * exponentially). Exact arithmetic parity with the engine: contribution
-    * weight w·(1/deg), rank += 0.85·msg, delta-gated frontier, final
-    * normalization to n/Σrank, rounded to 6dp — measured ≥1e-9 from every
-    * rounding boundary on the fixed testdata vs ~1e-13 cross-engine FP
-    * divergence.
+    * exponentially). Arithmetic parity with the engine up to summation
+    * order: a pair of multiplicity w contributes delta·(w·(1/deg)) here and
+    * w edge rows of delta·(1/deg) each in the engine (the same bits at w =
+    * 1), rank += 0.85·msg, delta-gated frontier, final normalization to
+    * n/Σrank, rounded to 6dp — measured ≥1e-9 from every rounding boundary
+    * on the fixed testdata vs ~1e-13 cross-engine FP divergence.
     */
   private def pageRankOracleSql(iters: Int = 120, tol: Double = 1e-6): String = {
     val pre =

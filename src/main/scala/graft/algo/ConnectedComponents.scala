@@ -32,13 +32,12 @@ object ConnectedComponents {
 
     val vertices = Superstep.vertexSet(edges)
     val res = try {
-      // undirected doubling, deduped (duplicates are irrelevant for min),
-      // keyed by src — every superstep's gather reuses its partitioning
+      // undirected doubling (a duplicate row cannot change a min), keyed
+      // by src — every superstep's gather reuses its partitioning
       val side = Superstep.edgeSide(
         edges.select($"src", $"dst")
           .union(edges.select($"dst".as("src"), $"src".as("dst")))
-          .filter($"src" =!= $"dst")
-          .distinct(),
+          .filter($"src" =!= $"dst"),
         "src", cfg, vertices.count)
       // every vertex starts as its own component and in the first frontier;
       // aggregated rather than projected as `id AS comp` (see Superstep.loop
@@ -46,7 +45,8 @@ object ConnectedComponents {
       val init = vertices.ids.groupBy($"id").agg(min($"id").as("comp"))
         .select($"id", $"comp", lit(true).as("_chg"))
       Superstep.loop(init, Some(side), Superstep.minStep(side, "comp", $"comp"),
-        cfg.copy(convergenceThreshold = 0L), algo = "cc", Superstep.fingerprint64(side.edges))
+        cfg.copy(convergenceThreshold = 0L), algo = "cc",
+        Superstep.fingerprint64(side.edges.distinct()))
     } finally vertices.release()
     result(res.state.select($"id", $"comp".as("component")).as[VertexComponent], res)
   }
@@ -132,18 +132,23 @@ object ConnectedComponents {
         .filter($"u" =!= $"v"))
     }
 
-    // input identity = the canonical undirected distinct edge set (raw
-    // `edges` would let duplicate rows cancel in the XOR fold)
     try {
-      val res = Superstep.loop(initial, None, round,
-        cfg.copy(maxIter = maxRounds, convergenceThreshold = 0L), "cc_star",
-        Superstep.fingerprint64(initial))
+      // no vertex, no round: the final join below would run over two empty
+      // sides, and AQE leaves one side's tasks running past the release
+      if (vertices.count == 0L) CcResult(spark.emptyDataset[VertexComponent], 0, 0L, Nil)
+      else {
+        // input identity = the canonical undirected distinct edge set (raw
+        // `edges` would let duplicate rows cancel in the XOR fold)
+        val res = Superstep.loop(initial, None, round,
+          cfg.copy(maxIter = maxRounds, convergenceThreshold = 0L), "cc_star",
+          Superstep.fingerprint64(initial))
 
-      // final vertex mapping, filled under the CALLER's session/confs
-      result(vertices.ids
-        .join(res.state.select($"u".as("id"), $"v".as("c")), Seq("id"), "left_outer")
-        .select($"id", coalesce($"c", $"id").as("component"))
-        .as[VertexComponent], res)
+        // final vertex mapping, filled under the CALLER's session/confs
+        result(vertices.ids
+          .join(res.state.select($"u".as("id"), $"v".as("c")), Seq("id"), "left_outer")
+          .select($"id", coalesce($"c", $"id").as("component"))
+          .as[VertexComponent], res)
+      }
     } finally vertices.release()
   }
 

@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlShim}
 import org.apache.spark.sql.functions._
 import graft.model._
 
@@ -17,8 +17,9 @@ import graft.model._
   *    `labelpropagation_graphx_shell.scala:108-116`)
   *  - new label = most frequent neighbour label, ties → smallest label,
   *    no labelled neighbour → keep current (`ow-lp/src/lib.rs:456-481`)
-  *  - duplicate edges weight the vote (multiplicity preserved via a
-  *    pre-aggregated weight column, mathematically identical)
+  *  - duplicate edges weight the vote: every edge row casts its own vote,
+  *    as every parsed line does in the reference's CSR
+  *    (`ow-lp/src/lib.rs:282`)
   *  - seeds are min-deduped per node and pinned forever
   *    (`ow-lp/src/lib.rs:224-235,576-579`)
   *  - zero seeds globally → unsupervised mode, label(i) = i, no pinning
@@ -31,18 +32,15 @@ import graft.model._
   *             labels shuffled to the persisted edge partitioning and
   *             hash-joined, or salted across hub partitions; vote levels
   *             are salt-compatible since label counts are associative)
-  *   vote    = repartition(src) → groupBy(src, label).sum(w)
+  *   vote    = repartition(src) → groupBy(src, label).count(*)
   *             → groupBy(src).max((cnt<<32)|(2^32-1-label)) — both agg
   *             levels chained codegen HashAggregates in one post-shuffle
   *             stage (the packed-long argmax replaces max(struct(...)),
   *             whose struct buffer forced a SortAggregate; struct fallback
-  *             when labels exceed u32 or counts exceed 31 bits); when every
-  *             multiplicity is 1 (deduplicated edge table) the w column is
-  *             dropped from the exchange and sum(w) becomes count(*) —
-  *             bit-identical votes, ~25% narrower shuffle rows; when src
-  *             ids AND labels both fit u32 the exchange row packs further
-  *             into ONE long pk=(src<<32)|label (16 B vs 24 B UnsafeRow)
-  *             with the plan still single-exchange (see packExchange)
+  *             when labels exceed u32 or counts exceed 31 bits); when src
+  *             ids AND labels both fit u32 the exchange row packs into ONE
+  *             long pk=(src<<32)|label (16 B vs 24 B UnsafeRow) with the
+  *             plan still single-exchange (see packExchange)
   *   apply   = state ⟗ votes on id (shuffled-hash, votes build), seeded
   *             rows keep their label, changed flag folded into the same
   *             projection (no extra action).
@@ -85,41 +83,26 @@ object LabelPropagation {
       case None => edges
     }
 
-    // adjacency at rest: duplicate edges collapsed to a weight; one job
-    // counts the distinct pairs and observes Σw, the src bounds and max dst
-    val packedRaw = boundedEdges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
-    val (gates, pairRows) = GraftSqlShim.runJob(packedRaw.observe("edge_gates",
-      coalesce(sum($"w"), lit(0L)),
+    // adjacency at rest: the raw edge rows, a duplicate edge weighing the
+    // vote by being repeated (as in the reference's CSR); one scan counts
+    // them and observes the src bounds and max dst
+    val adjacency = boundedEdges.select($"src", $"dst")
+    val (gates, edgeRows) = GraftSqlShim.runJob(adjacency.observe("edge_gates",
       coalesce(min($"src"), lit(0L)),
       coalesce(max($"src"), lit(0L)),
       coalesce(max($"dst"), lit(-1L))))
     val eAgg = gates("edge_gates")
-    val edgeCount = eAgg.getLong(0)
-    val (srcMin, srcMax) = (eAgg.getLong(1), eAgg.getLong(2))
+    val edgeCount = edgeRows.sum
+    val (srcMin, srcMax) = (eAgg.getLong(0), eAgg.getLong(1))
     // fail fast on out-of-range DESTINATIONS only (srcs/seeds >= n were
     // silently dropped above, matching the reference): the reference
     // stores any dst in the CSR and its gather indexes labels[dst] — dst
     // >= n panics there (lib.rs:200-204); here the dense range(n) state +
     // left-outer apply would swallow those votes silently, so the panic
-    // rides the setup aggregation, before the edge side is placed.
-    numNodes.foreach(n => require(eAgg.getLong(3) < n,
+    // rides the setup scan, before the edge side is placed.
+    numNodes.foreach(n => require(eAgg.getLong(2) < n,
       s"numNodes=$n but an edge destination references out-of-range id " +
-      s"${eAgg.getLong(3)} — the reference panics on gather for dst >= num_nodes"))
-    // Near-unit multiplicities (Σw ≤ 1.01·rows — the common case: a
-    // deduplicated or near-deduplicated edge table; the reference's random
-    // generator leaves only birthday-collision duplicates, ~50 in 40M) let
-    // the adjacency keep those rare duplicates as the raw edge ROWS they
-    // are and drop the w column everywhere: the vote's sum(w) becomes
-    // count(*) over multiplicity-many rows — identical integer votes. That
-    // narrows the ONE per-superstep exchange (the raw vote rows — map-side
-    // combine cannot compress them: at degree d over p shuffle partitions
-    // a given (src,label) pair appears ~d/p ≤ 1 times per map task) from
-    // (src,label,w) to (src,label) — 24 vs 32 bytes of unsafe-row payload,
-    // ~25% less shuffle write+read DRAM traffic on the loop's hot path,
-    // plus a narrower cached adjacency, placed without a grouping shuffle.
-    val pairs = pairRows.sum
-    val unitW = edgeCount <= pairs + pairs / 100
-    val adjacency = if (unitW) boundedEdges.select($"src", $"dst") else packedRaw
+      s"${eAgg.getLong(2)} — the reference panics on gather for dst >= num_nodes"))
     // without a declared universe, one pass over the endpoints and the
     // seeded (possibly isolated) nodes gives the vertex set, its size and
     // its bounds
@@ -169,9 +152,10 @@ object LabelPropagation {
     // label domain is fixed at setup: unsupervised = the vertex-id range,
     // seeded = the (tiny, filled) seed label set. When every label fits
     // in an unsigned 32-bit lane and every possible vote count fits in 31
-    // bits (cnt ≤ Σw = edgeCount), the vote's argmax packs into ONE long —
-    // (cnt << 32) | (2^32-1-label) — whose max() hash-aggregates: the
-    // max(struct(cnt,-label)) form has an immutable struct buffer, which
+    // bits (cnt ≤ edgeCount, the edge row count), the vote's argmax packs
+    // into ONE long — (cnt << 32) | (2^32-1-label) — whose max()
+    // hash-aggregates: the max(struct(cnt,-label)) form has an immutable
+    // struct buffer, which
     // HashAggregate cannot hold, so Spark silently planned a SortAggregate
     // that re-SORTED the per-partition vote stream every superstep (caught
     // in the r5 plan audit together with the SMJ degradation — see
@@ -198,19 +182,12 @@ object LabelPropagation {
     // HashAggregates + the apply SHJ in one post-shuffle codegen stage).
     // Murmur3 of shiftrightunsigned(pk,32) equals Murmur3 of src value-wise,
     // so co-partitioning with the cached state holds numerically too.
-    // Applies to BOTH vote shapes: the unit-multiplicity row packs to just
-    // (pk) — 16 vs 24 B — and the weighted row (multiplicity-heavy
-    // tables) to (pk, w) — 24 vs 32 B.
     val packExchange = packedVote && srcMin >= 0L && srcMax < (1L << 32)
 
     def step(state: DataFrame): DataFrame = {
       // P6 UNKNOWN filter: unlabeled vertices contribute nothing
       val labels = state.filter($"label".isNotNull).select($"id", $"label")
-      val joined = side.gather(labels)
-      // unit multiplicities ⇒ w is constant 1: keep it out of the exchange
-      val gather =
-        if (unitW) joined.select($"src", $"label")
-        else joined.select($"src", $"label", $"w")
+      val gather = side.gather(labels).select($"src", $"label")
       // single-exchange majority, fully codegen: repartition the gather
       // output by src once, then BOTH aggregation levels (label counts,
       // then max(count, min-label tiebreak)) run in the same post-shuffle
@@ -221,28 +198,19 @@ object LabelPropagation {
       // (spark.sql.objectHashAggregate.sortBased.fallbackThreshold) —
       // at 4M vertices that sorted all 40M gather rows every superstep,
       // ~20× the task time of this plan.
-      val counted =
-        if (packExchange) {
+      val voteRows =
+        if (packExchange)
           // packed exchange row: pk = (src<<32)|label (label < 2^32 so +
-          // is bitwise OR), plus w on the weighted shape; the repartition
-          // expression and the projected src are the SAME tree, which is
-          // what keeps the downstream plan exchange-free — see the
-          // packExchange gate's comment
-          val pk = (shiftleft($"src", 32) + $"label").as("pk")
-          val packed =
-            (if (unitW) gather.select(pk) else gather.select(pk, $"w"))
-              .repartition(shiftrightunsigned($"pk", 32))
-          val unpacked = Seq(
-            shiftrightunsigned($"pk", 32).as("src"),
-            $"pk".bitwiseAND(lit((1L << 32) - 1)).as("label")) ++
-            (if (unitW) Nil else Seq($"w"))
-          packed.select(unpacked: _*)
-            .groupBy($"src", $"label")
-            .agg((if (unitW) count(lit(1)) else sum($"w")).as("cnt"))
-        } else gather
-          .repartition($"src")
-          .groupBy($"src", $"label")
-          .agg((if (unitW) count(lit(1)) else sum($"w")).as("cnt"))
+          // is bitwise OR); the repartition expression and the projected
+          // src are the SAME tree, which is what keeps the downstream plan
+          // exchange-free — see the packExchange gate's comment
+          gather.select((shiftleft($"src", 32) + $"label").as("pk"))
+            .repartition(shiftrightunsigned($"pk", 32))
+            .select(shiftrightunsigned($"pk", 32).as("src"),
+              $"pk".bitwiseAND(lit((1L << 32) - 1)).as("label"))
+        else gather.repartition($"src")
+      // one row per edge: count(*) is the multiplicity-weighted vote
+      val counted = voteRows.groupBy($"src", $"label").agg(count(lit(1)).as("cnt"))
       val votes =
         if (packedVote)
           // hash-aggregable single-long argmax: bigger cnt wins, ties break
@@ -272,18 +240,13 @@ object LabelPropagation {
           (coalesce(label, lit(-1L)) =!= coalesce($"label", lit(-1L))).as("_chg"))
     }
 
-    // input identity for checkpoint manifests: adjacency ⊕ seeds.
-    // Fingerprint the logical multigraph (src,dst,w): under the near-unit
-    // shape the w column is re-derived by re-grouping — duplicate ROWS
+    // input identity for checkpoint manifests: adjacency ⊕ seeds. The
+    // placed rows are regrouped to (src, dst, multiplicity): duplicate ROWS
     // must never reach the XOR-fold (identical rows cancel pairwise, see
-    // fingerprint64's caveat), and re-grouping keeps the fingerprint equal
-    // to the weighted representation's, so manifests stay interchangeable
-    def inputFp: Long = {
-      val edgeRows =
-        if (unitW) side.edges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
-        else side.edges
-      Superstep.fingerprint64(edgeRows) ^ Superstep.fingerprint64(dedupedSeeds.toDF())
-    }
+    // fingerprint64's caveat); the regroup runs over the dst-placed cache
+    def inputFp: Long =
+      Superstep.fingerprint64(side.edges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))) ^
+        Superstep.fingerprint64(dedupedSeeds.toDF())
     val res = try Superstep.loop(init, Some(side), step, cfg, algo = "lp", inputFp)
       finally {
         seedFill.release()

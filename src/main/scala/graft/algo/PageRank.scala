@@ -2,7 +2,6 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.model._
 
 /** Dynamic (delta-based) PageRank to convergence, reproducing the exact
@@ -17,19 +16,17 @@ import graft.model._
   *    rank += (1−resetProb)·msgSum, delta = (1−resetProb)·msgSum
   *  - messages flow only out of vertices that received one last round AND
   *    whose delta > tol (Pregel activeDirection = Out); each out-edge
-  *    carries delta/outDegree, parallel edges counted in the degree and
-  *    contributing multiplicity-many times (we fold multiplicity into a
-  *    per-(src,dst) weight — identical arithmetic up to FP association,
-  *    covered by the 1e-6 allclose contract)
+  *    carries delta/out-degree, parallel edges counted in the degree and
+  *    each carrying its own share, like GraphX's one message per edge
   *  - terminate when no messages are in flight
   *  - finally normalize ranks to sum to the vertex count (SPARK-18847
   *    `normalizeRankSum`, confirmed present in the Spark 4.1.2 graphx jar).
   *
   * Differentially tested against GraphX itself in PageRankSpec.
   *
-  * Physical shape per superstep: frontier ⋈ contribution-weighted edges
-  * (edges pre-partitioned by src, persisted once) → groupBy(dst).sum →
-  * left join back to rank state. Only active vertices shuffle; the frontier
+  * Physical shape per superstep: frontier (id, delta/out-degree) ⋈ edges
+  * (pre-partitioned by src, persisted once) → groupBy(dst).sum → left
+  * join back to rank state. Only active vertices shuffle; the frontier
   * collapses geometrically as deltas fall below tol.
   */
 object PageRank {
@@ -53,31 +50,28 @@ object PageRank {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val packed = edges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outDeg = packed.groupBy($"src").agg(sum($"w").as("deg"))
-    // contribution weight per distinct (src,dst): multiplicity / outDegree
-    val contribRaw = packed.join(outDeg, "src")
-      .select($"src", $"dst", ($"w".cast("double") * (lit(1.0) / $"deg")).as("cw"))
-
     val vertices = Superstep.vertexSet(edges)
     val numVertices = vertices.count
-    // contributions scatter out of src: the edge side is keyed by src (a
-    // src with 10^7 out-edges is salted across partitions)
-    val side = Superstep.edgeSide(contribRaw, "src", cfg, numVertices)
-    packed.unpersist(blocking = false)
+    // contributions scatter out of src along the raw edge rows, a parallel
+    // edge carrying its own share: the edge side is keyed by src (a src
+    // with 10^7 out-edges is salted across partitions)
+    val side = Superstep.edgeSide(edges.select($"src", $"dst"), "src", cfg, numVertices)
 
     // after Pregel superstep 0 (initial message to every vertex): every
-    // vertex received one, so every vertex is in the first frontier
-    val init: DataFrame = vertices.ids.select(
-      $"id", lit(resetProb).as("rank"), lit(resetProb).as("delta"), lit(true).as("_chg"))
+    // vertex received one, so every vertex is in the first frontier; `inv`
+    // = 1/out-degree (null for a sink), counted over the src-placed cache
+    val degree = side.edges.groupBy($"src".as("id")).agg(count(lit(1)).as("deg"))
+    val init: DataFrame = vertices.ids.join(degree, Seq("id"), "left_outer").select(
+      $"id", lit(resetProb).as("rank"), lit(resetProb).as("delta"),
+      (lit(1.0) / $"deg").as("inv"), lit(true).as("_chg"))
 
     def step(state: DataFrame): DataFrame = {
-      val frontier = state.filter($"_chg" && $"delta" > tol).select($"id", $"delta")
+      val frontier = state.filter($"_chg" && $"delta" > tol)
+        .select($"id", ($"delta" * $"inv").as("share"))
       val msgs = side.gather(frontier)
         .groupBy(col("dst").as("id"))
-        .agg(sum($"delta" * $"cw").as("msg"))
-      state.select($"id", $"rank", $"delta")
+        .agg(sum($"share").as("msg"))
+      state.select($"id", $"rank", $"delta", $"inv")
         .join(Superstep.shj(msgs), Seq("id"), "left_outer")
         .select(
           $"id",
@@ -85,11 +79,13 @@ object PageRank {
             .otherwise($"rank").as("rank"),
           when($"msg".isNotNull, lit(1.0 - resetProb) * $"msg")
             .otherwise($"delta").as("delta"),
+          $"inv",
           $"msg".isNotNull.as("_chg"))
     }
 
     val res = try Superstep.loop(init, Some(side), step, cfg.copy(maxIter = maxIter),
-        algo = "pagerank", Superstep.fingerprint64(side.edges))
+        algo = "pagerank", Superstep.fingerprint64(
+          side.edges.groupBy($"src", $"dst").agg(count(lit(1)).as("w"))))
       finally vertices.release()
 
     // SPARK-18847: scale ranks to sum to the vertex count (none when empty)

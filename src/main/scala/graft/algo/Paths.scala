@@ -69,8 +69,9 @@ object Paths {
     val vertices = Superstep.vertexSet(edges,
       spark.range(1).select(lit(source).as("id"))) // isolated source
     val res = try {
-      val side = Superstep.edgeSide(
-        edges.groupBy($"src", $"dst").agg(min($"weight").as("weight")), "src", cfg,
+      // parallel edges stay: min(dist + wᵢ) = dist + min(wᵢ), FP rounding
+      // being monotone
+      val side = Superstep.edgeSide(edges.select($"src", $"dst", $"weight"), "src", cfg,
         vertices.count)
       // DENSE state (one row per vertex, +∞ = unreached — the reference's
       // sentinel, `sssp_graphx_shell.scala:27`): keeps the apply join
@@ -80,12 +81,14 @@ object Paths {
       val init = vertices.ids.select($"id",
         when($"id" === source, 0.0).otherwise(Double.PositiveInfinity).as("dist"),
         ($"id" === source).as("_chg"))
-      // input identity for checkpoint manifests: adjacency ⊕ mixed source id
+      // input identity for checkpoint manifests: adjacency (least weight per
+      // pair, so no duplicate row reaches the XOR fold) ⊕ mixed source id
       // (a different source is a different run over the same table — the
       // plain id would cancel against nothing, so it goes through splitmix64)
       Superstep.loop(init, Some(side),
         Superstep.minStep(side, "dist", $"dist" + $"weight"), cfg, algo,
-        Superstep.fingerprint64(side.edges) ^ graft.functions.SplitMix64Expr.mix(source))
+        Superstep.fingerprint64(side.edges.groupBy($"src", $"dst")
+          .agg(min($"weight").as("weight"))) ^ graft.functions.SplitMix64Expr.mix(source))
     } finally vertices.release()
     // absent-row output contract: unreachable vertices are not emitted; the
     // fill counts the reached ones and observes the largest distance

@@ -6,11 +6,12 @@ import graft.model._
 
 /** Adjacency-shape builders: degrees and CSR-style packed per-source blocks.
   *
-  * The engine's working representation for supersteps is the pre-aggregated
-  * `(src, dst, w)` edge table (relational CSR: one exchange builds it, every
-  * join reuses its partitioning). [[blocks]] additionally packs each
-  * source's neighbourhood into one row — sorted neighbour array +
-  * multiplicities — mirroring the reference CSR (`lpst/src/lib.rs:27-44`,
+  * The engine's working representation for supersteps is the raw edge
+  * rows, a duplicate edge kept as the rows it is (relational CSR: one
+  * exchange places it, every join reuses its partitioning). [[blocks]]
+  * additionally packs each source's neighbourhood into one row — sorted
+  * neighbour array + multiplicities — mirroring the reference CSR
+  * (`lpst/src/lib.rs:27-44`,
   * `ow-lp/src/lib.rs:244-248`): the export format for systems that want
   * O(1) adjacency slices, and the input shape for `mapPartitions` kernels
   * when an algorithm genuinely needs imperative per-vertex loops.

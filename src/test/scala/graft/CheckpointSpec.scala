@@ -3,6 +3,7 @@ package graft
 import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, Paths, Superstep}
 import graft.gen.SyntheticGraph
 import graft.model._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.lit
 
 /** Durable checkpoint + resume: the north rule's "any iteration resumable
@@ -140,19 +141,32 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("resume refuses a checkpoint written for a different input table") {
-    val dir = java.nio.file.Files.createTempDirectory("lp-chk5").toString
     val seeds = spark.createDataset(Seq(Seed(0L, 100L), Seed(30L, 200L)))
-    val cfg = RunConfig(checkpointDir = Some(dir), checkpointEvery = 1)
-    val edgesA = spark.createDataset(
-      SyntheticGraph.randomEdgesLocal(80, 3, seed = 5L).map { case (s, d) => Edge(s, d) })
-    LabelPropagation.run(edgesA, seeds, cfg)
+    val pairsA = SyntheticGraph.randomEdgesLocal(80, 3, seed = 5L)
+    val edgesA = spark.createDataset(pairsA.map { case (s, d) => Edge(s, d) })
     // same node universe, different topology → different input fingerprint
     val edgesB = spark.createDataset(
       SyntheticGraph.randomEdgesLocal(80, 3, seed = 6L).map { case (s, d) => Edge(s, d) })
-    val ex = intercept[IllegalStateException] {
-      LabelPropagation.run(edgesB, seeds, cfg)
+    // two copies of one new edge: identical rows cancel in an XOR fold of
+    // the raw rows, so only a regrouped fingerprint tells this table from A
+    val extra = (0L until 80L).flatMap(s => (0L until 80L).map(d => (s, d)))
+      .find { case (s, d) => s != d && !pairsA.contains((s, d)) && !pairsA.contains((d, s)) }.get
+    val edgesDup = edgesA.union(spark.createDataset(Seq.fill(2)(Edge(extra._1, extra._2))))
+    Seq[(String, Dataset[Edge] => RunConfig => Unit)](
+      "lp" -> (e => cfg => LabelPropagation.run(e, seeds, cfg)),
+      "pr" -> (e => cfg => PageRank.run(e, cfg = cfg)),
+      "cc" -> (e => cfg => ConnectedComponents.run(e, cfg)),
+      "bfs" -> (e => cfg => Paths.bfs(e, 0L, cfg = cfg))
+    ).foreach { case (algo, run) =>
+      val dir = java.nio.file.Files.createTempDirectory(s"$algo-chk5").toString
+      val cfg = RunConfig(checkpointDir = Some(dir), checkpointEvery = 1)
+      run(edgesA)(cfg)
+      for ((name, other) <- Seq("another topology" -> edgesB, "a duplicated new edge" -> edgesDup))
+        withClue(s"$algo, $name: ") {
+          val ex = intercept[IllegalStateException](run(other)(cfg))
+          ex.getMessage should include("fingerprint")
+        }
     }
-    ex.getMessage should include("fingerprint")
   }
 
   test("ratio-converged run durably checkpoints its final state; resume is a no-op") {

@@ -122,10 +122,9 @@ class LabelPropagationSpec extends SparkSpec {
     val (d, o) = runBoth(3, edges, Map(0L -> 200L, 1L -> 100L))
     d shouldBe o
     d(2L) shouldBe 200L
-    // every 4th ring edge tripled: Σw = 1.5 × rows, far outside the 1%
-    // near-unit gate, so the vote carries w; the extra copies reorder
-    // majorities that the plain ring would tie (converged or capped at
-    // maxIter, the oracle runs the same supersteps)
+    // every 4th ring edge tripled (1.5 rows per distinct pair): the extra
+    // copies reorder majorities that the plain ring would tie (converged
+    // or capped at maxIter, the oracle runs the same supersteps)
     val ring = (0L until 400L).flatMap(i =>
       Seq(1L, 2L, 5L).map(o => (i, (i + o) % 400)))
     val heavy = ring ++ ring.zipWithIndex.collect { case (e, i) if i % 4 == 0 => Seq(e, e) }.flatten
@@ -252,13 +251,11 @@ class LabelPropagationSpec extends SparkSpec {
   }
 
   test("near-unit expansion: narrow vote == weighted vote, dups still weighted") {
-    // ring edges are distinct by construction → the narrow (w-less) vote
-    // path engages; appending one duplicated edge (multiplicity 2, 0.07%
-    // of rows — inside the 1% near-unit gate) must still weight that vote
-    // twice via the setup-time row expansion. Tripling every edge (Σw =
-    // 3 × rows) takes the weighted vote and scales every vote uniformly, so
-    // each majority and tie is unchanged. The salted gather takes the
-    // narrow vote on the same multigraph.
+    // ring edges are distinct by construction; appending one duplicated
+    // edge (multiplicity 2, 0.07% of rows) must still weight that vote
+    // twice. Tripling every edge scales every vote uniformly, so each
+    // majority and tie is unchanged. The salted gather votes on the same
+    // multigraph.
     val ring = (0L until 500L).flatMap(i =>
       Seq(1L, 2L, 3L).map(o => (i, (i + o) % 500)))
     val withDup = ring ++ Seq((7L, 9L))
@@ -278,15 +275,14 @@ class LabelPropagationSpec extends SparkSpec {
     val seeds = spark.createDataset(seedMap.toSeq.map { case (k, v) => Seed(k, v) })
     val cfg = model.RunConfig(
       checkpointDir = Some(dir), checkpointEvery = 1, maxIter = 2)
-    // write checkpoints under the narrow (expanded-row) representation,
-    // stop unconverged
+    // write checkpoints under the unsalted edge side, stop unconverged
     val first = LabelPropagation.run(edges, seeds, cfg)
     first.converged shouldBe false
     first.release()
     // resume under the salted edge side: the manifest fingerprint is
-    // computed over the re-grouped logical (src,dst,w) multigraph without
-    // the salt column, so both physical layouts must accept each other's
-    // checkpoints
+    // computed over the regrouped (src, dst, multiplicity) multigraph
+    // without the salt column, so both physical layouts must accept each
+    // other's checkpoints
     val resumed = LabelPropagation.run(edges, seeds,
       saltCfg.copy(checkpointDir = Some(dir), checkpointEvery = 1))
     resumed.converged shouldBe true
@@ -346,10 +342,9 @@ class LabelPropagationSpec extends SparkSpec {
   }
 
   test("packed exchange under forced salting (weighted vote row)") {
-    // every edge doubled (Σw = 2 × rows) takes the weighted vote and
-    // scales every vote uniformly; salted, the packed exchange ships
-    // (pk, w) for ids < 2^32 and the (src, label, w) pair row above; both
-    // agree with the unsalted run of the single edges
+    // every edge doubled scales every vote uniformly; salted, the packed
+    // exchange ships pk for ids < 2^32 and the (src, label) pair row
+    // above; both agree with the unsalted run of the single edges
     val (edges, seeds) = tieHeavy
     val plain = lpShifted(edges, seeds)
     plain._1 shouldBe lpOracle(160, edges, seeds)

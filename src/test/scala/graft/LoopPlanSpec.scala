@@ -13,7 +13,8 @@ import graft.model._
   * in each superstep job's `SparkListenerSQLExecutionStart` (the loop names
   * the job `"<algo> superstep N"`): no sort-merge join, no sort-based
   * aggregation and no broadcast inside a loop, and one steady plan from
-  * superstep 1 on; star CC's rounds keep their exchange reuse. The walk
+  * superstep 1 on; LP's one vote exchange ships the packed key while ids
+  * fit u32; star CC's rounds keep their exchange reuse. The walk
   * stops at an `InMemoryTableScan`: the cached plan below it (the persisted
   * edge side) ran once, before the loop, under the caller's session.
   */
@@ -98,6 +99,40 @@ class LoopPlanSpec extends SparkSpec {
         val first = nameTree(plans.head.sparkPlanInfo)
         plans.tail.foreach(p => withClue(s"${p.description}:\n${p.physicalPlanDescription}\n") {
           nameTree(p.sparkPlanInfo) shouldBe first
+        })
+      }
+      release()
+    }
+  }
+
+  /** The `simpleString` of every `Exchange` in a plan. */
+  private def exchanges(p: SparkPlanInfo): Seq[String] =
+    (if (p.nodeName == "Exchange") Seq(p.simpleString) else Nil) ++
+      children(p).flatMap(exchanges)
+
+  test("LP's one superstep exchange ships pk = (src<<32)|label exactly while ids fit u32") {
+    // LP's setup scan reads the src bounds that gate the packed row: a
+    // wrong bound would either widen every vote row to the (src, label)
+    // pair or pack ids that do not fit
+    val shift = 1L << 32
+    val shifted = e.select(($"src" + shift).as("src"), ($"dst" + shift).as("dst")).as[Edge]
+    for ((name, edges, off) <- Seq(("e", e, 0L), ("e + 2^32", shifted, shift));
+         seeded <- Seq(true, false)) {
+      val seeds =
+        if (seeded) spark.createDataset(Seq(Seed(1L + off, 10L), Seed(150L + off, 20L)))
+        else spark.emptyDataset[Seed]
+      val (stats, release, plans) = superstepPlans {
+        val r = LabelPropagation.run(edges, seeds); (r.stats, r.release)
+      }
+      withClue(s"$name, ${if (seeded) "seeded" else "unsupervised"}: ") {
+        stats should not be empty
+        plans.map(_.description) shouldBe stats.map(st => s"lp superstep ${st.iteration}")
+        plans.foreach(p => withClue(s"${p.description}:\n${p.physicalPlanDescription}\n") {
+          val ex = exchanges(p.sparkPlanInfo)
+          if (off == 0L) {
+            ex should have size 1
+            ex.head should include("hashpartitioning(shiftrightunsigned(pk")
+          } else ex.filter(_.contains("shiftrightunsigned(pk")) shouldBe empty
         })
       }
       release()

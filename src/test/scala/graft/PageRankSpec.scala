@@ -65,6 +65,21 @@ class PageRankSpec extends SparkSpec {
     assertAllClose(engineRanks(edges, 1e-6), graphxRanks(edges, 1e-6))
   }
 
+  test("repeated runs give bit-identical ranks") {
+    // every superstep sums its messages in the edge side's row order, so
+    // nothing decided at run time (a join's build side) may reorder it
+    val ds = spark.createDataset(SyntheticGraph.randomEdgesLocal(2000, 5, seed = 11L)
+      .map { case (s, d) => Edge(s, d) })
+    def bits(): Map[Long, Long] = {
+      val res = PageRank.run(ds)
+      try res.ranks.collect().map(r => r.id -> java.lang.Double.doubleToRawLongBits(r.rank)).toMap
+      finally res.release()
+    }
+    val first = bits()
+    first should have size 2000
+    (2 to 8).foreach(run => withClue(s"run $run: ") { bits() shouldBe first })
+  }
+
   test("reports num_vertices / max_rank / sum_rank like the reference sink") {
     val edges = Seq[(Long, Long)]((0, 1), (1, 2), (2, 0))
     val ds = spark.createDataset(edges.map { case (s, d) => Edge(s, d) })
