@@ -58,6 +58,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSqlShim.CodegenCacheEntries.toString)
       // iterative loops retire one persisted/localCheckpointed state per
       // superstep; their blocks are reclaimed by ContextCleaner only after
       // a JVM GC, which a large mostly-idle heap may not run for minutes —

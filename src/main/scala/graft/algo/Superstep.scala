@@ -1,6 +1,7 @@
 package graft.algo
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -39,9 +40,13 @@ import scala.util.Using
   *    hash-partitioning match between the persisted edge side and the
   *    evolving state side; shuffled-hash over sort-merge — per-superstep
   *    re-sorts are pure waste against a hash-partitioned cached state) are
-  *    scoped to a cloned child session, NOT mutated on the caller's session,
-  *    so concurrent loops / relational queries never race on global conf
-  *    ([[loop]], the one loop entry, shared with star CC's rounds);
+  *    scoped to a child session, NOT mutated on the caller's session, so
+  *    concurrent loops / relational queries never race on global conf
+  *    ([[loop]], the one loop entry, shared with star CC's rounds). The
+  *    child is one per caller session and conf set, reused by every later
+  *    loop with the same confs ([[GraftSqlShim.sessionWithConfs]]), so a
+  *    loop's generated classes compile once per JVM and its first
+  *    superstep runs warm code;
   *  - the edge side is partitioned, sized, salted and persisted ONCE per
   *    run ([[edgeSide]]), every algorithm's gather is its one join
   *    ([[EdgeSide.gather]]), and [[loop]] releases it when the loop ends.
@@ -132,17 +137,30 @@ object Superstep {
     * SparkContext-global, so the scope keeps two concurrent loops in one
     * session from cross-polluting each other's phase windows, and untagged
     * jobs (a loop's init and durable-checkpoint jobs) never enter them.
-    * Stage events for the tagged job are flushed by an explicit
-    * listener-bus barrier (waitListenerBus) before the drain, so the drain
-    * is race-free for the job it attributes.
+    * Spark posts a job's `SparkListenerJobEnd` after its stages'
+    * completions, into the same queue, so once [[awaitJobEnds]] has seen
+    * the tagged job end, its stages are in the buffer and the drain is
+    * race-free for the job it attributes.
     */
   private[graft] final class PhaseListener(loopId: String) extends SparkListener {
     private val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, PhaseWindow)]
     // stage ids owned by this loop's tagged jobs
     private val owned = scala.collection.mutable.HashSet.empty[Int]
+    // tagged jobs started and not yet ended, and the count of ended ones
+    private val running = scala.collection.mutable.HashSet.empty[Int]
+    private var ended = 0L
     override def onJobStart(ev: SparkListenerJobStart): Unit =
       if (Option(ev.properties).exists(p => p.getProperty(LoopIdProperty) == loopId))
-        owned.synchronized { ev.stageInfos.foreach(owned += _.stageId) }
+        owned.synchronized {
+          running += ev.jobId
+          ev.stageInfos.foreach(owned += _.stageId)
+        }
+    override def onJobEnd(ev: SparkListenerJobEnd): Unit = owned.synchronized {
+      if (running.remove(ev.jobId)) {
+        ended += 1
+        owned.notifyAll()
+      }
+    }
     override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
       val si = ev.stageInfo
       if (!owned.synchronized(owned.contains(si.stageId)))
@@ -167,6 +185,20 @@ object Superstep {
         if (raw.size == 2) List("gather", "apply")
         else raw.indices.map(i => s"stage$i").toList
       raw.zip(names).map { case ((_, w), n) => w.copy(phase = n) }
+    }
+
+    /** Wait until `jobs` tagged jobs have ended (their stages are then
+      * delivered), for at most 10 s: a bus that stays busy that long
+      * (another loop posting continuously) must not stall the loop, whose
+      * drain then races as it would without the wait.
+      */
+    def awaitJobEnds(jobs: Long): Unit = owned.synchronized {
+      val deadline = System.nanoTime() + 10000000000L
+      var left = deadline - System.nanoTime()
+      while (ended < jobs && left > 0) {
+        owned.wait(math.max(1L, left / 1000000L))
+        left = deadline - System.nanoTime()
+      }
     }
   }
 
@@ -287,6 +319,8 @@ object Superstep {
     * aggregates (merged in task-completion order: a double sum is not
     * bit-reproducible). The scan plans with AQE off, which would fill the
     * cache in a job of its own first; the cache's plan keeps the caller's.
+    * The AQE-off session is the caller's one reused child
+    * ([[GraftSqlShim.sessionWithConfs]]), the same for every fill.
     */
   def fill[T](ds: Dataset[T], summary: Column*): Filled[T] = {
     val cached = ds.persist(StorageLevel.MEMORY_AND_DISK)
@@ -345,7 +379,14 @@ object Superstep {
     * Only the superstep jobs carry the loop's [[LoopIdProperty]] and a
     * `"<algo> superstep N"` job description, so they alone feed the phase
     * windows; Spark posts each one's physical plan in its
-    * `SparkListenerSQLExecutionStart` event under that description.
+    * `SparkListenerSQLExecutionStart` event under that description. Each
+    * superstep waits for its job's `SparkListenerJobEnd` before draining
+    * its windows ([[PhaseListener.awaitJobEnds]]), not for the whole bus.
+    *
+    * Every round plans under the loop session, the caller's reused child
+    * with AQE, sort-merge preference and broadcasts off and the side's
+    * width ([[GraftSqlShim.sessionWithConfs]]): two loops with equal confs,
+    * concurrent or not, share it, and neither sets a conf on it.
     */
   def loop(
       init: => DataFrame,
@@ -430,7 +471,8 @@ object Superstep {
         state = view
         releaseBacking = newRelease
         val byChanged = next.columns.contains("_chg")
-        GraftSqlShim.waitListenerBus(session)
+        // each superstep is one tagged job: wait for this one's JobEnd
+        listener.awaitJobEnds(iter + 1 - startIter)
         val phases = listener.drain()
         val computeMs = (System.nanoTime() - t0) / 1000000L
         iter += 1

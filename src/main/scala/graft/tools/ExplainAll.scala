@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import graft.SparkEntry
 
 /** Dumps `explain("formatted")` for selected SparkEntry queries — used to
@@ -18,6 +18,7 @@ object ExplainAll {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSqlShim.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

@@ -7,9 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   *
   *  - registering custom Catalyst expressions as Columns
   *    (`classic.ExpressionUtils` is `private[sql]` in Spark 4.x)
-  *  - cloning a session so an iterative driver loop can pin SQL confs
-  *    (AQE, join-strategy preference) without mutating — and racing on —
-  *    the user's shared session conf
+  *  - a child session per parent and conf set ([[sessionWithConfs]]), so
+  *    an iterative driver loop or a cache fill can pin SQL confs (AQE,
+  *    join-strategy preference) without mutating — and racing on — the
+  *    user's shared session conf; the child is created once and reused, so
+  *    the classes its plans generate compile once per JVM
+  *    ([[CodegenCacheEntries]])
   *  - [[runJob]], the one path for one-shot jobs: `Superstep.fill` (every
   *    result and setup cache), fingerprints, the edge gates, and
   *  - materializing loop state, its local checkpoint and its observed
@@ -22,14 +25,63 @@ object GraftSqlShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Entries of the JVM's generated-code cache, the static
+    * `spark.sql.codegen.cache.maxEntries` that every session builder of the
+    * engine sets when it creates its session. Spark's default of 100 is a
+    * Guava LRU of 4 segments of 25 entries; a `graph_loops` pass (LP, CC,
+    * TC, a 10-superstep PageRank and the front end over the same session)
+    * generates about 100 distinct classes, hashed unevenly over the
+    * segments, so each pass would evict classes the next pass needs again,
+    * recompile them and run them cold. 1000 keeps a pipeline's classes
+    * with room for the uneven 4-way split. The conf is static: a caller who
+    * brings their own session sets it when the session is created (a
+    * running session cannot change it; the first compilation in the JVM
+    * fixes it).
+    */
+  val CodegenCacheEntries: Int = 1000
+
+  // parent → (effective conf → child), for sessionWithConfs
+  private val children = new java.util.WeakHashMap[SparkSession,
+    java.util.HashMap[Map[String, String], java.lang.ref.SoftReference[SparkSession]]]()
+
   /** A child session sharing the SparkContext, cache and catalog of
     * `parent` but with an isolated SQL conf overridden by `confs` —
     * runtime conf changes here are invisible to `parent`.
+    *
+    * The child is created once per parent and EFFECTIVE conf (the parent's
+    * SQL conf with `confs` applied) and returned on every later call with
+    * the same parent and effective conf, so a loop or a fill of each pass
+    * plans under one session, with one artifact classloader on the driver
+    * and one isolated session state on the executors. Spark keys its
+    * generated-code cache by the thread's context classloader, so a fresh
+    * clone per call would compile every class again and run it cold. A change
+    * to the parent's conf changes the key, and the next call creates a
+    * child that sees it, as a fresh clone would.
+    *
+    * The child is read-only: nothing may set a conf on it after this
+    * returns, since concurrent callers with equal confs share it. It sees
+    * the parent's temporary views and functions as of its creation (the
+    * engine binds analyzed plans into it, which resolve nothing).
+    *
+    * The memo holds each parent weakly and each child softly. A child
+    * keeps its parent's session state reachable, so a strongly held child
+    * would pin every parent for the life of the JVM; a softly held one
+    * lets the collector clear the child, and with it the dead parent,
+    * under memory pressure, after which the next call clones again.
     */
   def sessionWithConfs(parent: SparkSession, confs: (String, String)*): SparkSession = {
-    val s = parent.asInstanceOf[classic.SparkSession].cloneSession()
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    s
+    val p = parent.asInstanceOf[classic.SparkSession]
+    val effective = p.sessionState.conf.getAllConfs ++ confs
+    children.synchronized {
+      val byConf = children.computeIfAbsent(parent, _ => new java.util.HashMap())
+      Option(byConf.get(effective)).flatMap(c => Option(c.get)).getOrElse {
+        byConf.values.removeIf(_.get == null)
+        val s = p.cloneSession()
+        confs.foreach { case (k, v) => s.conf.set(k, v) }
+        byConf.put(effective, new java.lang.ref.SoftReference(s))
+        s
+      }
+    }
   }
 
   /** Re-bind a DataFrame's plan to `session` so physical planning and
@@ -98,10 +150,10 @@ object GraftSqlShim {
     (execution.CollectMetricsExec.collect(qe.executedPlan), partitionRows)
   }
 
-  /** Block until the listener bus has delivered all posted events. Loop
-    * phase attribution drains the listener right after the superstep job;
-    * delivery is async, so without this barrier a slow bus could leave the
-    * job's last stage out of its window.
+  /** Block until the listener bus has delivered all posted events, for a
+    * listener drained right after the jobs it counts (delivery is async).
+    * The bus is polled in 10 ms steps; a loop's superstep waits for its
+    * own job's end instead (`Superstep.PhaseListener.awaitJobEnds`).
     */
   def waitListenerBus(session: SparkSession): Unit =
     // best-effort: a bus that stays busy for 10s (another loop posting

@@ -4,6 +4,7 @@ import graft.algo.{ConnectedComponents, LabelPropagation, PageRank, Paths, Super
 import graft.gen.SyntheticGraph
 import graft.model._
 import org.apache.spark.ExceptionFailure
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Dataset, GraftSqlShim, classic}
 import org.apache.spark.sql.functions._
@@ -142,6 +143,29 @@ class AlgoSetupSpec extends SparkSpec {
         .mkString("jobs per run:\n", "\n\n", "\n")) {
       got.map { case (algo, jobs) => algo -> jobs.size } shouldBe Seq("lp" -> 10,
         "lp unsupervised" -> 9, "pr" -> 9, "cc" -> 7, "bfs" -> 7, "star cc" -> 7, "tc" -> 14)
+    }
+  }
+
+  test("a second identical run of LP, PR and CC compiles a pinned number of classes") {
+    val edges = edgeDs(SyntheticGraph.randomEdgesLocal(2000, 5, seed = 11L))
+    val seeds = spark.createDataset(SyntheticGraph.seedsLocal(2000).toSeq
+      .map { case (n, l) => Seed(n, l) })
+    def compilations(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Seq(LabelPropagation.run(edges, seeds).release, PageRank.run(edges).release,
+        ConnectedComponents.run(edges).release).foreach(_())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compilations()
+    // the same plans again: each loop and fill plans under the child session
+    // of the first run, whose classes the codegen cache still holds. What
+    // still compiles (7 classes) runs in the tasks of AQE map stages under
+    // the caller's session: the edge sides' hash-partitioning projections
+    // and a partial aggregation over the local edge rows. A fresh child per
+    // loop and fill compiles 119.
+    val second = compilations()
+    withClue(s"classes compiled: first run $first, second run $second: ") {
+      second should be <= 7L
     }
   }
 

@@ -5,6 +5,8 @@ import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
 import graft.algo.{PageRank, Superstep}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftSqlShim
 import graft.gen.SyntheticGraph
 import graft.model._
 
@@ -14,7 +16,8 @@ import graft.model._
   * loop's listener would also collect the other loop's stages and every
   * drained window would be mis-attributed (phase medians, shuffle-byte
   * receipts). The scoping rides a thread-local SparkContext property set
-  * by the submitting loop's driver thread.
+  * by the submitting loop's driver thread. Both loops share one child
+  * session, the reused child of `GraftSqlShim.sessionWithConfs`.
   */
 class ConcurrentLoopsSpec extends SparkSpec {
   import spark.implicits._
@@ -33,9 +36,26 @@ class ConcurrentLoopsSpec extends SparkSpec {
       soloB.ranks.toDF().select($"id", org.apache.spark.sql.functions.round($"rank", 9).as("r")))
     soloA.release(); soloB.release()
 
+    // the session id in the tags Spark puts on each superstep job
+    // ("spark-session-<uuid>", plus "...-execution-root-id-<n>" per query):
+    // both loops plan under one reused child session, not a clone each
+    val sessionIds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tagListener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        Option(ev.properties).filter(_.getProperty(Superstep.LoopIdProperty) != null)
+          .foreach(p => Option(p.getProperty("spark.job.tags")).toSeq
+            .flatMap(_.split(",")).filter(_.startsWith("spark-session-"))
+            .foreach(t => sessionIds.add(t.stripPrefix("spark-session-").take(36))))
+    }
+    spark.sparkContext.addSparkListener(tagListener)
     val fA = Future(PageRank.run(edges(7L), maxIter = 12))
     val fB = Future(PageRank.run(edges(8L), maxIter = 12))
-    val (a, b) = (Await.result(fA, 5.minutes), Await.result(fB, 5.minutes))
+    val (a, b) = try (Await.result(fA, 5.minutes), Await.result(fB, 5.minutes))
+      finally {
+        GraftSqlShim.waitListenerBus(spark)
+        spark.sparkContext.removeSparkListener(tagListener)
+      }
+    sessionIds.toArray.toSet should have size 1
 
     // same results as solo (concurrency must not change the computation)
     Superstep.fingerprint64(

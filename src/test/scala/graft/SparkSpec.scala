@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlShim, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -15,6 +15,7 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "localhost")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSqlShim.CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
